@@ -36,8 +36,8 @@ object Bench {
     * URL synth-concat 0.8 s + all six native one-pass parses ~2 s;
     * the remaining ~14 s is the uniqExact two-phase exact-distinct
     * whose first-phase groups ≈ row cardinality — inherent to the
-    * aggregate's semantics, not URL-operator cost; tools/
-    * UrlProfile.scala reproduces the split). */
+    * aggregate's semantics, not URL-operator cost; `EXPLAIN` on the
+    * query shows the plan behind the split). */
   private val scaleSubset = Seq(
     "dedup_jaccard", "dedup_clusters", "dedup_incremental",
     "pipeline_clean", "ann_ivf", "ann_pq", "q_ch_bits", "q_ch_ip",

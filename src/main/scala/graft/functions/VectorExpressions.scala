@@ -717,7 +717,11 @@ object PqEncode {
       var c = 0
       while (c < cells.length) {
         val d = l2sqSub(v, j * subLen, subLen, cvs(c))
-        if (first || d < bestD) { best = cells(c); bestD = d; first = false }
+        // a NaN distance ranks above every number, as in Spark's
+        // struct ordering: any finite distance displaces a NaN best
+        if (first || d < bestD || (bestD.isNaN && !d.isNaN)) {
+          best = cells(c); bestD = d; first = false
+        }
         c += 1
       }
       out(j) = best

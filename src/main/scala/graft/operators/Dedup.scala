@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 
@@ -75,9 +75,12 @@ object Dedup {
     * long→string casts plus six md5-to-hex calls PER DOC whose only
     * job was to identify the pair, and the bucket shuffle carried a
     * 32-char string key. The raw pair is exact (two buckets are equal
-    * iff the pair is — md5 could only MERGE buckets on a collision),
-    * 16 bytes, and free to derive. The oracle keeps its md5-key
-    * construction and the candidate-pair results stay identical. */
+    * iff the pair is), 16 bytes, and free to derive. The oracle keeps
+    * its md5(concat(str(a), str(b))) key, which can MERGE buckets the
+    * pair keeps apart: the concatenation aliases ((1, 23) and (12, 3)
+    * both read "123"), as does an md5 collision. Candidate pairs match
+    * the oracle except in those rare cases, where the oracle may hold
+    * extra pairs. */
   private def bandKeys(sigDf: DataFrame): DataFrame = {
     val bandStructs = (0 until Bands).map { j =>
       struct(lit(j).as("band"),
@@ -149,7 +152,7 @@ object Dedup {
     // merged index or one boilerplate bucket makes every future
     // lookup quadratic. The size aggregate runs over the compact band
     // table (6 rows/doc), never raw text.
-    val idx = spark.read.parquet(s"$indexDir/bands")
+    val idx = readBands(spark, indexDir)
     val okBuckets = idx.groupBy("band", "ka", "kb")
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") <= maxBucket)
@@ -173,6 +176,21 @@ object Dedup {
           lit(NumHashes), 6).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
       .orderBy("new_doc", "corpus_doc")
+  }
+
+  /** The persisted band table. The older layout keyed bands by an md5
+    * `bkey` string instead of the raw (ka, kb) pair; reading it
+    * would die later on an unresolved column, so refuse it here and
+    * name the fix. The schema itself is the layout marker. */
+  private def readBands(spark: SparkSession, indexDir: String): DataFrame = {
+    val bands = spark.read.parquet(s"$indexDir/bands")
+    val have = bands.columns.map(_.toLowerCase).toSet
+    if (!have("ka") || !have("kb"))
+      throw new IllegalArgumentException(
+        s"near-dup index at $indexDir uses an old band layout " +
+          s"(columns: ${bands.columns.mkString(", ")}; need ka, kb) — " +
+          "rebuild it with Dedup.saveNearDupIndex")
+    bands
   }
 
   private def signaturesFull(docs: DataFrame): DataFrame = {

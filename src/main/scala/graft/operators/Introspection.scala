@@ -161,7 +161,6 @@ object Introspection {
     * nature, not replayable). */
   val sysOps: Q = (s, dir) => {
     TableEnv.register(s, dir)
-    graft.sql.QueryLog.refresh(s)
     graft.sql.QueryGuard.plan(s,
       """SELECT (SELECT concat(cluster, '/', shard_num, '/', replica_num,
         |      '/', is_local) FROM system.clusters) AS topo,

@@ -1,9 +1,9 @@
 package graft.sql
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import AsOfText.{idPart, splitAnd, stripTicks}
 
 /** Pasted `ANY [LEFT|INNER] JOIN` (and `LEFT|INNER ANY JOIN`) — CH's
   * at-most-one-right-row-per-key multiplicity. Without this shim the
@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * keys — a wrong answer, not an error).
   *
   * Text half ([[extract]]): cut the ANY token and swap the right-side
-  * item for a placeholder. Plan half ([[plan]]): build the right side,
-  * keep ONE row per join key (deterministically the lexicographically
-  * smallest right row, where CH picks an arbitrary one), register it
-  * as a temp view and plan the rewritten statement — the join itself
+  * item for a placeholder. Plan half ([[materialize]]): build the
+  * right side, keep ONE row per join key (deterministically the
+  * lexicographically smallest right row, where CH picks an arbitrary
+  * one), bind it as a statement fragment in the placeholder's place
+  * and plan the rewritten statement — the join itself
   * stays in the statement, so any select list, WHERE, or GROUP BY
   * composes unchanged. The dedup is a mergeable `min(struct(*))`
   * partial aggregate, NOT a per-key window: partial aggregation
@@ -37,7 +38,7 @@ import org.apache.spark.sql.functions._
   *
   * LEFT/INNER ANY dedupe the right side; RIGHT ANY (either token
   * order) keeps every right row and dedupes the LEFT side, exactly as
-  * ClickHouse does — the FROM item is swapped for the deduped view
+  * ClickHouse does — the FROM item is swapped for the deduped fragment
   * and the RIGHT JOIN itself plans natively. FULL ANY is rejected
   * (ClickHouse rejects it too).
   *
@@ -57,7 +58,6 @@ object AnyJoinText {
       usingCols: Seq[String] = Nil, dedupesLeft: Boolean = false)
 
   val Marker = "__graft_any_input"
-  private val counter = new AtomicLong()
 
   /** Is token `i` the ANY of an `ANY [kind] JOIN` / `kind ANY JOIN`?
     * (Any depth — callers filter; [[QueryGuard]] uses this to hoist
@@ -177,7 +177,7 @@ object AnyJoinText {
             sql.substring(ts(fromAt)._1.end, leftEnd).trim)
           // an earlier sibling ASOF/ANY join was already materialized
           // by [[QueryGuard.plan]]'s loop, so the FROM item here is a
-          // real (temp-view) table name and the dedup can pre-plan it
+          // plain (fragment) name and the dedup can pre-plan it
           var out = sql.substring(0, ts(i)._1.start) +
             sql.substring(ts(i)._1.end)
           out = out.substring(0, ts(fromAt)._1.end) +
@@ -195,20 +195,17 @@ object AnyJoinText {
     }
   }
 
-  /** Dedupe the keyed side and register it as a temp view: returns
-    * the statement with [[Marker]] replaced by the view name, and the
-    * view name (the caller — [[QueryGuard.plan]]'s loop — owns
-    * dropping it). Column references resolve case-insensitively, as
-    * Spark's own analyzer does; the dedup keys keep the schema's
-    * canonical casing. */
-  def materialize(spark: SparkSession, spec: AnySpec,
-      rewritten: String): (String, String) = {
+  /** Dedupe the keyed side as a fragment of statement `b` ([[Binding]]):
+    * returns the statement with [[Marker]] replaced by the fragment's
+    * name. Column references resolve case-insensitively, as Spark's
+    * own analyzer does; the dedup keys keep the schema's canonical
+    * casing. */
+  private[sql] def materialize(b: Binding, spec: AnySpec,
+      rewritten: String): String = {
     val sideName = if (spec.dedupesLeft) "deduped left" else "right"
     val sideDf: DataFrame =
-      if (spec.side.isSubquery) {
-        QueryGuard.parseReadOnly(spark, spec.side.text)
-        spark.sql(spec.side.text)
-      } else spark.table(spec.side.text)
+      if (spec.side.isSubquery) b.sql(spec.side.text)
+      else b.table(spec.side.text)
     // case-insensitive name → the schema's canonical casing
     def resolve(c: String): Option[String] =
       sideDf.columns.find(_.equalsIgnoreCase(c))
@@ -257,22 +254,12 @@ object AnyJoinText {
       .agg(min(struct(sideDf.columns.toIndexedSeq.map(col): _*))
         .as("__graft_any_row"))
       .select(col("__graft_any_row.*"))
-    val view = s"__graft_any_${counter.incrementAndGet()}"
-    deduped.createOrReplaceTempView(view)
-    (rewritten.replace(Marker, view), view)
+    rewritten.replace(Marker, b.add("any", deduped))
   }
 
-  // an identifier part: bare, or backtick-quoted (CH also writes
-  // backticks; a quoted part may hold any character but a backtick)
-  private val idPart = "(?:`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
   private val eqRe =
     (s"^($idPart(?:\\.$idPart)*)\\s*=\\s*" +
       s"($idPart(?:\\.$idPart)*)$$").r
-
-  private def stripTicks(s: String): String =
-    if (s.startsWith("`") && s.endsWith("`") && s.length >= 2)
-      s.substring(1, s.length - 1)
-    else s
 
   /** Split `qualifier.column` at the first dot OUTSIDE backticks;
     * both parts unquoted. */
@@ -297,13 +284,13 @@ object AnyJoinText {
   /** Peel balanced wrapping parens: `((a = b))` → `a = b`. */
   @annotation.tailrec
   private def stripOuterParens(s: String): String =
-    if (s.startsWith("(") && matchParen(s) == s.length - 1)
+    if (s.startsWith("(") && QueryGuard.matchParenAt(s, 0) == s.length - 1)
       stripOuterParens(s.substring(1, s.length - 1).trim)
     else s
 
   private def parseSide(text: String): Side =
     if (text.startsWith("(")) {
-      val close = matchParen(text)
+      val close = QueryGuard.matchParenAt(text, 0)
       if (close < 0) throw new ReadOnlyViolation(
         "unbalanced parens in ANY JOIN side")
       val alias = text.substring(close + 1).trim match {
@@ -328,22 +315,4 @@ object AnyJoinText {
       }
     }
 
-  private def matchParen(s: String): Int =
-    QueryGuard.matchParenAt(s, 0)
-
-  private def splitAnd(cond: String): Seq[String] = {
-    val ts = QueryGuard.normalizeScan(cond)
-    val cuts = ts.filter(t => t._2 == 0 && t._1.upper == "AND").map(_._1)
-    if (cuts.isEmpty) Seq(cond)
-    else {
-      var prevEnd = 0
-      val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-      cuts.foreach { c =>
-        parts += cond.substring(prevEnd, c.start)
-        prevEnd = c.end
-      }
-      parts += cond.substring(prevEnd)
-      parts.map(_.trim).filter(_.nonEmpty).toSeq
-    }
-  }
 }

@@ -1,8 +1,6 @@
 package graft.sql
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pasted `ASOF [LEFT] JOIN` support (reference accepts any CH SELECT,
@@ -11,10 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * Like [[WithFill]]/[[StarPost]], the clause splits into a text half
   * ([[extract]]: cut `FROM <l> ASOF [LEFT] JOIN <r> ON <conds>` down
-  * to a placeholder and parse the spec) and a plan half (the caller
-  * builds the AsOf join, registers it as a temp view, and plans the
-  * rewritten statement against it). Join sides may be table names or
-  * parenthesized subqueries with an alias. The ON clause carries one
+  * to a placeholder and parse the spec) and a plan half
+  * ([[materialize]]: build the AsOf join as a statement fragment, see
+  * [[Binding]], and splice its name into the rewritten statement).
+  * Join sides may be table names or parenthesized subqueries with an
+  * alias. The ON clause carries one
   * or more equalities (several compose into one synthetic struct key)
   * and exactly one time inequality, all alias-qualified; the
   * inequality's direction and strictness select
@@ -34,8 +33,8 @@ import org.apache.spark.sql.functions._
   * way the pasted query expects.
   *
   * Several sibling ASOF/ANY joins in one flat FROM compose:
-  * [[QueryGuard.plan]] materializes the LEFTMOST join into a temp
-  * view and rescans, so each later sibling sees an ordinary table
+  * [[QueryGuard.plan]] materializes the LEFTMOST join into a
+  * fragment and rescans, so each later sibling sees an ordinary table
   * name on its left. [[extract]] therefore processes only the FIRST
   * top-level hit and leaves the rest in the returned text. A PLAIN
   * join group on the left — keyword joins or a comma-FROM list
@@ -58,7 +57,6 @@ object AsOfText {
       usingCols: Seq[String] = Nil)
 
   val Marker = "__graft_asof_input"
-  private val counter = new AtomicLong()
 
   /** Is token `i` the ASOF of an `ASOF [LEFT|INNER] JOIN`? (Any
     * depth — callers filter; [[QueryGuard]] uses this to hoist
@@ -116,7 +114,7 @@ object AsOfText {
         val isUsing = ts(onAt)._1.upper == "USING"
         // join keywords terminate the condition too: a further plain
         // join after the ASOF clause stays in the statement and plans
-        // against the joined view
+        // against the joined fragment
         val stops = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
           "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT",
           "WINDOW", "QUALIFY", "JOIN", "LEFT", "RIGHT", "INNER", "FULL",
@@ -138,7 +136,7 @@ object AsOfText {
           // the default at-or-before (l.t >= r.t)
           val inner =
             if (condText.startsWith("(")) {
-              val close = matchParen(condText, 0)
+              val close = QueryGuard.matchParenAt(condText, 0)
               if (close < 0 || condText.substring(close + 1).trim.nonEmpty)
                 throw new ReadOnlyViolation(
                   s"cannot parse ASOF JOIN USING list '$condText'")
@@ -154,8 +152,8 @@ object AsOfText {
               "before the ASOF column: USING (key..., time)")
           val out0 = sql.substring(0, ts(fromAt)._1.end) + " " + Marker +
             " " + sql.substring(condEnd)
-          // left-alias refs stay view-QUALIFIED (left columns keep
-          // their names in the joined view), mirroring the ON path,
+          // left-alias refs stay marker-QUALIFIED (left columns keep
+          // their names in the joined fragment), mirroring the ON path,
           // so a chained join after the ASOF clause still resolves
           // them unambiguously; right-alias refs are rewritten in
           // [[materialize]], where the schemas decide which right
@@ -207,9 +205,10 @@ object AsOfText {
 
         var out = sql.substring(0, ts(fromAt)._1.end) + " " + Marker +
           " " + sql.substring(condEnd)
-        // left refs stay view-QUALIFIED (the marker becomes the view
-        // name), so a later join in the same statement — plain or a
-        // sibling ASOF/ANY — can still resolve them unambiguously;
+        // left refs stay QUALIFIED by the marker (it becomes the
+        // fragment name), so a later join in the same statement —
+        // plain or a sibling ASOF/ANY — can still resolve them
+        // unambiguously;
         // right refs are rewritten in [[materialize]], where the
         // schemas decide the surfaced (collision-bumped) `r_*` names
         out = rewriteQualifier(out, left.alias, Marker + ".")
@@ -218,19 +217,17 @@ object AsOfText {
     }
   }
 
-  /** Build the join and register it as a temp view: returns the
-    * statement with [[Marker]] replaced by the view name, and the
-    * view name (the caller — [[QueryGuard.plan]]'s loop — owns
-    * dropping it). Several equality keys compose into ONE synthetic
-    * struct key per side — struct ordering makes it a valid
-    * shuffle/sort key for the exec, and the helper columns are
-    * dropped before the view is published. Column references resolve
-    * case-insensitively, as Spark's own analyzer does. */
-  def materialize(spark: SparkSession, spec: AsOfSpec,
-      rewritten: String): (String, String) = {
-    val view = s"__graft_asof_${counter.incrementAndGet()}"
-    var leftDf = sideDf(spark, spec.left)
-    var rightDf = sideDf(spark, spec.right)
+  /** Build the join as a fragment of statement `b`: returns the
+    * statement with [[Marker]] replaced by the fragment's name.
+    * Several equality keys compose into ONE synthetic struct key per
+    * side — struct ordering makes it a valid shuffle/sort key for the
+    * exec, and the helper columns are dropped before the fragment is
+    * bound. Column references resolve case-insensitively, as Spark's
+    * own analyzer does. */
+  private[sql] def materialize(b: Binding, spec: AsOfSpec,
+      rewritten: String): String = {
+    var leftDf = sideDf(b, spec.left)
+    var rightDf = sideDf(b, spec.right)
     def ci(set: Iterable[String], c: String) =
       set.exists(_.equalsIgnoreCase(c))
     // case-insensitive name → the right schema's canonical casing
@@ -238,10 +235,10 @@ object AsOfText {
     def canonRight(c: String): String =
       rightCols0.find(_.equalsIgnoreCase(c)).getOrElse(c)
     // the exec surfaces right columns as `r_<name>`; when the LEFT
-    // side already carries that name (a previous sibling ASOF view's
+    // side already carries that name (a previous sibling ASOF join's
     // r_* output, or a table with its own r_* columns) the clashing
     // right column bumps to a numbered suffix BEFORE the join, so the
-    // published view never holds duplicate names
+    // fragment never holds duplicate names
     val leftLower = leftDf.columns.map(_.toLowerCase).toSet
     // a bumped candidate must be unique among the OTHER right columns
     // too (right may itself carry x and x_2), not just clear of left
@@ -302,7 +299,7 @@ object AsOfText {
             joined = joined.withColumnRenamed("r_" + rc, rc)
         }
       // qualified right-alias refs follow the final naming, and stay
-      // view-QUALIFIED (mirroring the ON path) so a chained join
+      // marker-QUALIFIED (mirroring the ON path) so a chained join
       // after the ASOF clause still resolves them unambiguously.
       // Bare-vs-r_ is decided on the BUMPED name — the same name the
       // rename loop above used — so the two can never disagree.
@@ -314,26 +311,22 @@ object AsOfText {
           else Marker + "." + rn
         })
     } else {
-      // ON path: qualified right-alias refs surface as the view's
+      // ON path: qualified right-alias refs surface as the fragment's
       // (collision-bumped) r_* names
       stmt = rewriteQualifierMapped(stmt, spec.right.alias, c =>
         Marker + ".r_" + rName(c))
     }
-    joined.createOrReplaceTempView(view)
-    (stmt.replace(Marker, view), view)
+    stmt.replace(Marker, b.add("asof", joined))
   }
 
-  private def sideDf(spark: SparkSession, s: Side): DataFrame =
-    if (s.isSubquery) {
-      QueryGuard.parseReadOnly(spark, s.text)
-      spark.sql(s.text)
-    } else spark.table(s.text)
+  private def sideDf(b: Binding, s: Side): DataFrame =
+    if (s.isSubquery) b.sql(s.text) else b.table(s.text)
 
   private val tableRe =
     "(?s)^([A-Za-z_][A-Za-z0-9_.]*)(?:\\s+(?:[Aa][Ss]\\s+)?([A-Za-z_][A-Za-z0-9_]*))?$".r
   // an identifier part: bare, or backtick-quoted (CH also writes
   // backticks; a quoted part may hold any character but a backtick)
-  private val idPart = "(?:`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
+  private[sql] val idPart = "(?:`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
   private val condRe =
     (s"^($idPart)\\.($idPart)\\s*" +
       "(>=|<=|=|>|<)\\s*" +
@@ -354,7 +347,7 @@ object AsOfText {
 
   private def parseSide(text: String): Side =
     if (text.startsWith("(")) {
-      val close = matchParen(text, 0)
+      val close = QueryGuard.matchParenAt(text, 0)
       if (close < 0) throw new ReadOnlyViolation(
         "unbalanced parens in ASOF JOIN side")
       val alias = text.substring(close + 1).trim match {
@@ -376,11 +369,8 @@ object AsOfText {
           "(use a table name or an aliased subquery)")
     }
 
-  private def matchParen(s: String, open: Int): Int =
-    QueryGuard.matchParenAt(s, open)
-
   /** Split on depth-0 AND tokens. */
-  private def splitAnd(cond: String): Seq[String] = {
+  private[sql] def splitAnd(cond: String): Seq[String] = {
     val ts = QueryGuard.normalizeScan(cond)
     val cuts = ts.filter(t => t._2 == 0 && t._1.upper == "AND").map(_._1)
     if (cuts.isEmpty) Seq(cond)

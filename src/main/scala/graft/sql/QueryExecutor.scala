@@ -278,10 +278,7 @@ final class QueryExecutor(
     * ClickHouse-surface shims (PREWHERE, trailing SETTINGS/FORMAT,
     * LIMIT BY, WITH TOTALS, WITH FILL) normalize away first, so
     * pasted CH queries run unchanged. */
-  def select(sql: String): DataFrame = {
-    QueryLog.refresh(spark)
-    QueryGuard.plan(spark, sql)
-  }
+  def select(sql: String): DataFrame = QueryGuard.plan(spark, sql)
 
   /** Formatted physical plan of a guarded SELECT — planning only, no
     * jobs run. The "why is this slow" tool an operator (or LLM client)
@@ -321,10 +318,11 @@ final class QueryExecutor(
 
   def run(sql: String, capRows: Int): QueryResult = {
     val jobTag = s"graft-query-${java.util.UUID.randomUUID()}"
-    // ops surface: the query registers as in-flight and the live
-    // system.processes/query_log/metrics views refresh BEFORE
-    // planning, so a pasted `SELECT * FROM system.processes` sees
-    // itself, as on ClickHouse (QueryLog scaladoc)
+    // ops surface: the query registers as in-flight BEFORE planning,
+    // and planning refreshes the live system.processes/query_log/
+    // metrics tables when the statement reads them, so a pasted
+    // `SELECT * FROM system.processes` sees itself, as on ClickHouse
+    // (QueryLog scaladoc)
     QueryLog.installListener(spark)
     QueryLog.begin(jobTag, sql)
     var outcome = ""

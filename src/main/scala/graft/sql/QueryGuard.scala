@@ -44,10 +44,6 @@ object QueryGuard {
     try { parseReadOnly(spark, sql); true }
     catch { case _: ReadOnlyViolation => false }
 
-  /** The full pasted-query path shared by the served `/query` surface
-    * and the dialect query pack: text shims ([[normalizeDialect]]) →
-    * read-only guard → plan, then the post-plan shims that need the
-    * result schema ([[WithFill]]'s dense-axis rewrite). */
   /** `EXPLAIN [mode] SELECT ...` — ClickHouse's introspection statement,
     * mapped onto this engine's own layers (one `explain` STRING column,
     * one row per output line, CH's shape):
@@ -142,17 +138,27 @@ object QueryGuard {
     if (cols.sameElements(restored)) df else df.toDF(restored: _*)
   }
 
+  /** The full pasted-query path shared by the served `/query` surface
+    * and the dialect query pack: text shims ([[normalizeDialect]]) →
+    * read-only guard → plan, then the post-plan shims that need the
+    * result schema ([[WithFill]]'s dense-axis rewrite). Each call is
+    * one statement with its own [[Binding]]. */
   def plan(spark: SparkSession, sql: String)
+      : org.apache.spark.sql.DataFrame = planIn(new Binding(spark), sql)
+
+  /** [[plan]] within statement `b`: hoisted fragments plan through
+    * here too, sharing the statement's [[Binding]]. */
+  private def planIn(b: Binding, sql: String)
       : org.apache.spark.sql.DataFrame = {
-    tryExplain(spark, sql) match {
+    tryExplain(b.spark, sql) match {
       case Some(df) => return df
       case None =>
     }
-    tryMetaStatement(spark, sql) match {
+    tryMetaStatement(b.spark, sql) match {
       case Some(df) => return df
       case None =>
     }
-    restoreRenamedNames(planned(spark, sql))
+    restoreRenamedNames(planned(b, sql))
   }
 
   /** CH meta statements Spark cannot serve over temp-view mounts:
@@ -232,29 +238,10 @@ object QueryGuard {
     }
   }
 
-  /** Set while re-planning a SUBSTRING of an already-normalized
-    * statement (hoisted subqueries, materialized join-left prefixes):
-    * chEscapeLiterals must not run twice on the same text — its
-    * \a/\v/\e/\xHH rewrites emit \uXXXX, which a second pass would
-    * read as an unknown escape and double into 6-char literal text
-    * (r18 ADVICE). */
-  private val replanningNormalized = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
-  /** [[plan]] for text sliced out of an already-normalized statement:
-    * the full shim pipeline runs, but the escape pass does not repeat. */
-  private def planPreEscaped(spark: SparkSession, sql: String)
+  private def planned(b: Binding, sql: String)
       : org.apache.spark.sql.DataFrame = {
-    val prev = replanningNormalized.get
-    replanningNormalized.set(true)
-    try plan(spark, sql) finally replanningNormalized.set(prev)
-  }
-
-  private def planned(spark: SparkSession, sql: String)
-      : org.apache.spark.sql.DataFrame = {
-    val normalized = normalizeDialect(sql)
-    try planNormalized(spark, normalized)
+    val normalized = normalize(sql, b.escaped)
+    try planNormalized(b, normalized)
     catch {
       case first: org.apache.spark.sql.AnalysisException =>
         // CH resolves SELECT-list aliases in WHERE (`SELECT x*2 AS dbl
@@ -276,7 +263,7 @@ object QueryGuard {
             inlineWindowAlias(stmt, last)) match {
             case Some(next) =>
               stmt = next
-              try return planNormalized(spark, stmt)
+              try return planNormalized(b, stmt)
               catch {
                 case e2: org.apache.spark.sql.AnalysisException => last = e2
               }
@@ -320,111 +307,103 @@ object QueryGuard {
     else e
   }
 
-  private def planNormalized(spark: SparkSession, normalized: String)
+  private def planNormalized(b: Binding, normalized: String)
       : org.apache.spark.sql.DataFrame = {
     // a FROM-position subquery containing an ASOF/ANY join is hoisted:
-    // planned recursively through this same pipeline, registered as a
-    // temp view, and substituted — so nested pasted joins work instead
-    // of dying in Spark's parser. Views drop once the outer statement
-    // is analyzed (the resolved plan no longer needs them).
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
+    // planned recursively through this same pipeline, bound as a
+    // statement fragment ([[Binding]]) and substituted — so nested
+    // pasted joins work instead of dying in Spark's parser.
     // opportunistic hoists that failed to pre-plan (trigger, reason):
     // left in place — consulted only if the statement then dies in
     // Spark's parser, so the user sees the REAL inner problem instead
     // of a syntax error on a construct Spark never understood
     val deferred = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    try {
-      var stmt = hoistNestedJoins(spark, normalized, views, deferred)
-      // sibling ASOF/ANY joins in one flat FROM compose by iteration:
-      // materialize the LEFTMOST top-level join into a temp view,
-      // substitute its name, and rescan — the next sibling then sees
-      // an ordinary table on its left. Each pass consumes one join
-      // token, so the loop is bounded by the join count (the guard is
-      // a defensive backstop, not a real limit).
-      var more = true
-      var guard = 0
-      val maxJoins = 64
-      while (more && guard < maxJoins) {
-        guard += 1
-        val ts = normalizeScan(stmt)
-        val nextAsof = ts.indices.find(i =>
-          ts(i)._2 == 0 && AsOfText.joinShapeAt(ts, i))
-        val nextAny = ts.indices.find(i =>
-          ts(i)._2 == 0 && AnyJoinText.joinShapeAt(ts, i))
-        // a PLAIN join group between FROM and the leftmost ASOF/ANY
-        // token (FROM a JOIN b ON ... ASOF JOIN c ...) materializes
-        // into its own temp view first, so the extractor then sees an
-        // ordinary table name on its left — same consume-the-leftmost
-        // strategy the sibling loop uses
-        val leftmost = (nextAsof.toSeq ++ nextAny.toSeq).minOption
-          .filter(h => joinPrefixBefore(stmt, ts, h))
-        (leftmost, nextAsof, nextAny) match {
-          case (Some(h), _, _) =>
-            stmt = materializeJoinPrefix(spark, stmt, ts, h, views)
-          case (_, Some(a), b) if b.forall(a < _) =>
-            val (after, spec) = AsOfText.extract(stmt)
-            val (s2, v) = AsOfText.materialize(spark, spec.get, after)
-            views += v; stmt = s2
-          case (_, _, Some(_)) =>
-            val (after, spec) = AnyJoinText.extract(stmt)
-            val (s2, v) = AnyJoinText.materialize(spark, spec.get, after)
-            views += v; stmt = s2
-          case _ =>
-            // no top-level joins left: one more pass through both
-            // extractors runs their rejection checks (ASOF RIGHT/FULL
-            // and FULL ANY directions, non-hoistable nested positions)
-            AsOfText.extract(stmt)
-            AnyJoinText.extract(stmt)
-            more = false
-        }
+    var stmt = hoistNestedJoins(b, normalized, deferred)
+    // sibling ASOF/ANY joins in one flat FROM compose by iteration:
+    // materialize the LEFTMOST top-level join into a fragment,
+    // substitute its name, and rescan — the next sibling then sees
+    // an ordinary table on its left. Each pass consumes one join
+    // token, so the loop is bounded by the join count (the guard is
+    // a defensive backstop, not a real limit).
+    var more = true
+    var guard = 0
+    val maxJoins = 64
+    while (more && guard < maxJoins) {
+      guard += 1
+      val ts = normalizeScan(stmt)
+      val nextAsof = ts.indices.find(i =>
+        ts(i)._2 == 0 && AsOfText.joinShapeAt(ts, i))
+      val nextAny = ts.indices.find(i =>
+        ts(i)._2 == 0 && AnyJoinText.joinShapeAt(ts, i))
+      // a PLAIN join group between FROM and the leftmost ASOF/ANY
+      // token (FROM a JOIN b ON ... ASOF JOIN c ...) materializes
+      // into its own fragment first, so the extractor then sees an
+      // ordinary table name on its left — same consume-the-leftmost
+      // strategy the sibling loop uses
+      val leftmost = (nextAsof.toSeq ++ nextAny.toSeq).minOption
+        .filter(h => joinPrefixBefore(stmt, ts, h))
+      (leftmost, nextAsof, nextAny) match {
+        case (Some(h), _, _) =>
+          stmt = materializeJoinPrefix(b, stmt, ts, h)
+        case (_, Some(a), any) if any.forall(a < _) =>
+          val (after, spec) = AsOfText.extract(stmt)
+          stmt = AsOfText.materialize(b, spec.get, after)
+        case (_, _, Some(_)) =>
+          val (after, spec) = AnyJoinText.extract(stmt)
+          stmt = AnyJoinText.materialize(b, spec.get, after)
+        case _ =>
+          // no top-level joins left: one more pass through both
+          // extractors runs their rejection checks (ASOF RIGHT/FULL
+          // and FULL ANY directions, non-hoistable nested positions)
+          AsOfText.extract(stmt)
+          AnyJoinText.extract(stmt)
+          more = false
       }
-      // exhausting the cap without reaching the terminal branch would
-      // SKIP the rejection pass and let leftover ASOF/ANY text parse
-      // as table aliases (the silent-misparse class) — refuse instead
-      if (more) throw new ReadOnlyViolation(
-        s"more than $maxJoins ASOF/ANY joins in one statement — split " +
-          "the query")
-      val planned = try planShimmed(spark, stmt)
-      catch {
-        case e: org.apache.spark.sql.catalyst.parser.ParseException
-            if deferred.nonEmpty =>
-          // a parse death downstream of constructs left in place: give
-          // the user EVERY inner pre-plan failure (any of them may be
-          // the root cause — blaming only the first could send the
-          // user chasing the wrong subquery) and the parser's own
-          // first line, with the original exception chained
-          val all = deferred.map { case (trig, msg) => s"$trig ($msg)" }
-            .mkString("; ")
-          val rv = new ReadOnlyViolation(
-            s"could not pre-plan ${deferred.size} subquery construct" +
-              s"${if (deferred.size > 1) "s" else ""}: $all — the " +
-              "construct cannot run in place; fix the subquery or " +
-              "hoist it to the top level " +
-              s"(parser said: ${e.getMessage.linesIterator.find(_.trim.nonEmpty).getOrElse("")})")
-          rv.initCause(e)
-          throw rv
-      }
-      // Rewrite integral ANSI arithmetic to CH's wrapping semantics on
-      // the ANALYZED plan, before any optimizer batch runs — so even
-      // all-literal subtrees (which ConstantFolding/
-      // ConvertToLocalRelation would otherwise evaluate ANSI-throwing
-      // in batches ahead of the extraOptimizations-installed
-      // [[graft.functions.WrapArith]]) fold with two's-complement
-      // wrap, matching ClickHouse. This closes the literal-only hole
-      // for every pasted query on ANY session; extensions-built
-      // sessions additionally get the same rule post-hoc-resolution
-      // injected (GraftExtensions).
-      // SplitDistinctAggregate runs on the same analyzed plan: it
-      // separates DISTINCT aggregates from heavy-buffered regular
-      // aggregates so the expanded distinct phase stays a codegen'd
-      // hash aggregate instead of sort-falling-back (r21, see the rule)
-      graft.plans.Bridge.ofRows(spark,
-        graft.functions.WrapArith(graft.plans.SplitDistinctAggregate(
-          planned.queryExecution.analyzed)))
-    } finally views.foreach(v => spark.catalog.dropTempView(v))
+    }
+    // exhausting the cap without reaching the terminal branch would
+    // SKIP the rejection pass and let leftover ASOF/ANY text parse
+    // as table aliases (the silent-misparse class) — refuse instead
+    if (more) throw new ReadOnlyViolation(
+      s"more than $maxJoins ASOF/ANY joins in one statement — split " +
+        "the query")
+    val planned = try planShimmed(b, stmt)
+    catch {
+      case e: org.apache.spark.sql.catalyst.parser.ParseException
+          if deferred.nonEmpty =>
+        // a parse death downstream of constructs left in place: give
+        // the user EVERY inner pre-plan failure (any of them may be
+        // the root cause — blaming only the first could send the
+        // user chasing the wrong subquery) and the parser's own
+        // first line, with the original exception chained
+        val all = deferred.map { case (trig, msg) => s"$trig ($msg)" }
+          .mkString("; ")
+        val rv = new ReadOnlyViolation(
+          s"could not pre-plan ${deferred.size} subquery construct" +
+            s"${if (deferred.size > 1) "s" else ""}: $all — the " +
+            "construct cannot run in place; fix the subquery or " +
+            "hoist it to the top level " +
+            s"(parser said: ${e.getMessage.linesIterator.find(_.trim.nonEmpty).getOrElse("")})")
+        rv.initCause(e)
+        throw rv
+    }
+    // Rewrite integral ANSI arithmetic to CH's wrapping semantics on
+    // the ANALYZED plan, before any optimizer batch runs — so even
+    // all-literal subtrees (which ConstantFolding/
+    // ConvertToLocalRelation would otherwise evaluate ANSI-throwing
+    // in batches ahead of the extraOptimizations-installed
+    // [[graft.functions.WrapArith]]) fold with two's-complement
+    // wrap, matching ClickHouse. This closes the literal-only hole
+    // for every pasted query on ANY session; extensions-built
+    // sessions additionally get the same rule post-hoc-resolution
+    // injected (GraftExtensions).
+    // SplitDistinctAggregate runs on the same analyzed plan: it
+    // separates DISTINCT aggregates from heavy-buffered regular
+    // aggregates so the expanded distinct phase stays a codegen'd
+    // hash aggregate instead of sort-falling-back (see the rule)
+    graft.plans.Bridge.ofRows(b.spark,
+      graft.functions.WrapArith(graft.plans.SplitDistinctAggregate(
+        planned.queryExecution.analyzed)))
   }
-
-  private val hoistCounter = new java.util.concurrent.atomic.AtomicLong()
 
   /** Depth-0 comma positions of `s` (quote-aware) — comma-FROM lists
     * are CH cross joins, so they count as a join prefix too. */
@@ -436,12 +415,7 @@ object QueryGuard {
       s.charAt(i) match {
         case '(' => depth += 1
         case ')' => depth -= 1
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < s.length && s.charAt(i) != q) {
-            if (s.charAt(i) == '\\' && q != '`') i += 1
-            i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(s, i) - 1
         case ',' if depth == 0 => out += i
         case _ =>
       }
@@ -466,15 +440,14 @@ object QueryGuard {
     }
 
   /** Materialize the plain-join group between FROM and the ASOF/ANY
-    * token at `hit` into a temp view (recursively planned, so dialect
-    * constructs inside it keep working), substitute the view name,
-    * and re-qualify every prefix-side alias reference to the view.
+    * token at `hit` into a fragment (recursively planned, so dialect
+    * constructs inside it keep working), substitute its name, and
+    * re-qualify every prefix-side alias reference to it.
     * Ambiguous column names ACROSS prefix sides surface as the
     * analyzer's own (loud) ambiguity error when referenced — the
-    * rewrite collapses all prefix aliases onto one view. */
-  private def materializeJoinPrefix(spark: SparkSession, sql: String,
-      ts: Vector[(NormTok, Int)], hit: Int,
-      views: scala.collection.mutable.ArrayBuffer[String]): String = {
+    * rewrite collapses all prefix aliases onto one fragment. */
+  private def materializeJoinPrefix(b: Binding, sql: String,
+      ts: Vector[(NormTok, Int)], hit: Int): String = {
     val fromAt = (0 until hit).reverse.find(j =>
       ts(j)._2 == 0 && ts(j)._1.upper == "FROM").get
     val prefix = sql.substring(ts(fromAt)._1.end, ts(hit)._1.start).trim
@@ -510,10 +483,7 @@ object QueryGuard {
       }
     }
     val aliases = sides.toSeq.filter(_.nonEmpty).flatMap(sideAlias)
-    val view = s"__graft_joinleft_${hoistCounter.incrementAndGet()}"
-    planPreEscaped(spark, s"SELECT * FROM $prefix")
-      .createOrReplaceTempView(view)
-    views += view
+    val view = b.add("joinleft", planIn(b.sliced, s"SELECT * FROM $prefix"))
     var out = sql.substring(0, ts(fromAt)._1.end) + " " + view + " " +
       sql.substring(ts(hit)._1.start)
     aliases.foreach(a => out = AsOfText.rewriteQualifier(out, a, view + "."))
@@ -550,20 +520,19 @@ object QueryGuard {
     * subquery that contains a nested SHIM-ONLY construct — ASOF/ANY
     * joins, ARRAY JOIN, `LIMIT n BY`, `WITH FILL`, `WITH TOTALS`,
     * `COLUMNS(...)`, `APPLY(...)` (all handled at the top level of a
-    * statement only) — with a temp view of its recursively planned
+    * statement only) — with a fragment of its recursively planned
     * result: the recursive [[plan]] call applies the full shim
     * pipeline to the inner text, so every dialect form works inside
     * subqueries too. A FALSE-positive hoist (e.g. a table merely
     * named `array` before a JOIN) is harmless: hoisting a plain
     * subquery is semantics-preserving and Catalyst optimizes through
-    * temp views. Subqueries in any other position (scalar, IN-lists,
+    * spliced fragments. Subqueries in any other position (scalar, IN-lists,
     * correlated predicates) cannot be pre-planned — ASOF/ANY there
     * still reach the shims' scoped rejection, the rest Spark's
     * parser. */
-  private def hoistNestedJoins(spark: SparkSession, sql: String,
-      registered: scala.collection.mutable.ArrayBuffer[String],
-      deferred: scala.collection.mutable.ArrayBuffer[(String, String)] =
-        scala.collection.mutable.ArrayBuffer.empty): String = {
+  private def hoistNestedJoins(b: Binding, sql: String,
+      deferred: scala.collection.mutable.ArrayBuffer[(String, String)])
+      : String = {
     val ts = normalizeScan(sql)
     def nextCh(from: Int): Char = {
       var i = from
@@ -627,8 +596,8 @@ object QueryGuard {
         if (open < 0 || close < 0) "" else sql.substring(open + 1, close).trim
       val up = innerText.toUpperCase
       // the token immediately before the '(' decides the position:
-      // FROM/JOIN = derived table (replace with the view name),
-      // AS = a CTE body (keep the parens, select from the view),
+      // FROM/JOIN = derived table (replace with the fragment name),
+      // AS = a CTE body (keep the parens, select from the fragment),
       // ',' = a comma-listed item — either a FROM-list derived table
       // or a select-list scalar subquery; the parenthesized
       // `(SELECT * FROM view)` replacement is valid as BOTH, so the
@@ -650,7 +619,7 @@ object QueryGuard {
         // leaving the subquery in place, where it either plans
         // natively or fails loudly in Spark's own analyzer
         val dfOpt =
-          try Some(planPreEscaped(spark, innerText)) // recursive pipeline
+          try Some(planIn(b.sliced, innerText)) // recursive pipeline
           catch {
             case e: org.apache.spark.sql.AnalysisException
                 if Set("ASOF", "ANY")(trigger) =>
@@ -665,15 +634,13 @@ object QueryGuard {
           }
         dfOpt match {
           case Some(df) =>
-            val view = s"__graft_sub_${hoistCounter.incrementAndGet()}"
-            df.createOrReplaceTempView(view)
-            registered += view
+            val view = b.add("sub", df)
             val replacement =
               if (ctePos || commaPos) s"(SELECT * FROM $view)" else view
             // recurse: several nested joins hoist one at a time
-            return hoistNestedJoins(spark,
+            return hoistNestedJoins(b,
               sql.substring(0, open) + replacement + sql.substring(close + 1),
-              registered, deferred)
+              deferred)
           case None => // opportunistic hoist failed: try later hits
         }
       }
@@ -688,16 +655,7 @@ object QueryGuard {
     var i = 0
     while (i < p) {
       s.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          var done = false
-          while (i < s.length && !done) {
-            val ch = s.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < s.length) i += 2
-            else if (ch == q && i + 1 < s.length && s.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(s, i)
         case '(' => stack.prepend(i); i += 1
         case ')' => if (stack.nonEmpty) stack.removeHead(); i += 1
         case _ => i += 1
@@ -706,22 +664,29 @@ object QueryGuard {
     stack.headOption.getOrElse(-1)
   }
 
+  /** Index just past the quoted run (string literal or backticked
+    * name) that opens at `start`: backslash escapes outside backticks,
+    * doubled quotes; the text's length when the run is unterminated. */
+  private[sql] def skipQuoted(s: CharSequence, start: Int): Int = {
+    val q = s.charAt(start)
+    var i = start + 1
+    while (i < s.length) {
+      val ch = s.charAt(i)
+      if (ch == '\\' && q != '`' && i + 1 < s.length) i += 2
+      else if (ch == q && i + 1 < s.length && s.charAt(i + 1) == q) i += 2
+      else if (ch == q) return i + 1
+      else i += 1
+    }
+    s.length
+  }
+
   /** Index of the ')' matching the '(' at `open` (quote-aware). */
   private[sql] def matchParenAt(s: String, open: Int): Int = {
     var depth = 0
     var i = open
     while (i < s.length) {
       s.charAt(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          var done = false
-          while (i < s.length && !done) {
-            val ch = s.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < s.length) i += 2
-            else if (ch == q && i + 1 < s.length && s.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(s, i)
         case '(' => depth += 1; i += 1
         case ')' =>
           depth -= 1
@@ -734,15 +699,13 @@ object QueryGuard {
   }
 
   /** The schema-aware post-plan shims shared by both [[plan]] paths. */
-  private def planShimmed(spark: SparkSession, sql: String)
+  private def planShimmed(b: Binding, sql: String)
       : org.apache.spark.sql.DataFrame = {
     // COLUMNS('re') [APPLY(f)] among OTHER select items expands
     // textually against the FROM clause's probed schema, then the
     // whole statement (GROUP BY included) plans natively
-    var expanded = StarPost.expandItems(sql,
-      p => { parseReadOnly(spark, p); spark.sql(p) }).getOrElse(sql)
-    expanded = StarPost.expandUntuple(expanded,
-      p => { parseReadOnly(spark, p); spark.sql(p) }).getOrElse(expanded)
+    var expanded = StarPost.expandItems(sql, b.sql).getOrElse(sql)
+    expanded = StarPost.expandUntuple(expanded, b.sql).getOrElse(expanded)
     val (core1, star) = StarPost.extract(expanded)
     val (core, fill) = WithFill.extract(core1)
     // CH numeric truthiness (WHERE x % 2, if(2, ...), WHERE changed):
@@ -751,7 +714,7 @@ object QueryGuard {
     // CH-only window functions (nonNegativeDerivative) rewrite while
     // still inside the parsed WindowExpression — see WindowShims
     val parsed = graft.functions.WindowShims(
-      graft.functions.Truthiness(parseReadOnly(spark, core)))
+      graft.functions.Truthiness(parseReadOnly(b.spark, core)))
     // CH chrono arithmetic (ChronoArith scaladoc): date−date → Int32
     // days / ts−ts → Int32 seconds ride every statement (identity
     // elsewhere); TIMESTAMP ± integral-seconds — which Spark has no
@@ -761,9 +724,10 @@ object QueryGuard {
     // seconds), then BoolAggs (sum/avg over a boolean — CH's
     // Bool-is-UInt8 reading), then both. Each retry transform is the
     // identity wherever the original resolved, so only statements
-    // Spark itself rejected can take a rewritten path.
-    var df = try graft.plans.Bridge.ofRows(spark,
-      graft.functions.ChronoArith.diffs(parsed))
+    // Spark itself rejected can take a rewritten path. Fragments bind
+    // last ([[Binding.rows]]), so the parsed-plan rules above never
+    // walk a spliced, already-analyzed subtree.
+    var df = try b.rows(graft.functions.ChronoArith.diffs(parsed))
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if Option(e.getCondition).exists(_.startsWith("DATATYPE_MISMATCH")) =>
@@ -774,7 +738,7 @@ object QueryGuard {
           () => graft.functions.ChronoArith.shifts(
             graft.functions.TupleCmps(graft.functions.BoolAggs(parsed))))
         retries.view.flatMap { mk =>
-          try Some(graft.plans.Bridge.ofRows(spark, mk()))
+          try Some(b.rows(mk()))
           catch { case _: Throwable => None }
         }.headOption.getOrElse(throw e)
     }
@@ -1118,7 +1082,11 @@ object QueryGuard {
     sql
   }
 
-  def normalizeDialect(sql0: String): String = {
+  def normalizeDialect(sql0: String): String = normalize(sql0, escaped = false)
+
+  /** [[normalizeDialect]]; `escaped` text (a slice of an already
+    * normalized statement, [[Binding.escaped]]) skips the escape pass. */
+  private def normalize(sql0: String, escaped: Boolean): String = {
     // string-literal escape semantics FIRST: ClickHouse KEEPS the
     // backslash of an unrecognized escape ('\d' is the two chars \d),
     // Spark's unescaper DROPS it ('\d' becomes d) — so every pasted
@@ -1128,8 +1096,7 @@ object QueryGuard {
     // CH-only control escapes \a \v \e \xHH respelled as \uXXXX).
     // Skipped when re-planning a slice of already-normalized text —
     // the pass is not idempotent over its own \uXXXX output.
-    val sql =
-      if (replanningNormalized.get) sql0 else chEscapeLiterals(sql0)
+    val sql = if (escaped) sql0 else chEscapeLiterals(sql0)
     rejectDistributedTvfs(sql)
     rejectQueryParams(sql)
     // CH type names inside CAST(... AS T) and ::T suffix casts rewrite
@@ -1441,17 +1408,8 @@ object QueryGuard {
     while (i < n) {
       val c = sql.charAt(i)
       if (c == '\'' || c == '"' || c == '`') {
-        val q = c
         val s = i
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          val ch = sql.charAt(i)
-          if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-          else if (ch == q && i + 1 < n && sql.charAt(i + 1) == q) i += 2
-          else if (ch == q) { done = true; i += 1 }
-          else i += 1
-        }
+        i = skipQuoted(sql, i)
         sb.append(sql.substring(s, i))
         prevIdent = false
       } else if (!prevIdent && (c.isDigit ||
@@ -1590,17 +1548,8 @@ object QueryGuard {
     while (i < n) {
       val c = sql.charAt(i)
       if (c == '\'' || c == '"' || c == '`') {
-        val q = c
         val s = i
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          val ch = sql.charAt(i)
-          if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-          else if (ch == q && i + 1 < n && sql.charAt(i + 1) == q) i += 2
-          else if (ch == q) { done = true; i += 1 }
-          else i += 1
-        }
+        i = skipQuoted(sql, i)
         sb.append(sql.substring(s, i))
         prevIdent = false
       } else if (c.isDigit && !prevIdent) {
@@ -1683,17 +1632,7 @@ object QueryGuard {
     val n = sql.length
     while (i < n) {
       sql.charAt(i) match {
-        case '\'' | '"' | '`' =>
-          val q = sql.charAt(i)
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            val ch = sql.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-            else if (ch == q && i + 1 < n && sql.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(sql, i)
         case '(' => depth += 1; i += 1
         case ')' =>
           if (depth == 0) return i
@@ -1728,17 +1667,7 @@ object QueryGuard {
       var hit = -1 // position of the '.' of the first match
       while (i < n && hit < 0) {
         out.charAt(i) match {
-          case '\'' | '"' | '`' =>
-            val q = out.charAt(i)
-            i += 1
-            var done = false
-            while (i < n && !done) {
-              val ch = out.charAt(i)
-              if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-              else if (ch == q && i + 1 < n && out.charAt(i + 1) == q) i += 2
-              else if (ch == q) { done = true; i += 1 }
-              else i += 1
-            }
+          case '\'' | '"' | '`' => i = skipQuoted(out, i)
           case '(' => stack.prepend(i); i += 1
           case ')' =>
             if (stack.nonEmpty) closeToOpen(i) = stack.removeHead()
@@ -2053,11 +1982,11 @@ object QueryGuard {
           nextNonWs(out, t.end) < out.length &&
           out.charAt(nextNonWs(out, t.end)) == '(') {
           val o1 = nextNonWs(out, t.end)
-          val c1 = matchParen(out, o1)
+          val c1 = matchParenAt(out, o1)
           if (c1 > o1) {
             val o2 = nextNonWs(out, c1 + 1)
             if (o2 < out.length && out.charAt(o2) == '(') {
-              val c2 = matchParen(out, o2)
+              val c2 = matchParenAt(out, o2)
               if (c2 > o2) {
                 val params = out.substring(o1 + 1, c1).trim
                 val args = out.substring(o2 + 1, c2).trim
@@ -2143,25 +2072,13 @@ object QueryGuard {
     * fixpoint loop). A group with whitespace before it is NOT treated
     * as a call (`SELECT (a)[1]` targets `(a)`, not `SELECT (a)`). */
   private[sql] def rewriteSubscripts(sql: String): String = {
-    def skipQuoteFwd(s: String, start: Int): Int = {
-      val q = s.charAt(start)
-      var i = start + 1
-      while (i < s.length) {
-        val ch = s.charAt(i)
-        if (ch == '\\' && q != '`' && i + 1 < s.length) i += 2
-        else if (ch == q && i + 1 < s.length && s.charAt(i + 1) == q) i += 2
-        else if (ch == q) return i + 1
-        else i += 1
-      }
-      s.length
-    }
     def matchFwd(s: String, open: Int): Int = {
       val (o, c) = (s.charAt(open), if (s.charAt(open) == '[') ']' else ')')
       var depth = 0
       var i = open
       while (i < s.length) {
         val ch = s.charAt(i)
-        if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoteFwd(s, i)
+        if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoted(s, i)
         else {
           if (ch == o) depth += 1
           else if (ch == c) { depth -= 1; if (depth == 0) return i }
@@ -2194,7 +2111,7 @@ object QueryGuard {
       var found = -1
       while (i < out.length && found < 0) {
         val ch = out.charAt(i)
-        if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoteFwd(out, i)
+        if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoted(out, i)
         else if (ch == '[') found = i
         else i += 1
       }
@@ -2273,18 +2190,8 @@ object QueryGuard {
     while (i < sb.length) {
       val c = sb.charAt(i)
       c match {
-        case '\'' | '"' | '`' =>
-          val q = c
-          i += 1
-          var done = false
-          while (i < sb.length && !done) {
-            val ch = sb.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < sb.length) i += 2
-            else if (ch == q && i + 1 < sb.length && sb.charAt(i + 1) == q)
-              i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case q @ ('\'' | '"' | '`') =>
+          i = skipQuoted(sb, i)
           prevSig = q; lastWord = ""
         case '[' =>
           val literal = prevSig == ' ' || "(,+-*/%=<>!&|^:".contains(prevSig) ||
@@ -2604,7 +2511,7 @@ object QueryGuard {
         out.substring(t.end).dropWhile(_.isWhitespace).headOption
           .contains('(')) {
         val open = out.indexOf('(', t.end)
-        val close = matchParen(out, open)
+        val close = matchParenAt(out, open)
         if (close > open) {
           val items = splitTopLevel(out.substring(open + 1, close))
             .map(splitAlias)
@@ -2749,7 +2656,7 @@ object QueryGuard {
           .find(j => ts(j)._2 == d && clauseKw(ts(j)._1.upper))
           .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))) {
         val open = out.indexOf('(', t.end)
-        val close = matchParen(out, open)
+        val close = matchParenAt(out, open)
         if (close > open) {
           val items = splitTopLevel(out.substring(open + 1, close))
           chValuesRewrite(items).foreach { repl =>
@@ -2787,7 +2694,7 @@ object QueryGuard {
           .find(j => ts(j)._2 == d && clauseKw(ts(j)._1.upper))
           .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))) {
         val open = out.indexOf('(', t.end)
-        val close = matchParen(out, open)
+        val close = matchParenAt(out, open)
         if (close > open) {
           val items = splitTopLevel(out.substring(open + 1, close))
             .map(_.trim)
@@ -3187,7 +3094,7 @@ object QueryGuard {
         val open = t.end +
           txt.substring(t.end).takeWhile(_.isWhitespace).length
         open < txt.length && txt.charAt(open) == '(' && {
-          val close = matchParen(txt, open)
+          val close = matchParenAt(txt, open)
           // unbalanced text (can't locate the call's end): keep the
           // pre-r15 conservative answer and treat it as an aggregate
           close <= open ||
@@ -3210,7 +3117,7 @@ object QueryGuard {
       if (windowAggNames(t.upper)) {
         val open = t.end + out.substring(t.end).takeWhile(_.isWhitespace).length
         if (open < out.length && out.charAt(open) == '(') {
-          val close = matchParen(out, open)
+          val close = matchParenAt(out, open)
           if (close > open) {
             val after = out.substring(close + 1).dropWhile(_.isWhitespace)
             val inner = out.substring(open + 1, close).trim
@@ -3407,7 +3314,7 @@ object QueryGuard {
           .find(j => ts(j)._2 == d && clauseKw(ts(j)._1.upper))
           .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))) {
         val open = out.indexOf('(', t.end)
-        val close = matchParen(out, open)
+        val close = matchParenAt(out, open)
         if (close > open) {
           val items = splitTopLevel(out.substring(open + 1, close))
           val repl = chGenerateRandomRewrite(items)
@@ -3535,7 +3442,7 @@ object QueryGuard {
     * inline VALUES row) — leave the text alone. */
   private def chValuesRewrite(items: Seq[String]): Option[String] = {
     def isTuple(s: String): Boolean =
-      s.nonEmpty && s.head == '(' && matchParen(s, 0) == s.length - 1
+      s.nonEmpty && s.head == '(' && matchParenAt(s, 0) == s.length - 1
     def quoted(s: String): Option[String] = {
       val t = s.trim
       if (t.length >= 2 && t.head == '\'' && t.last == '\'')
@@ -3605,36 +3512,6 @@ object QueryGuard {
     }
   }
 
-  /** The char index of the ')' matching the '(' at `open`, quote-aware;
-    * -1 when unbalanced. */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    val n = s.length
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' | '"' | '`' =>
-          val q = s.charAt(i)
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            val ch = s.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-            else if (ch == q && i + 1 < n && s.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
-        case '(' => depth += 1; i += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-          i += 1
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
   /** Rewrite CH type names in `CAST(expr AS T)` / `TRY_CAST(expr AS
     * T)`: the type slot is everything after the LAST `AS` one level
     * inside the cast's parens (a cast has exactly one; any AS deeper
@@ -3655,7 +3532,7 @@ object QueryGuard {
           val open = out.indexWhere(!_.isWhitespace, t.end)
           if (open < 0 || out.charAt(open) != '(') None
           else {
-            val close = matchParen(out, open)
+            val close = matchParenAt(out, open)
             if (close < 0) None
             else {
               val inner = ts(i)._2 + 1
@@ -3690,17 +3567,8 @@ object QueryGuard {
       val c = sql.charAt(i)
       c match {
         case '\'' | '"' | '`' =>
-          val q = c
           val s0 = i
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            val ch = sql.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-            else if (ch == q && i + 1 < n && sql.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+          i = skipQuoted(sql, i)
           sb.append(sql.substring(s0, i))
         case ':' if i + 1 < n && sql.charAt(i + 1) == ':' =>
           sb.append("::")
@@ -3713,7 +3581,7 @@ object QueryGuard {
             sql.charAt(i) == '_')) i += 1
           var typeEnd = i
           if (i < n && sql.charAt(i) == '(') {
-            val close = matchParen(sql, i)
+            val close = matchParenAt(sql, i)
             if (close > 0) { typeEnd = close + 1; i = typeEnd }
           }
           val raw = sql.substring(s0, typeEnd)
@@ -3735,17 +3603,7 @@ object QueryGuard {
     val n = s.length
     while (i < n) {
       s.charAt(i) match {
-        case '\'' | '"' | '`' =>
-          val q = s.charAt(i)
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            val ch = s.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-            else if (ch == q && i + 1 < n && s.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(s, i)
         case '(' | '[' => depth += 1; i += 1
         case ')' | ']' => depth -= 1; i += 1
         case ',' if depth == 0 =>
@@ -3954,19 +3812,9 @@ object QueryGuard {
     val n = s.length
     while (i < n) {
       s.charAt(i) match {
-        case '\'' | '"' | '`' =>
-          val q = s.charAt(i)
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            val ch = s.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-            else if (ch == q && i + 1 < n && s.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(s, i)
         case '(' =>
-          val close = matchParen(s, i)
+          val close = matchParenAt(s, i)
           val end = if (close > i) close + 1 else n
           val word = s.substring(i + 1, end - (if (close > i) 1 else 0))
             .dropWhile(_.isWhitespace)
@@ -4093,17 +3941,7 @@ object QueryGuard {
     while (i < n) {
       val c = sql.charAt(i)
       c match {
-        case '\'' | '"' | '`' =>
-          val q = c
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            val ch = sql.charAt(i)
-            if (ch == '\\' && q != '`' && i + 1 < n) i += 2
-            else if (ch == q && i + 1 < n && sql.charAt(i + 1) == q) i += 2
-            else if (ch == q) { done = true; i += 1 }
-            else i += 1
-          }
+        case '\'' | '"' | '`' => i = skipQuoted(sql, i)
         case '(' => depth += 1; i += 1
         case ')' => depth -= 1; i += 1
         case ch if Character.isLetter(ch) || ch == '_' =>

@@ -16,9 +16,13 @@ import org.apache.spark.sql.SparkSession
   * State lives driver-side in this object (a bounded ring for the
   * log, a map for in-flight queries) — the serving path is the
   * driver, so no distribution concern — and [[refresh]] re-registers
-  * the temp views from a snapshot; [[QueryExecutor.run]] refreshes
-  * BEFORE planning, so a pasted `SELECT * FROM system.processes`
-  * sees itself in flight, as it does on ClickHouse. Snapshots are
+  * the `system_processes`, `system_query_log` and `system_metrics`
+  * temp views from a snapshot. It runs on reference: a guarded
+  * statement that reads one of them refreshes all three once, while
+  * [[Binding]] binds it, before analysis. [[QueryExecutor.run]] marks
+  * the query in flight before planning, so a pasted `SELECT * FROM
+  * system.processes` sees itself, as it does on ClickHouse.
+  * Statements that read none of them pay nothing. Snapshots are
   * LocalRelations of at most [[MaxLog]] rows — never a Spark job.
   */
 object QueryLog {
@@ -91,9 +95,11 @@ object QueryLog {
     seq.incrementAndGet()
   }
 
-  /** (Re-)register the ops views from the current state. Cheap:
-    * driver-local rows only, so the per-query refresh in
-    * [[QueryExecutor.run]] costs microseconds of plan-time. */
+  /** (Re-)register the live ops views from the current state:
+    * in-process rows only, but three DataFrames and three catalog
+    * writes (tens of milliseconds), so it runs only for statements
+    * that read these views ([[Binding.bind]]) and once at
+    * [[TableEnv.register]]. */
   def refresh(spark: SparkSession): Unit = {
     import spark.implicits._
     val nowMs = System.currentTimeMillis()

@@ -35,8 +35,10 @@ object TableEnv {
       // unbounded counter — a Range LEAF, so a LIMIT takes only the
       // rows it needs and a full scan is the same user error (bounded
       // here by the executor timeout) it is on ClickHouse
-      // the live ops slice (processes/query_log/metrics — refreshed
-      // per served query by QueryExecutor) and its static companions
+      // the live ops slice (processes/query_log/metrics — registered
+      // here so SHOW TABLES and system.tables list them, refreshed
+      // again only by a statement that reads them, see QueryLog) and
+      // its static companions
       QueryLog.refresh(spark)
       QueryLog.registerStatic(spark, dir)
       import org.apache.spark.sql.functions.lit

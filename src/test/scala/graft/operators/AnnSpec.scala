@@ -130,6 +130,57 @@ class AnnSpec extends SparkSpec {
     assert(got.toMap.apply(4L) == 0L) // exact score tie keeps lowest cell
   }
 
+  test("pqEncode projection matches the min_by aggregate it replaced") {
+    // PQ encoding used to explode each vector × (subspace, cell),
+    // score L2² on the vector's slice and keep
+    //   min_by(cell, struct(d2, cell)) GROUP BY (vec_id, sub).
+    // Hostile cases: a codeword with a NaN element (its distance is
+    // NaN, which Spark's struct ordering ranks above every number, so
+    // a finite cell after it must win), a subspace whose codewords are
+    // ALL NaN (NaN ties keep the lowest cell), two identical codewords
+    // (exact distance tie keeps the lowest cell) and a NaN vector
+    // element (every distance NaN).
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    graft.functions.CHFunctions.register(spark)
+    val nan = Double.NaN
+    val df = Seq(
+      (1L, Seq(1.0, 0.0, 0.0, 1.0)),
+      (2L, Seq(0.0, 1.0, 1.0, 0.0)),
+      (3L, Seq(0.5, 0.5, 0.2, 0.8)),
+      (4L, Seq(nan, 0.0, 0.0, 0.0)),
+      (5L, Seq(-1.0, 2.0, 0.0, 0.0))
+    ).toDF("vec_id", "v")
+    val book = Seq(
+      // sub 0: cell 0 is NaN, cells 1 and 2 are the same codeword
+      (0, 0L, Seq(nan, 0.0)),
+      (0, 1L, Seq(0.0, 1.0)),
+      (0, 2L, Seq(0.0, 1.0)),
+      (0, 3L, Seq(1.0, 0.0)),
+      // sub 1: every codeword carries a NaN
+      (1, 0L, Seq(nan, 1.0)),
+      (1, 1L, Seq(0.0, nan)))
+    val got = df.select(col("vec_id"),
+        call_function("pqEncode", col("v"), typedlit(book)).as("codes"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
+      .toSeq.sortBy(_._1)
+    val old = df.crossJoin(book.toDF("sub", "cell", "cv"))
+      .select(col("vec_id"), col("sub"), col("cell"),
+        expr("L2SquaredDistance(slice(v, sub * 2 + 1, 2), cv)").as("d2"))
+      .groupBy("vec_id", "sub")
+      .agg(min_by(col("cell"), struct(col("d2"), col("cell"))).as("cell"))
+      .groupBy("vec_id")
+      .agg(expr("transform(array_sort(collect_list(struct(sub, cell))), " +
+        "x -> x.cell)").as("codes"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
+      .toSeq.sortBy(_._1)
+    assert(got == old)
+    val codes = got.toMap
+    assert(codes(1L) == Seq(3L, 0L)) // finite cell beats the NaN cell 0
+    assert(codes(2L) == Seq(1L, 0L)) // identical codewords: lowest cell
+    assert(codes(4L) == Seq(0L, 0L)) // NaN element: all NaN, lowest cell
+  }
+
   test("saved IVF index reproduces live search and prunes to probed cells") {
     import org.apache.spark.sql.functions._
     val idx = java.nio.file.Files.createTempDirectory("graft_ivf").toString

@@ -108,6 +108,21 @@ class DedupSpec extends SparkSpec {
     assert(selfs == docs.count())
   }
 
+  test("an index in the old (doc_id, bkey, band) layout fails naming the rebuild") {
+    import spark.implicits._
+    val docs = graft.Tables(spark, sf, "documents").limit(20)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ndold").toString
+    Seq((1L, "0123456789abcdef0123456789abcdef", 0))
+      .toDF("doc_id", "bkey", "band")
+      .write.partitionBy("band").parquet(s"$dir/bands")
+    Seq((1L, Seq.fill(12)(0L))).toDF("doc_id", "sig")
+      .write.parquet(s"$dir/sigs")
+    val e = intercept[IllegalArgumentException](
+      Dedup.dedupAgainstIndex(docs, dir).collect())
+    assert(e.getMessage.contains(dir), e.getMessage)
+    assert(e.getMessage.contains("saveNearDupIndex"), e.getMessage)
+  }
+
   test("SRP bucket cap drops degenerate buckets instead of emitting n^2 pairs") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

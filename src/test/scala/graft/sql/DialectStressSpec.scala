@@ -1540,6 +1540,77 @@ class DialectStressSpec extends graft.SparkSpec {
     assert(r.rows.head(2).toString == "1") // one code point
   }
 
+  /** One statement per hoist site: ASOF, ANY, a plain-join prefix
+    * before an ASOF join, and an ASOF nested in a CTE body. */
+  private val hoisted = Seq(
+    """SELECT count(*) AS n, count(p.ts) AS matched, max(p.ts) AS last_ts
+      |FROM (SELECT * FROM events WHERE event_type = 'click') e
+      |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') p
+      |  ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
+    """SELECT count(*) AS n, sum(c.c_custkey) AS s
+      |FROM orders o ANY LEFT JOIN customer c
+      |  ON o.o_custkey = c.c_custkey""".stripMargin,
+    """SELECT count(*) AS n, max(p.ts) AS last_ts
+      |FROM (SELECT * FROM events WHERE event_type = 'click') e
+      |JOIN customer c ON e.user_id = c.c_custkey
+      |ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') p
+      |  ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
+    """WITH j AS (
+      |  SELECT e.user_id, p.ts AS pts FROM events e
+      |  ASOF JOIN (SELECT user_id, ts FROM events
+      |             WHERE event_type = 'view') p
+      |    ON e.user_id = p.user_id AND e.ts >= p.ts)
+      |SELECT count(*) AS n, count(DISTINCT user_id) AS users,
+      |  (SELECT count(*) FROM j WHERE pts IS NOT NULL) AS with_prior
+      |FROM j""".stripMargin)
+
+  test("hoisted fragments bind into the plan, not through session views") {
+    ex // registers the tables
+    hoisted.foreach { q =>
+      val analyzed = QueryGuard.plan(spark, q).queryExecution.analyzed
+      val hoistViews = analyzed.collectWithSubqueries {
+        case v: org.apache.spark.sql.catalyst.plans.logical.View
+            if v.desc.identifier.table.startsWith("__graft_") =>
+          v.desc.identifier.table
+      }
+      assert(hoistViews.isEmpty, s"$hoistViews in\n$q")
+      val relations = analyzed.collectWithSubqueries {
+        case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation => r
+      }
+      assert(relations.isEmpty, s"$relations in\n$q")
+      val fragments = analyzed.collectWithSubqueries {
+        case a: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+            if a.alias.startsWith("__graft_") => a.alias
+      }
+      assert(fragments.nonEmpty, s"no spliced fragment in\n$q")
+    }
+    val leaked = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("__graft_"))
+    assert(leaked.isEmpty, leaked.mkString(", "))
+  }
+
+  test("hoisted statements planned concurrently each get their serial answer") {
+    val serial = hoisted.map(q => ex.run(q).rows)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Int, Seq[Seq[Any]])]] {
+          def call(): Seq[(Int, Seq[Seq[Any]])] = hoisted.indices.map { j =>
+            val k = (t + j) % hoisted.size
+            k -> ex.run(hoisted(k)).rows
+          }
+        })
+      }
+      runs.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+        .foreach { case (k, got) =>
+          assert(got == serial(k), s"statement $k: $got vs ${serial(k)}")
+        }
+    } finally pool.shutdown()
+    val leaked = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("__graft_"))
+    assert(leaked.isEmpty, leaked.mkString(", "))
+  }
+
   test("randConstant folds once per call site, surviving alias pushdown") {
     // the filter copy and the projected copy must agree — a foldable
     // draw duplicated by PushDownPredicates used to fold twice
