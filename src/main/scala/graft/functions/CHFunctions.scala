@@ -1333,11 +1333,11 @@ object CHFunctions {
     "sumMerge" -> (es => fn("sum", es.head)),
     "countState" -> (es => fn("count", (if (es.isEmpty) Seq(Literal(1)) else es): _*)),
     "countMerge" -> (es => fn("sum", es.head)),
-    // min/max THEMSELVES (r20): same names, same semantics, but string
-    // inputs dispatch to the ObjectHashAggregate-friendly StringMinMax —
-    // a declarative Min/Max over a string demotes the whole aggregation
-    // (and every sibling aggregate) to SortAggregate. One-argument only,
-    // like the builtins they shadow.
+    // min/max THEMSELVES: same names, same semantics, but inputs whose
+    // builtin buffer is not hash-aggregable (strings, structs, arrays)
+    // dispatch to TypedMinMax — a declarative Min/Max over them demotes
+    // the whole aggregation (and every sibling aggregate) to
+    // SortAggregate. One-argument only, like the builtins they shadow.
     "min" -> (es => {
       if (es.size != 1) throw new IllegalArgumentException(
         s"min expects 1 argument, got ${es.size}")
@@ -1349,8 +1349,8 @@ object CHFunctions {
       ChMinOrMax(es.head, isMin = false)
     }),
     // max_by/min_by (and everything routed onto them: argMax/argMin/
-    // argMaxIf/boundingRatio/ANY-join picks): same dispatch story —
-    // string VALUES demote the declarative MaxBy/MinBy to SortAggregate
+    // argMaxIf/boundingRatio): same dispatch — variable-width values or
+    // orderings demote the declarative MaxBy/MinBy to SortAggregate
     "max_by" -> (es => {
       if (es.size != 2) throw new IllegalArgumentException(
         s"max_by expects 2 arguments, got ${es.size}")

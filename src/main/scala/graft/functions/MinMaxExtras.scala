@@ -2,275 +2,128 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceableAggregate}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Max, Min, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RuntimeReplaceableAggregate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, DeclarativeAggregate, Max, MaxBy, Min, MinBy, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.types.DataType
 
-/** min/max with a hash-aggregation-friendly STRING path (r20, guide §2/§4).
+/** min/max/min_by/max_by that stay hash-aggregable for every type.
   *
-  * Spark's declarative Min/Max carry the running value in the aggregation
-  * buffer row; HashAggregateExec only supports FIXED-SIZE mutable buffer
-  * fields, so a single `min(stringCol)` demotes the whole aggregate — and
-  * every other aggregate computed alongside it, including the two-phase
-  * exact-distinct expansion — to SortAggregate: a full sort of the input
-  * per phase. Measured on q_ch_url/q_ch_bits: a 4-deep SortAggregate
-  * chain over the near-unique distinct stream.
+  * Spark's declarative Min/Max/MinBy/MaxBy carry the running value in
+  * the aggregation buffer row. HashAggregateExec only supports
+  * fixed-width mutable buffer fields, so one `min` over a string,
+  * struct or array demotes the whole aggregate — and every sibling
+  * aggregate, including the two-phase exact-distinct expansion — to
+  * SortAggregate: a full sort of the input per phase.
   *
-  * [[StringMinMax]] is the same fold as a [[TypedImperativeAggregate]]
-  * (object buffer), which plans as ObjectHashAggregate — hash-based,
-  * partial-aggregating, no sorts. Identical semantics: binary UTF8
-  * comparison (Spark's default-collation string ordering), nulls
-  * skipped, NULL when no non-null input.
-  *
-  * [[ChMinOrMax]] is the dispatch shim registered under the SQL names
-  * `min`/`max`: strings (default collation) route to [[StringMinMax]],
-  * everything else — numerics, dates, arrays, structs, collated strings
-  * — to the builtin Min/Max unchanged. */
-case class StringMinMax(
-    child: Expression,
-    isMin: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[UTF8String] with UnaryLike[Expression] {
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = child.dataType
-  override def prettyName: String = if (isMin) "min" else "max"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName string path expects a string column, got ${other.simpleString}")
-  }
-
-  override def createAggregationBuffer(): UTF8String = null
-
-  private def better(cand: UTF8String, cur: UTF8String): Boolean =
-    cur == null ||
-      (if (isMin) cand.compareTo(cur) < 0 else cand.compareTo(cur) > 0)
-
-  override def update(buf: UTF8String, input: InternalRow): UTF8String = {
-    val v = child.eval(input).asInstanceOf[UTF8String]
-    // clone: the incoming UTF8String points into a reused row buffer
-    if (v != null && better(v, buf)) v.clone() else buf
-  }
-
-  override def merge(a: UTF8String, b: UTF8String): UTF8String =
-    if (b != null && better(b, a)) b else a
-
-  override def eval(buf: UTF8String): Any = buf
-
-  /** 1-byte presence prefix: an all-null group's buffer must round-trip
-    * distinguishably from an empty string. */
-  override def serialize(buf: UTF8String): Array[Byte] =
-    if (buf == null) Array.emptyByteArray
-    else {
-      val b = buf.getBytes
-      val out = new Array[Byte](b.length + 1)
-      out(0) = 1
-      System.arraycopy(b, 0, out, 1, b.length)
-      out
-    }
-
-  override def deserialize(bytes: Array[Byte]): UTF8String =
-    if (bytes.isEmpty) null
-    else UTF8String.fromBytes(bytes, 1, bytes.length - 1)
-
-  override def withNewMutableAggBufferOffset(o: Int): StringMinMax =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): StringMinMax =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): StringMinMax =
-    copy(child = c)
-}
-
-object StringArgMinMax {
-  /** Mutable buffer: `set` false ⇔ no non-null ordering seen yet. */
-  final class Buf(var set: Boolean, var ord: Any, var value: UTF8String)
-
-  /** Ordering types the typed path handles; anything else falls back to
-    * the builtin (decimals, intervals, complex types). */
-  def supportedOrd(dt: DataType): Boolean = dt match {
-    case LongType | TimestampType | TimestampNTZType | IntegerType |
-         DateType | ShortType | ByteType | DoubleType | FloatType |
-         BooleanType | StringType => true
-    case _ => false
-  }
-}
-
-/** max_by/min_by with a STRING value column as a
-  * [[TypedImperativeAggregate]] (r20): the declarative MaxBy/MinBy carry
-  * the running value in the buffer row, so a string value demotes the
-  * whole aggregation to SortAggregate (see [[StringMinMax]]). Semantics
-  * mirror the builtin exactly where deterministic: rows whose ordering
-  * is NULL are skipped, strict comparison keeps the FIRST best within a
-  * partition and the LEFT buffer on merge ties, double/float ordering
-  * uses Spark's SQL comparator (NaN greatest, -0.0 == 0.0), strings
-  * compare binary. (The builtin's only divergence is the
-  * all-NULL-ordering group, where it answers a partition-order-dependent
-  * arbitrary value; this answers NULL, which is also what DuckDB's
-  * arg_max does — no oracle-checked query can depend on the builtin's
-  * nondeterministic answer.) */
-case class StringArgMinMax(
-    valueExpr: Expression,
-    ordExpr: Expression,
+  * The one dispatch rule, in [[ChMinOrMax]] and [[ChMaxMinBy]] (the
+  * functions registered under the SQL names): use the builtin exactly
+  * when `Aggregate.supportsHashAggregate` accepts its buffer (the
+  * predicate the planner and `SplitDistinctAggregate.heavy` use), and
+  * [[TypedMinMax]] otherwise. Fixed-width types keep the codegen'd
+  * HashAggregate; variable-width ones plan ObjectHashAggregate, which
+  * past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+  * (128) keys in a task sorts the rest of that task's input — partial
+  * aggregation still happens before the shuffle. */
+case class TypedMinMax(
+    children: Seq[Expression],
     isMax: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[StringArgMinMax.Buf]
-  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
+  extends TypedImperativeAggregate[TypedMinMax.Buf] {
 
-  import StringArgMinMax.Buf
+  import TypedMinMax.Buf
 
-  override def left: Expression = valueExpr
-  override def right: Expression = ordExpr
+  // children: Seq(x) for min/max (x is ordering and value, evaluated
+  // once), Seq(value, ordering) for min_by/max_by
+  private def byValue: Boolean = children.size == 2
+  private def ordExpr: Expression = children.last
+
   override def nullable: Boolean = true
-  override def dataType: DataType = valueExpr.dataType
-  override def prettyName: String = if (isMax) "max_by" else "min_by"
-
-  private val ordType = ordExpr.dataType
+  override def dataType: DataType = children.head.dataType
+  override def prettyName: String =
+    (if (isMax) "max" else "min") + (if (byValue) "_by" else "")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (StringArgMinMax.supportedOrd(ordType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName string path: unsupported ordering type ${ordType.simpleString}")
+    TypeUtils.checkForOrderingExpr(ordExpr.dataType, prettyName)
 
-  private def cmp(a: Any, b: Any): Int = ordType match {
-    case LongType | TimestampType | TimestampNTZType =>
-      java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    case IntegerType | DateType =>
-      java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-    case ShortType =>
-      java.lang.Short.compare(a.asInstanceOf[Short], b.asInstanceOf[Short])
-    case ByteType =>
-      java.lang.Byte.compare(a.asInstanceOf[Byte], b.asInstanceOf[Byte])
-    case DoubleType =>
-      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(
-        a.asInstanceOf[Double], b.asInstanceOf[Double])
-    case FloatType =>
-      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareFloats(
-        a.asInstanceOf[Float], b.asInstanceOf[Float])
-    case BooleanType =>
-      java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-    case StringType =>
-      a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-    case other => throw new IllegalStateException(
-      s"unreachable: unsupported ordering type $other")
+  // Spark's interpreted ordering for the type, the one the builtins
+  // compare with: NaN greatest, -0.0 == 0.0, struct/array ordering,
+  // collations
+  @transient private lazy val ordering = TypeUtils.getInterpretedOrdering(ordExpr.dataType)
+
+  /** Does `cand` replace `cur`? Ties follow the builtin each form
+    * stands in for: Least/Greatest keep the earlier value, MinBy/MaxBy
+    * take the later one. */
+  private def replaces(cand: Any, cur: Any): Boolean = {
+    val c = ordering.compare(cand, cur)
+    if (c == 0) byValue else if (isMax) c > 0 else c < 0
   }
 
-  private def better(cand: Any, cur: Any): Boolean =
-    if (isMax) cmp(cand, cur) > 0 else cmp(cand, cur) < 0
-
-  override def createAggregationBuffer(): Buf = new Buf(false, null, null)
+  override def createAggregationBuffer(): Buf = new Buf(null, null)
 
   override def update(buf: Buf, input: InternalRow): Buf = {
     val o = ordExpr.eval(input)
-    if (o != null && (!buf.set || better(o, buf.ord))) {
-      buf.set = true
-      buf.ord = o match { // ord may point into a reused row buffer
-        case s: UTF8String => s.clone()
-        case other => other
-      }
-      val v = valueExpr.eval(input).asInstanceOf[UTF8String]
-      buf.value = if (v == null) null else v.clone()
+    // rows with a NULL ordering are skipped; copies, because the input
+    // values may point into a reused row buffer
+    if (o != null && (buf.ord == null || replaces(o, buf.ord))) {
+      buf.ord = InternalRow.copyValue(o)
+      buf.value =
+        if (byValue) InternalRow.copyValue(children.head.eval(input)) else buf.ord
     }
     buf
   }
 
   override def merge(a: Buf, b: Buf): Buf =
-    if (b.set && (!a.set || better(b.ord, a.ord))) b else a
+    if (b.ord != null && (a.ord == null || replaces(b.ord, a.ord))) b else a
 
-  override def eval(buf: Buf): Any = if (buf.set) buf.value else null
+  override def eval(buf: Buf): Any = buf.value
+
+  // the buffer as one unsafe row of the children's values, in order
+  @transient private lazy val toRow = UnsafeProjection.create(children.map(_.dataType).toArray)
 
   override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeBoolean(buf.set)
-    if (buf.set) {
-      ordType match {
-        case LongType | TimestampType | TimestampNTZType =>
-          out.writeLong(buf.ord.asInstanceOf[Long])
-        case IntegerType | DateType => out.writeInt(buf.ord.asInstanceOf[Int])
-        case ShortType => out.writeShort(buf.ord.asInstanceOf[Short].toInt)
-        case ByteType => out.writeByte(buf.ord.asInstanceOf[Byte].toInt)
-        case DoubleType => out.writeDouble(buf.ord.asInstanceOf[Double])
-        case FloatType => out.writeFloat(buf.ord.asInstanceOf[Float])
-        case BooleanType => out.writeBoolean(buf.ord.asInstanceOf[Boolean])
-        case StringType =>
-          val b = buf.ord.asInstanceOf[UTF8String].getBytes
-          out.writeInt(b.length); out.write(b)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
-      if (buf.value == null) out.writeInt(-1)
-      else {
-        val b = buf.value.getBytes
-        out.writeInt(b.length); out.write(b)
-      }
-    }
-    out.flush()
-    bos.toByteArray
+    val fields: Array[Any] = if (byValue) Array(buf.value, buf.ord) else Array(buf.ord)
+    toRow(new GenericInternalRow(fields)).copy().getBytes
   }
 
   override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val set = in.readBoolean()
-    if (!set) new Buf(false, null, null)
-    else {
-      val ord: Any = ordType match {
-        case LongType | TimestampType | TimestampNTZType => in.readLong()
-        case IntegerType | DateType => in.readInt()
-        case ShortType => in.readShort()
-        case ByteType => in.readByte()
-        case DoubleType => in.readDouble()
-        case FloatType => in.readFloat()
-        case BooleanType => in.readBoolean()
-        case StringType =>
-          val n = in.readInt(); val b = new Array[Byte](n)
-          in.readFully(b); UTF8String.fromBytes(b)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
-      val vn = in.readInt()
-      val value =
-        if (vn < 0) null
-        else { val b = new Array[Byte](vn); in.readFully(b); UTF8String.fromBytes(b) }
-      new Buf(true, ord, value)
-    }
+    val row = new UnsafeRow(children.size)
+    row.pointTo(bytes, bytes.length)
+    val ord = row.get(children.size - 1, ordExpr.dataType)
+    new Buf(ord, if (byValue) row.get(0, dataType) else ord)
   }
 
-  override def withNewMutableAggBufferOffset(o: Int): StringArgMinMax =
+  override def withNewMutableAggBufferOffset(o: Int): TypedMinMax =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): StringArgMinMax =
+  override def withNewInputAggBufferOffset(o: Int): TypedMinMax =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): StringArgMinMax =
-    copy(valueExpr = l, ordExpr = r)
+      c: IndexedSeq[Expression]): TypedMinMax =
+    copy(children = c)
 }
 
-object StringArgMinMaxDispatch {
-  private[functions] def supported(value: Expression, ord: Expression): Boolean =
-    (value.dataType match {
-      case StringType => true
-      case _ => false
-    }) && StringArgMinMax.supportedOrd(ord.dataType)
+object TypedMinMax {
+  /** `ord == null` ⇔ no non-null ordering seen yet (value is then NULL). */
+  final class Buf(var ord: Any, var value: Any)
+
+  /** The builtin when its buffer is hash-aggregable, else [[TypedMinMax]]. */
+  private[functions] def dispatch(
+      builtin: DeclarativeAggregate, typed: => TypedMinMax): AggregateFunction =
+    if (Aggregate.supportsHashAggregate(builtin.aggBufferAttributes, Nil)) builtin
+    else typed
 }
 
-/** SQL-name dispatch for `max_by`/`min_by`: string values with an
-  * atomic ordering route to [[StringArgMinMax]], everything else to the
-  * builtin MaxBy/MinBy unchanged. */
+/** SQL-name dispatch for `max_by`/`min_by`, see [[TypedMinMax]]. */
 case class ChMaxMinBy(valueExpr: Expression, ordExpr: Expression, isMax: Boolean)
   extends AggregateFunction with RuntimeReplaceableAggregate
-  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
+  with BinaryLike[Expression] {
 
-  override lazy val replacement: Expression =
-    if (StringArgMinMaxDispatch.supported(valueExpr, ordExpr))
-      StringArgMinMax(valueExpr, ordExpr, isMax)
-    else if (isMax)
-      org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy(valueExpr, ordExpr)
-    else
-      org.apache.spark.sql.catalyst.expressions.aggregate.MinBy(valueExpr, ordExpr)
+  override lazy val replacement: Expression = TypedMinMax.dispatch(
+    if (isMax) MaxBy(valueExpr, ordExpr) else MinBy(valueExpr, ordExpr),
+    TypedMinMax(Seq(valueExpr, ordExpr), isMax))
 
   override def left: Expression = valueExpr
   override def right: Expression = ordExpr
@@ -279,33 +132,29 @@ case class ChMaxMinBy(valueExpr: Expression, ordExpr: Expression, isMax: Boolean
   override def prettyName: String = if (isMax) "max_by" else "min_by"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    org.apache.spark.sql.catalyst.util.TypeUtils.checkForOrderingExpr(
-      ordExpr.dataType, prettyName)
+    TypeUtils.checkForOrderingExpr(ordExpr.dataType, prettyName)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): ChMaxMinBy =
     copy(valueExpr = l, ordExpr = r)
 }
 
-/** SQL-name dispatch for `min`/`max`: see [[StringMinMax]]. Resolves to
-  * the builtin for every type except default-collation strings, so
-  * semantics, result types and error behavior are unchanged. */
+/** SQL-name dispatch for `min`/`max`, see [[TypedMinMax]]: result
+  * types and error behavior are the builtin's. */
 case class ChMinOrMax(child: Expression, isMin: Boolean)
   extends AggregateFunction with RuntimeReplaceableAggregate
   with UnaryLike[Expression] {
 
-  override lazy val replacement: Expression = child.dataType match {
-    case StringType => StringMinMax(child, isMin)
-    case _ => if (isMin) Min(child) else Max(child)
-  }
+  override lazy val replacement: Expression = TypedMinMax.dispatch(
+    if (isMin) Min(child) else Max(child),
+    TypedMinMax(Seq(child), isMax = !isMin))
 
   override def nullable: Boolean = true
   override def dataType: DataType = child.dataType
   override def prettyName: String = if (isMin) "min" else "max"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    org.apache.spark.sql.catalyst.util.TypeUtils.checkForOrderingExpr(
-      child.dataType, prettyName)
+    TypeUtils.checkForOrderingExpr(child.dataType, prettyName)
 
   override protected def withNewChildInternal(c: Expression): ChMinOrMax =
     copy(child = c)

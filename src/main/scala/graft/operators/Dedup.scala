@@ -264,11 +264,12 @@ object Dedup {
     // no driver round-trip, no sort of the wide arrays.
     sides.join(sets.hint("shuffle_hash"), "doc_id")
       .groupBy("doc_a", "doc_b")
+      // each pair regroups exactly its two sides and doc_a < doc_b, so
+      // the lower doc id's set is a's; the registered min_by/max_by keep
+      // the array-valued pick hash-aggregable (graft.functions.TypedMinMax)
       .agg(
-        first(when(col("doc_id") === col("doc_a"), col("sset")),
-          ignoreNulls = true).as("sa"),
-        first(when(col("doc_id") === col("doc_b"), col("sset")),
-          ignoreNulls = true).as("sb"))
+        call_function("min_by", col("sset"), col("doc_id")).as("sa"),
+        call_function("max_by", col("sset"), col("doc_id")).as("sb"))
       .select(col("doc_a"), col("doc_b"),
         round(size(array_intersect(col("sa"), col("sb"))).cast("double") /
           size(array_union(col("sa"), col("sb"))), 6).as("jaccard"))

@@ -30,15 +30,17 @@ object Embeddings {
       .agg(array_sort(collect_list(struct(col("pos"), col("cx")))).as("pairs"))
       .select(col("label"),
         expr("transform(pairs, p -> p.cx)").as("centroid"))
+      // one norm per label, computed here so the per-member regroup
+      // below keys on it instead of carrying the centroid array
+      .withColumn("centroid_norm", round(sqrt(expr(
+        "aggregate(transform(centroid, x -> x * x), 0D, (a, x) -> a + x)")), 6))
 
     e.join(centroids, "label")
-      .groupBy("label")
+      .groupBy("label", "centroid_norm")
       .agg(
         count(lit(1)).as("n_vectors"),
-        round(sqrt(expr(
-          "aggregate(transform(first(centroid), x -> x * x), 0D, (a, x) -> a + x)")), 6)
-          .as("centroid_norm"),
         (round(avg(expr("cosineSimilarity(v, centroid)")), 6) + lit(0)).as("cohesion"))
+      .select("label", "n_vectors", "centroid_norm", "cohesion")
       .orderBy("label")
   }
 

@@ -6,20 +6,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.catalog.{ColumnInfo, GraftCatalog, TableInfo}
+import graft.catalog.{ColumnInfo, GraftCatalog, TableInfo, TablePage}
 
 /** Minimal JSON rendering for the served catalog payloads. */
 private object Json {
-  def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  def str(s: String): String = "\"" + esc(s) + "\""
+  def str(s: String): String = "\"" + graft.sql.QueryResult.esc(s) + "\""
   def opt(o: Option[String]): String = o.map(str).getOrElse("null")
   def arr(items: Seq[String]): String = items.mkString("[", ", ", "]")
 
@@ -38,6 +29,15 @@ private object Json {
       s""""parts": ${t.parts}, "active_parts": ${t.activeParts}, """ +
       s""""total_marks": ${t.totalMarks}, "comment": ${opt(t.comment)}, """ +
       s""""columns": ${arr(t.columns.map(column))}}"""
+
+  /** One `list_tables` page, as `/tables` and MCP `list_tables` serve it. */
+  def tablesPage(page: TablePage): String =
+    s"""{"tables": ${arr(page.tables.map(table))}, """ +
+      s""""next_page_token": ${opt(page.nextPageToken)}, """ +
+      s""""total_tables": ${page.totalTables}}"""
+
+  def error(message: String): String =
+    s"""{"status": "error", "message": ${str(message)}}"""
 }
 
 /** The served surface of the engine, with the reference's contracts:
@@ -126,18 +126,13 @@ object HealthServer {
 
     executor.foreach { exec =>
       server.createContext(prefix + "/query", (exchange: HttpExchange) => {
+        val p = params(exchange)
         val sql =
           if (exchange.getRequestMethod == "POST")
             new String(exchange.getRequestBody.readAllBytes(), UTF_8)
-          else // GET ?q=<urlencoded sql>
-            Option(exchange.getRequestURI.getRawQuery).getOrElse("")
-              .split('&').collectFirst {
-                case p if p.startsWith("q=") =>
-                  java.net.URLDecoder.decode(p.drop(2), UTF_8)
-              }.getOrElse("")
+          else p.getOrElse("q", "") // GET ?q=<urlencoded sql>
         if (sql.trim.isEmpty)
-          respond(exchange, 400,
-            """{"status": "error", "message": "empty query"}""", json = true)
+          respond(exchange, 400, Json.error("empty query"), json = true)
         else exec.runSafe(sql) match {
           // ?format=<name> selects the CH output format by its CH
           // spelling (case-insensitive): CSV[WithNames], JSONEachRow,
@@ -146,7 +141,7 @@ object HealthServer {
           case Right(result) =>
             // a ?format= parameter wins; otherwise the statement's own
             // trailing FORMAT clause selects, like CH over HTTP
-            val fmt = params(exchange).get("format")
+            val fmt = p.get("format")
               .orElse(graft.sql.QueryGuard.trailingFormat(sql))
               .map(_.toLowerCase).getOrElse("json")
             fmt match {
@@ -169,9 +164,7 @@ object HealthServer {
               case _ => respond(exchange, 200, result.toJson, json = true)
             }
           case Left(message) =>
-            respond(exchange, 400,
-              s"""{"status": "error", "message": ${Json.str(message)}}""",
-              json = true)
+            respond(exchange, 400, Json.error(message), json = true)
         }
       })
 
@@ -183,14 +176,11 @@ object HealthServer {
             new String(exchange.getRequestBody.readAllBytes(), UTF_8)
           else params(exchange).getOrElse("q", "")
         if (sql.trim.isEmpty)
-          respond(exchange, 400,
-            """{"status": "error", "message": "empty query"}""", json = true)
+          respond(exchange, 400, Json.error("empty query"), json = true)
         else exec.explainSafe(sql) match {
           case Right(plan) => respond(exchange, 200, plan, json = false)
           case Left(message) =>
-            respond(exchange, 400,
-              s"""{"status": "error", "message": ${Json.str(message)}}""",
-              json = true)
+            respond(exchange, 400, Json.error(message), json = true)
         }
       })
     }
@@ -213,15 +203,11 @@ object HealthServer {
             pageSize = p.get("page_size").map(_.toInt).getOrElse(50),
             includeDetailedColumns =
               p.get("include_detailed_columns").forall(_ == "true"))
-          respond(exchange, 200,
-            s"""{"tables": ${Json.arr(page.tables.map(Json.table))}, """ +
-              s""""next_page_token": ${Json.opt(page.nextPageToken)}, """ +
-              s""""total_tables": ${page.totalTables}}""", json = true)
+          respond(exchange, 200, Json.tablesPage(page), json = true)
         } catch {
           case e: Exception =>
             respond(exchange, 400,
-              s"""{"status": "error", "message": ${Json.str(
-                Option(e.getMessage).getOrElse(e.toString))}}""", json = true)
+              Json.error(Option(e.getMessage).getOrElse(e.toString)), json = true)
         }
       })
     }
@@ -232,8 +218,7 @@ object HealthServer {
     // reference user actually connects through (mcp_server.py:596-616)
     server.createContext(prefix + "/mcp", (exchange: HttpExchange) => {
       if (exchange.getRequestMethod != "POST")
-        respond(exchange, 405,
-          """{"status": "error", "message": "MCP requires POST"}""", json = true)
+        respond(exchange, 405, Json.error("MCP requires POST"), json = true)
       else {
         val body = new String(exchange.getRequestBody.readAllBytes(), UTF_8)
         val (code, out) = Mcp.handle(body, spark, config, executor, catalog)
@@ -270,15 +255,12 @@ object HealthServer {
 
       server.createContext(prefix + "/sse", (exchange: HttpExchange) => {
         if (exchange.getRequestMethod != "GET")
-          respond(exchange, 405,
-            """{"status": "error", "message": "SSE requires GET"}""", json = true)
+          respond(exchange, 405, Json.error("SSE requires GET"), json = true)
         else if (sessions.size >= sseMax) {
           // slots free when a stream's keep-alive probe (500 ms) hits
           // the closed client — tell well-behaved clients when to retry
           exchange.getResponseHeaders.set("Retry-After", "5")
-          respond(exchange, 503,
-            """{"status": "error", "message": "too many SSE sessions"}""",
-            json = true)
+          respond(exchange, 503, Json.error("too many SSE sessions"), json = true)
         }
         else {
           val sid = java.util.UUID.randomUUID().toString
@@ -318,16 +300,12 @@ object HealthServer {
 
       server.createContext(prefix + "/messages", (exchange: HttpExchange) => {
         if (exchange.getRequestMethod != "POST")
-          respond(exchange, 405,
-            """{"status": "error", "message": "messages requires POST"}""",
-            json = true)
+          respond(exchange, 405, Json.error("messages requires POST"), json = true)
         else {
           val sid = params(exchange).getOrElse("session_id", "")
           val queue = sessions.get(sid)
           if (queue == null)
-            respond(exchange, 404,
-              """{"status": "error", "message": "unknown session_id"}""",
-              json = true)
+            respond(exchange, 404, Json.error("unknown session_id"), json = true)
           else {
             val body = new String(exchange.getRequestBody.readAllBytes(), UTF_8)
             val (_, out) = Mcp.handle(body, spark, config, executor, catalog)

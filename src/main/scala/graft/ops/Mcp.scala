@@ -149,9 +149,6 @@ object Mcp {
     res
   }
 
-  private def errorBody(message: String): String =
-    s"""{"status": "error", "message": ${Json.str(message)}}"""
-
   private def rpcError(id: JsonNode, code: Int, message: String): String = {
     val env = obj().put("jsonrpc", "2.0")
     if (id == null) env.putNull("id") else env.set[ObjectNode]("id", id)
@@ -314,7 +311,7 @@ object Mcp {
     name match {
       case "list_databases" =>
         catalog match {
-          case None => Right(toolResult(errorBody("catalog is not mounted"), isError = true))
+          case None => Right(toolResult(Json.error("catalog is not mounted"), isError = true))
           case Some(cat) =>
             val names = cat.listDatabases(
               patterns(args, "like"), patterns(args, "not_like"))
@@ -323,7 +320,7 @@ object Mcp {
 
       case "list_tables" =>
         catalog match {
-          case None => Right(toolResult(errorBody("catalog is not mounted"), isError = true))
+          case None => Right(toolResult(Json.error("catalog is not mounted"), isError = true))
           case Some(cat) =>
             try {
               val page = cat.listTables(
@@ -338,15 +335,11 @@ object Mcp {
                 includeDetailedColumns =
                   Option(args.get("include_detailed_columns"))
                     .forall(_.asBoolean(true)))
-              Right(toolResult(
-                s"""{"tables": ${Json.arr(page.tables.map(Json.table))}, """ +
-                  s""""next_page_token": ${Json.opt(page.nextPageToken)}, """ +
-                  s""""total_tables": ${page.totalTables}}""",
-                isError = false))
+              Right(toolResult(Json.tablesPage(page), isError = false))
             } catch {
               case e: Exception =>
                 Right(toolResult(
-                  errorBody(Option(e.getMessage).getOrElse(e.toString)),
+                  Json.error(Option(e.getMessage).getOrElse(e.toString)),
                   isError = true))
             }
         }
@@ -357,16 +350,16 @@ object Mcp {
 
       case "run_select_query" | "run_chdb_select_query" =>
         executor match {
-          case None => Right(toolResult(errorBody("executor is not mounted"), isError = true))
+          case None => Right(toolResult(Json.error("executor is not mounted"), isError = true))
           case Some(exec) =>
             val sql = Option(args.get("query")).map(_.asText()).getOrElse("")
             if (sql.trim.isEmpty)
-              Right(toolResult(errorBody("empty query"), isError = true))
+              Right(toolResult(Json.error("empty query"), isError = true))
             else exec.runSafe(sql) match {
               case Right(result) =>
                 Right(toolResult(result.toJson, isError = false))
               case Left(message) =>
-                Right(toolResult(errorBody(message), isError = true))
+                Right(toolResult(Json.error(message), isError = true))
             }
         }
 

@@ -18,11 +18,14 @@ import AsOfText.{idPart, splitAnd, stripTicks}
   * one), bind it as a statement fragment in the placeholder's place
   * and plan the rewritten statement — the join itself
   * stays in the statement, so any select list, WHERE, or GROUP BY
-  * composes unchanged. The dedup is a mergeable `min(struct(*))`
-  * partial aggregate, NOT a per-key window: partial aggregation
-  * combines map-side, so a skewed join key (one hot key with 10^8
-  * right rows at 100 TB) contributes one candidate row per map task
-  * instead of funnelling every row through a single reducer's sort.
+  * composes unchanged. The dedup is a `min(struct(*))` aggregate,
+  * NOT a per-key window. The registered `min` plans it as
+  * ObjectHashAggregate (see [[graft.functions.TypedMinMax]]), which
+  * partial-aggregates before the shuffle, so a hot join key sends at
+  * most one candidate row per map task to its reducer. A task that
+  * meets more than 128 keys sorts the rest of its input
+  * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`) but
+  * still emits one partial row per key.
   *
   * Join keys come from the ON clause's equalities; every depth-0
   * conjunct MUST be a simple `a = b` column equality (anything else is
@@ -241,17 +244,15 @@ object AnyJoinText {
             s"${sideDf.columns.mkString(", ")})")
       }
     }.distinct
-    // keep the lexicographically-smallest row per key via a MERGEABLE
-    // min(struct(*)) partial aggregate (CH allows any row; we pick a
-    // deterministic one so runs and oracles agree). Struct ordering
-    // compares fields in column order, so this selects the same
-    // survivor as a full-row sort — but partial-aggregates map-side,
-    // so a skewed key sees one candidate per map task instead of
-    // funnelling every row through one reducer's sort (the trap a
-    // per-key row_number window would reintroduce).
+    // keep the lexicographically-smallest row per key (CH allows any
+    // row; we pick a deterministic one so runs and oracles agree).
+    // Struct ordering compares fields in column order, so this selects
+    // the same survivor as a full-row sort. The registered `min` keeps
+    // the struct aggregate hash-based and partial (see the scaladoc),
+    // unlike a per-key row_number window or the builtin Min.
     val deduped = sideDf
       .groupBy(keys.map(col): _*)
-      .agg(min(struct(sideDf.columns.toIndexedSeq.map(col): _*))
+      .agg(call_function("min", struct(sideDf.columns.toIndexedSeq.map(col): _*))
         .as("__graft_any_row"))
       .select(col("__graft_any_row.*"))
     rewritten.replace(Marker, b.add("any", deduped))

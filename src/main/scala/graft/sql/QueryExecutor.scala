@@ -132,7 +132,7 @@ final case class QueryResult(
 }
 
 object QueryResult {
-  private[sql] def esc(s: String): String = s.flatMap {
+  private[graft] def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

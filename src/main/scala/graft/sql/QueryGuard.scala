@@ -106,14 +106,6 @@ object QueryGuard {
     Some(text.linesIterator.toSeq.toDF("explain"))
   }
 
-  /** The served renames (length/rand/round/digests/char → *CH, see
-    * [[rewriteDigestNames]]) leak into AUTO-GENERATED column names —
-    * an unaliased `SELECT round(x, 2)` or an APPLY-expanded
-    * `round(sum(q) / 100, 2)` would surface as `roundCH(...)`, a
-    * schema-level divergence from what CH names the column. Restore
-    * the pasted spelling in the result schema (aliased columns are
-    * untouched — the rename token can only appear in a name the
-    * ENGINE generated from the rewritten text). */
   /** Rename tokens the dialect layer serves under *CH spellings (to
     * avoid shadowing Spark builtins) and restores in result column
     * names. private[sql] so RegistryHygieneSpec can assert every token
@@ -123,6 +115,14 @@ object QueryGuard {
     "randCH(", "charCH(", "roundCH(", "dateDiffCH(", "dateAddCH(",
     "hexCH(", "binCH(", "nowCH(")
 
+  /** The served renames (length/rand/round/digests/char → *CH, see
+    * [[rewriteDigestNames]]) leak into AUTO-GENERATED column names —
+    * an unaliased `SELECT round(x, 2)` or an APPLY-expanded
+    * `round(sum(q) / 100, 2)` would surface as `roundCH(...)`, a
+    * schema-level divergence from what CH names the column. Restore
+    * the pasted spelling in the result schema (aliased columns are
+    * untouched — the rename token can only appear in a name the
+    * ENGINE generated from the rewritten text). */
   private def restoreRenamedNames(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val renamed = renamedNameTokens

@@ -29,18 +29,18 @@ object TableEnv {
       cat.systemColumns.createOrReplaceTempView("system_columns")
       cat.systemFunctions.createOrReplaceTempView("system_functions")
       cat.systemParts.createOrReplaceTempView("system_parts")
-      // CH's constant/generator system tables, for pasted dotted
-      // references (QueryGuard rewrites `system.one` → `system_one`):
-      // system.one is the 1-row dummy source; system.numbers is the
-      // unbounded counter — a Range LEAF, so a LIMIT takes only the
-      // rows it needs and a full scan is the same user error (bounded
-      // here by the executor timeout) it is on ClickHouse
       // the live ops slice (processes/query_log/metrics — registered
       // here so SHOW TABLES and system.tables list them, refreshed
       // again only by a statement that reads them, see QueryLog) and
       // its static companions
       QueryLog.refresh(spark)
       QueryLog.registerStatic(spark, dir)
+      // CH's constant/generator system tables, for pasted dotted
+      // references (QueryGuard rewrites `system.one` → `system_one`):
+      // system.one is the 1-row dummy source; system.numbers is the
+      // unbounded counter — a Range LEAF, so a LIMIT takes only the
+      // rows it needs and a full scan is the same user error (bounded
+      // here by the executor timeout) it is on ClickHouse
       import org.apache.spark.sql.functions.lit
       spark.range(1).select(lit(0).cast("tinyint").as("dummy"))
         .createOrReplaceTempView("system_one")

@@ -11,7 +11,7 @@ class OptR20Spec extends SparkSpec {
 
   private lazy val s = { CHFunctions.register(spark); spark }
 
-  // ---- StringMinMax: min/max over strings, hash-aggregated ----
+  // ---- TypedMinMax: min/max over strings, hash-aggregated ----
 
   test("string min/max match the sort-derived truth, per group and global") {
     val rows = s.sql(
@@ -45,7 +45,7 @@ class OptR20Spec extends SparkSpec {
     assert(phys.contains("HashAggregate") && !phys.contains("ObjectHashAggregate"))
   }
 
-  // ---- StringArgMinMax: max_by/min_by with a string value ----
+  // ---- TypedMinMax: max_by/min_by with a string value ----
 
   test("string max_by/min_by match the builtin on unique orderings") {
     val q =

@@ -165,6 +165,20 @@ class HealthSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("a malformed percent-escape is answered with a 400, not a dropped connection") {
+    graft.sql.TableEnv.register(spark, sf)
+    val exec = new graft.sql.QueryExecutor(spark, timeoutSec = 60)
+    val cat = new graft.catalog.GraftCatalog(spark, sf)
+    val srv = HealthServer.start(spark, GraftConfig(Map.empty), Some(exec), Some(cat))
+    try {
+      // the JDK server rejects the request URI before any handler runs,
+      // so parameter decoding never sees a malformed escape
+      for (path <- Seq("/databases?like=%zz", "/tables?like=%", "/query?q=%",
+          "/query?q=SELECT%201&format=%g", "/explain?q=%"))
+        assert(httpGet(s"http://localhost:${srv.port}$path")._1 == 400, path)
+    } finally { srv.close(); exec.close() }
+  }
+
   test("config reads SPARK_GRAFT_* envs with reference defaults") {
     val dflt = GraftConfig(Map.empty)
     assert(dflt.enabled && dflt.queryTimeoutSec == 30 && dflt.poolSize == 10)
