@@ -38,7 +38,8 @@ final case class GraftConfig(env: Map[String, String] = sys.env) {
     * semantics applied to query execution). */
   def queryTimeoutSec: Int = int("QUERY_TIMEOUT_SEC", 30)
 
-  /** Bounded executor pool size (reference: max_workers=10). */
+  /** Pool size (reference: max_workers=10): the served path's handler
+    * threads, and the executor's query pool it builds. */
   def poolSize: Int = int("POOL_SIZE", 10)
 
   /** Result row cap for the SQL executor. */

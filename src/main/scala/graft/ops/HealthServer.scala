@@ -54,9 +54,10 @@ private object Json {
   *    "message": ...}` on 400 — guard violations and analysis errors
   *    are responses, never crashes.
   *
-  * Uses the JDK's built-in HTTP server — no extra dependency. Query
-  * concurrency is bounded by the executor's own pool, not the HTTP
-  * layer.
+  * Uses the JDK's built-in HTTP server — no extra dependency. Each
+  * request holds one handler thread until its reply is written, so
+  * the handler pool (`SPARK_GRAFT_POOL_SIZE` threads) bounds served
+  * concurrency; requests past it queue in the server.
   */
 final class HealthServer private (
     server: HttpServer,
@@ -78,6 +79,10 @@ object HealthServer {
       config: GraftConfig = GraftConfig(),
       executor: Option[graft.sql.QueryExecutor] = None,
       catalog: Option[GraftCatalog] = None): HealthServer = {
+    // `respond` writes headers and body separately; with Nagle on, the
+    // body of a keep-alive reply waits for the client's delayed ACK
+    // (~40 ms). The JDK server reads this once, at its first create.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(
       new InetSocketAddress(config.bindHost, config.healthPort), 0)
 
@@ -321,14 +326,15 @@ object HealthServer {
     server.createContext(prefix + "/prompt", (exchange: HttpExchange) =>
       respond(exchange, 200, GuidePrompt.Text, json = false))
 
-    // a small daemon pool so a long /query can never block /health (or
-    // other endpoints) on the dispatcher thread; real query concurrency
-    // is still bounded by the executor's own pool
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8, r => {
-      val t = new Thread(r, "graft-http")
-      t.setDaemon(true)
-      t
-    })
+    // handler threads, off the dispatcher thread so a long /query
+    // cannot stall accepting; a served query holds its thread while it
+    // runs, so this pool is the served path's concurrency bound
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, config.poolSize), r => {
+        val t = new Thread(r, "graft-http")
+        t.setDaemon(true)
+        t
+      })
     server.setExecutor(pool)
     server.start()
     new HealthServer(server, pool)

@@ -269,9 +269,7 @@ object AnyJoinText {
     var dot = -1
     while (i < op.length && dot < 0) {
       op.charAt(i) match {
-        case '`' =>
-          val close = op.indexOf('`', i + 1)
-          i = if (close < 0) op.length else close + 1
+        case '`' => i = QueryGuard.skipQuoted(op, i)
         case '.' => dot = i
         case _ => i += 1
       }

@@ -175,17 +175,17 @@ object QueryGuard {
     // CH-shaped SHOW TABLES / SHOW DATABASES: ONE `name` column
     // (Spark's native shapes carry namespace/tableName/isTemporary),
     // with CH's optional [NOT] [I]LIKE and LIMIT tails, sorted by name
-    val showTables = ("(?is)^SHOW\\s+TABLES(?:\\s+FROM\\s+([`\\w.]+))?" +
-      "(?:\\s+(NOT\\s+)?(I?)LIKE\\s+'([^']*)')?(?:\\s+LIMIT\\s+(\\d+))?$").r
-    val showDbs = ("(?is)^SHOW\\s+DATABASES" +
-      "(?:\\s+(NOT\\s+)?(I?)LIKE\\s+'([^']*)')?(?:\\s+LIMIT\\s+(\\d+))?$").r
+    val likeLimit = "(?:\\s+(NOT\\s+)?(I?)LIKE\\s+'((?:[^'\\\\]|''|\\\\.)*)')?" +
+      "(?:\\s+LIMIT\\s+(\\d+))?$"
+    val showTables =
+      ("(?is)^SHOW\\s+TABLES(?:\\s+FROM\\s+([`\\w.]+))?" + likeLimit).r
+    val showDbs = ("(?is)^SHOW\\s+DATABASES" + likeLimit).r
     // CH's SHOW FUNCTIONS / SHOW SETTINGS / SHOW PROCESSLIST serve
     // from the system.* surface (Spark's SHOW FUNCTIONS shape lists
     // builtins in a `function` column; CH users expect `name`)
-    val showFns = ("(?is)^SHOW\\s+FUNCTIONS" +
-      "(?:\\s+(NOT\\s+)?(I?)LIKE\\s+'([^']*)')?(?:\\s+LIMIT\\s+(\\d+))?$").r
-    val showSettings = ("(?is)^SHOW\\s+(?:CHANGED\\s+)?SETTINGS" +
-      "(?:\\s+(NOT\\s+)?(I?)LIKE\\s+'([^']*)')?(?:\\s+LIMIT\\s+(\\d+))?$").r
+    val showFns = ("(?is)^SHOW\\s+FUNCTIONS" + likeLimit).r
+    val showSettings =
+      ("(?is)^SHOW\\s+(?:CHANGED\\s+)?SETTINGS" + likeLimit).r
     def likeFilter(df: org.apache.spark.sql.DataFrame, not: String,
         i: String, pat: String, limit: String)
         : org.apache.spark.sql.DataFrame = {
@@ -282,17 +282,12 @@ object QueryGuard {
     * statement using neighbor correctly while omitting OVER on a
     * DIFFERENT window function keeps Spark's own error on the real
     * offender. Everything else passes through untouched. */
-  private def neighborWithoutOver(stmt: String): Boolean = {
-    val m = java.util.regex.Pattern.compile("(?i)\\bneighbor\\s*\\(")
-      .matcher(stmt)
-    while (m.find()) {
-      val close = matchParenAt(stmt, m.end - 1)
-      if (close < 0) return true
-      if (!stmt.substring(close + 1).trim.toUpperCase.startsWith("OVER"))
-        return true
+  private def neighborWithoutOver(stmt: String): Boolean =
+    callsOf(stmt, "NEIGHBOR").exists { case (_, open) =>
+      val close = matchParenAt(stmt, open)
+      close < 0 ||
+        !stmt.substring(close + 1).trim.toUpperCase.startsWith("OVER")
     }
-    false
-  }
 
   private def shapeWindowError(stmt: String,
       e: org.apache.spark.sql.AnalysisException): Throwable = {
@@ -405,38 +400,20 @@ object QueryGuard {
         planned.queryExecution.analyzed)))
   }
 
-  /** Depth-0 comma positions of `s` (quote-aware) — comma-FROM lists
-    * are CH cross joins, so they count as a join prefix too. */
-  private def depth0Commas(s: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '\'' | '"' | '`' => i = skipQuoted(s, i) - 1
-        case ',' if depth == 0 => out += i
-        case _ =>
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
   /** Is there a top-level plain JOIN — keyword or comma-list — between
     * the nearest preceding FROM and the ASOF/ANY token at `hit`?
     * (ClickHouse accepts `FROM a JOIN b ON ... ASOF JOIN c ...` and
-    * the comma form; the ASOF extractor needs a single table name on
-    * its left, so the plain prefix must materialize first.) */
+    * the comma form — comma-FROM lists are CH cross joins; the ASOF
+    * extractor needs a single table name on its left, so the plain
+    * prefix must materialize first.) */
   private def joinPrefixBefore(sql: String,
       ts: Vector[(NormTok, Int)], hit: Int): Boolean =
     (0 until hit).reverse.find(j =>
       ts(j)._2 == 0 && ts(j)._1.upper == "FROM").exists { fromAt =>
       (fromAt + 1 until hit).exists(j =>
         ts(j)._2 == 0 && ts(j)._1.upper == "JOIN") ||
-        depth0Commas(
-          sql.substring(ts(fromAt)._1.end, ts(hit)._1.start)).nonEmpty
+        splitTopLevel(
+          sql.substring(ts(fromAt)._1.end, ts(hit)._1.start)).size > 1
     }
 
   /** Materialize the plain-join group between FROM and the ASOF/ANY
@@ -458,11 +435,7 @@ object QueryGuard {
     // later side sits between its JOIN token and the next ON/USING/
     // join keyword. Tokens inside parens carry depth>0, so subquery
     // sides scan as one chunk.
-    val segments = {
-      val cuts = depth0Commas(prefix)
-      (Seq(-1) ++ cuts).zip(cuts ++ Seq(prefix.length))
-        .map { case (a, b) => prefix.substring(a + 1, b).trim }
-    }
+    val segments = splitTopLevel(prefix)
     val cluster = Set("JOIN", "LEFT", "RIGHT", "INNER", "FULL", "CROSS",
       "OUTER", "NATURAL", "SEMI", "ANTI", "ARRAY")
     val stops = cluster ++ Set("ON", "USING")
@@ -666,7 +639,10 @@ object QueryGuard {
 
   /** Index just past the quoted run (string literal or backticked
     * name) that opens at `start`: backslash escapes outside backticks,
-    * doubled quotes; the text's length when the run is unterminated. */
+    * doubled quotes; the text's length when the run is unterminated.
+    * The one rule for where a quoted run ends: every dialect scanner
+    * ([[normalizeScan]], [[matchParenAt]], [[splitTopLevel]], ...)
+    * skips quotes through it. */
   private[sql] def skipQuoted(s: CharSequence, start: Int): Int = {
     val q = s.charAt(start)
     var i = start + 1
@@ -697,6 +673,20 @@ object QueryGuard {
     }
     -1
   }
+
+  /** Index of the '(' directly after token `t` (whitespace between
+    * allowed) — `t` in call position — or -1. */
+  private[sql] def callOpen(s: String, t: NormTok): Int = {
+    val i = s.indexWhere(!_.isWhitespace, t.end)
+    if (i >= 0 && s.charAt(i) == '(') i else -1
+  }
+
+  /** (name start, '(' index) of each call of the function whose
+    * upper-cased name is `upper`, at any depth. */
+  private def callsOf(s: String, upper: String): Seq[(Int, Int)] =
+    normalizeScan(s).collect {
+      case (t, _) if t.upper == upper => (t.start, callOpen(s, t))
+    }.filter(_._2 >= 0)
 
   /** The schema-aware post-plan shims shared by both [[plan]] paths. */
   private def planShimmed(b: Binding, sql: String)
@@ -795,42 +785,30 @@ object QueryGuard {
     ts.indices.foreach { i =>
       val t = ts(i)._1
       if (distributedTvfs.contains(t.upper) && i > 0 &&
-        Set("FROM", "JOIN")(ts(i - 1)._1.upper)) {
-        var j = t.end
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        if (j < sql.length && sql.charAt(j) == '(')
-          throw new ReadOnlyViolation(
-            s"${distributedTvfs(t.upper)} addresses another server or " +
-              "stream, which this engine cannot reach — mount the data " +
-              "as a table, or read it via file()/url()/s3()/jdbc table " +
-              "functions")
-      }
+        Set("FROM", "JOIN")(ts(i - 1)._1.upper) && callOpen(sql, t) >= 0)
+        throw new ReadOnlyViolation(
+          s"${distributedTvfs(t.upper)} addresses another server or " +
+            "stream, which this engine cannot reach — mount the data " +
+            "as a table, or read it via file()/url()/s3()/jdbc table " +
+            "functions")
     }
   }
 
   /** `{name:Type}` query parameters (clickhouse-client substitutes
     * these before sending) have no binding channel on this endpoint —
-    * reject with the fix instead of a bare parser error. Quote-aware:
-    * a literal `{a:1}` inside a string is data, not a parameter. */
+    * reject with the fix instead of a bare parser error. The name is a
+    * token, so a literal `{a:1}` inside a string is data, not a
+    * parameter. */
   private def rejectQueryParams(sql: String): Unit = {
-    val pat = java.util.regex.Pattern.compile(
-      "\\{\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*:\\s*[A-Za-z][A-Za-z0-9_() ,]*\\}")
-    var i = 0
-    var q: Char = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (q != 0) {
-        if (c == '\\' && q == '\'') i += 1
-        else if (c == q) q = 0
-      } else if (c == '\'' || c == '"' || c == '`') q = c
-      else if (c == '{') {
-        val m = pat.matcher(sql.substring(i))
-        if (m.lookingAt()) throw new ReadOnlyViolation(
-          s"query parameter {${m.group(1)}: ...} is not bound — this " +
-            "endpoint serves complete statements; inline the value " +
-            "as a literal")
-      }
-      i += 1
+    val param = "\\s*:\\s*[A-Za-z][A-Za-z0-9_() ,]*\\}".r
+    normalizeScan(sql).foreach { case (t, _) =>
+      val brace = sql.lastIndexWhere(!_.isWhitespace, t.start - 1)
+      if (brace >= 0 && sql.charAt(brace) == '{' &&
+        param.findPrefixMatchOf(sql.substring(t.end)).isDefined)
+        throw new ReadOnlyViolation(
+          s"query parameter {${sql.substring(t.start, t.end)}: ...} is " +
+            "not bound — this endpoint serves complete statements; " +
+            "inline the value as a literal")
     }
   }
 
@@ -838,16 +816,21 @@ object QueryGuard {
     * endpoint honors it like ClickHouse's HTTP interface when no
     * `?format=` parameter overrides (the dialect layer strips the
     * clause before planning either way; same token test). */
-  def trailingFormat(sql: String): Option[String] = {
+  def trailingFormat(sql: String): Option[String] =
+    trailingFormatClause(sql).map { case (_, id) =>
+      sql.substring(id.start, id.end) }
+
+  /** The (FORMAT, name) tokens of a trailing depth-0 `FORMAT <name>`:
+    * the statement's last two tokens, with only `;` after the name. */
+  private def trailingFormatClause(sql: String): Option[(NormTok, NormTok)] = {
     val ts = normalizeScan(sql)
-    if (ts.size >= 2) {
+    if (ts.size < 2) None
+    else {
       val (f, fd) = ts(ts.size - 2)
       val (id, _) = ts.last
-      if (fd == 0 && f.upper == "FORMAT" &&
+      Some((f, id)).filter(_ => fd == 0 && f.upper == "FORMAT" &&
         sql.substring(id.end).trim.stripSuffix(";").trim.isEmpty)
-        Some(sql.substring(id.start, id.end))
-      else None
-    } else None
+    }
   }
 
   /** `JOIN t USING a, b` — ClickHouse's paren-less USING list gains
@@ -933,9 +916,7 @@ object QueryGuard {
       // when nothing ends up hoisted, so the FROM-less single
       // whole-item generator stays on Spark's native select item and
       // keeps its auto-generated column name.
-      if (!java.util.regex.Pattern.compile(
-        "(?i)(?<![A-Za-z0-9_])arrayJoin\\s*\\(").matcher(sql).find())
-        return sql
+      if (callsOf(sql, "ARRAYJOIN").isEmpty) return sql
       val stops = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
         "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT",
         "QUALIFY", "WINDOW")
@@ -954,15 +935,9 @@ object QueryGuard {
     val fromStart = ts(from)._1.start
     val region = sql.substring(selStart, fromStart)
     val spans = subquerySpans(region)
-    val callRe = java.util.regex.Pattern.compile(
-      "(?i)(?<![A-Za-z0-9_])arrayJoin\\s*\\(")
-    val m = callRe.matcher(region)
     // (start, open) of each call outside subquery spans
-    val calls = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    while (m.find()) {
-      val s = m.start
-      if (!spans.exists(sp => s >= sp._1 && s < sp._2))
-        calls += ((s, m.end - 1))
+    val calls = callsOf(region, "ARRAYJOIN").filterNot { case (s, _) =>
+      spans.exists(sp => s >= sp._1 && s < sp._2)
     }
     if (calls.isEmpty) return sql
     // (callStart, close, unnest expr) per call; one DISTINCT unnest
@@ -971,8 +946,8 @@ object QueryGuard {
       val close = matchParenAt(region, open)
       if (close < 0) return sql
       (start, close, region.substring(open + 1, close))
-    }.toSeq
-    val keys = sites.map(_._3.trim.replaceAll("\\s+", " ")).distinct
+    }
+    val keys = sites.map(site => collapseSpaces(site._3)).distinct
     if (keys.size != 1) return sql
     // a single whole-item call without GROUP BY: leave to Spark's
     // native generator item (keeps the pasted auto-name); "whole
@@ -980,13 +955,13 @@ object QueryGuard {
     // optional AS alias
     val callTexts = sites.map { case (start, close, _) =>
       region.substring(start, close + 1) }
-    // word-boundary call match, not substring contains: an item whose
+    // a call token, not substring contains: an item whose
     // IDENTIFIER merely contains the name (alias `arrayJoined`) must
     // not flip the hoist on a whole-item call that should stay on
     // Spark's native generator item
     val nested = splitTopLevel(region).exists { item =>
       val t = item.trim
-      callRe.matcher(t).find() && !callTexts.exists { ct =>
+      callsOf(t, "ARRAYJOIN").nonEmpty && !callTexts.exists { ct =>
         t == ct || (t.startsWith(ct) &&
           t.substring(ct.length).trim.toLowerCase.startsWith("as "))
       }
@@ -1007,6 +982,26 @@ object QueryGuard {
     sql.substring(0, selStart) + newRegion +
       sql.substring(fromStart, fromEnd) +
       s" ARRAY JOIN (${sites.head._3}) AS $alias " + sql.substring(fromEnd)
+  }
+
+  /** `s` trimmed, each whitespace run outside a quoted run collapsed
+    * to one space: respacings of one expression compare equal, while
+    * literal text stays exact. */
+  private def collapseSpaces(s: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\'' || c == '"' || c == '`') {
+        val end = skipQuoted(s, i)
+        sb.append(s, i, end)
+        i = end
+      } else if (c.isWhitespace) {
+        while (i < s.length && s.charAt(i).isWhitespace) i += 1
+        sb.append(' ')
+      } else { sb.append(c); i += 1 }
+    }
+    sb.toString.trim
   }
 
   /** `PREWHERE p1 ... WHERE p2` in one scope (top level OR a
@@ -1036,42 +1031,14 @@ object QueryGuard {
         }
         if (whereAt >= 0) {
           // p2 ends at the next same-depth clause keyword, or where
-          // the scope's paren closes (char scan, quote-aware)
-          var k = whereAt + 1
-          var p2end = -1
-          stop = false
-          while (k < ts.size && !stop) {
-            val (u, ud) = ts(k)
-            if (ud < d) stop = true
-            else if (ud == d && clauseEnd(u.upper)) {
-              p2end = u.start
-              stop = true
+          // the scope's paren closes
+          val p2end = ts.drop(whereAt + 1).takeWhile(_._2 >= d)
+            .find { case (u, ud) => ud == d && clauseEnd(u.upper) }
+            .map(_._1.start).getOrElse {
+              val scope = scopeEnd(sql, ts(whereAt)._1.end)
+              if (scope < sql.length) scope
+              else sql.lastIndexWhere(c => !c.isWhitespace && c != ';') + 1
             }
-            k += 1
-          }
-          if (p2end < 0) {
-            // scan for the unmatched ')' closing this scope
-            var i2 = ts(whereAt)._1.end
-            var depth = 0
-            var q: Char = 0
-            while (i2 < sql.length && p2end < 0) {
-              val c = sql.charAt(i2)
-              if (q != 0) {
-                if (c == '\\' && q == '\'') i2 += 1
-                else if (c == q) q = 0
-              } else if (c == '\'' || c == '"' || c == '`') q = c
-              else if (c == '(') depth += 1
-              else if (c == ')') {
-                if (depth == 0) p2end = i2 else depth -= 1
-              }
-              i2 += 1
-            }
-            if (p2end < 0) {
-              p2end = sql.length
-              while (p2end > 0 && (sql.charAt(p2end - 1).isWhitespace ||
-                sql.charAt(p2end - 1) == ';')) p2end -= 1
-            }
-          }
           val p1 = sql.substring(ts(pre)._1.end, ts(whereAt)._1.start).trim
           val p2 = sql.substring(ts(whereAt)._1.end, p2end).trim
           return mergePrewhere(sql.substring(0, ts(pre)._1.start) +
@@ -1166,20 +1133,13 @@ object QueryGuard {
     }
     out = stripIntoOutfile(out)
     out = stripInnerSettings(out)
-    // trailing FORMAT <ident>: the last two tokens, at depth 0
-    // (trailingFormat below applies the same test for the endpoint)
-    var ts = normalizeScan(out)
-    if (ts.size >= 2) {
-      val (f, fd) = ts(ts.size - 2)
-      val (id, _) = ts.last
-      if (fd == 0 && f.upper == "FORMAT" &&
-        out.substring(id.end).trim.stripSuffix(";").trim.isEmpty)
-        out = out.substring(0, f.start).reverse.dropWhile(_.isWhitespace)
-          .reverse
+    // trailing FORMAT <ident>, the clause the endpoint honors
+    trailingFormatClause(out).foreach { case (f, _) =>
+      out = out.substring(0, f.start).stripTrailing()
     }
     // trailing SETTINGS clause: from the last depth-0 SETTINGS token to
     // the end, provided the remainder looks like assignments
-    ts = normalizeScan(out)
+    var ts = normalizeScan(out)
     ts.reverseIterator.find { case (t, d) => d == 0 && t.upper == "SETTINGS" }
       .foreach { case (t, _) =>
         val rest = out.substring(t.end)
@@ -1659,7 +1619,8 @@ object QueryGuard {
     var changed = true
     while (changed) {
       changed = false
-      // forward quote-aware pass precomputing matching paren pairs
+      // forward quote-aware pass precomputing the opener of each
+      // closed paren and quoted run
       val closeToOpen = scala.collection.mutable.HashMap.empty[Int, Int]
       val stack = scala.collection.mutable.ArrayDeque.empty[Int]
       val n = out.length
@@ -1667,7 +1628,10 @@ object QueryGuard {
       var hit = -1 // position of the '.' of the first match
       while (i < n && hit < 0) {
         out.charAt(i) match {
-          case '\'' | '"' | '`' => i = skipQuoted(out, i)
+          case '\'' | '"' | '`' =>
+            val q = i
+            i = skipQuoted(out, i)
+            closeToOpen(i - 1) = q
           case '(' => stack.prepend(i); i += 1
           case ')' =>
             if (stack.nonEmpty) closeToOpen(i) = stack.removeHead()
@@ -1694,10 +1658,8 @@ object QueryGuard {
                       s
                     case None => -1
                   }
-                } else if (prev == '`') {
-                  val open = out.lastIndexOf('`', i - 2)
-                  if (open >= 0) open else -1
-                } else {
+                } else if (prev == '`') closeToOpen.getOrElse(i - 1, -1)
+                else {
                   var s = i - 1
                   while (s > 0 && (Character.isLetterOrDigit(out.charAt(s - 1)) ||
                     out.charAt(s - 1) == '_')) s -= 1
@@ -1741,19 +1703,16 @@ object QueryGuard {
     val collates = normalizeScan(sql).map(_._1)
       .filter(_.upper == "COLLATE")
     collates.reverseIterator.foreach { t =>
-      var j = t.end
-      while (j < out.length && Character.isWhitespace(out.charAt(j))) j += 1
-      if (j < out.length && out.charAt(j) == '\'') {
-        val close = out.indexOf('\'', j + 1)
-        if (close > j) {
-          val name = out.substring(j + 1, close).replace('-', '_')
-          if (!name.matches("[A-Za-z][A-Za-z0-9_]*"))
-            throw new ReadOnlyViolation(
-              s"COLLATE: unsupported collation '$name' — this engine " +
-                "serves Spark's ICU locale collations (COLLATE 'tr', " +
-                "'en_US', 'unicode_ci', ...)")
-          out = out.substring(0, j) + name + out.substring(close + 1)
-        }
+      val j = out.indexWhere(!_.isWhitespace, t.end)
+      val end = if (j >= 0 && out.charAt(j) == '\'') skipQuoted(out, j) else -1
+      if (end - j >= 2 && out.charAt(end - 1) == '\'') {
+        val name = out.substring(j + 1, end - 1).replace('-', '_')
+        if (!name.matches("[A-Za-z][A-Za-z0-9_]*"))
+          throw new ReadOnlyViolation(
+            s"COLLATE: unsupported collation '$name' — this engine " +
+              "serves Spark's ICU locale collations (COLLATE 'tr', " +
+              "'en_US', 'unicode_ci', ...)")
+        out = out.substring(0, j) + name + out.substring(end)
       }
     }
     out
@@ -1766,25 +1725,35 @@ object QueryGuard {
     * (CH's offset-comma form), WITH TIES → the LIMIT ... WITH TIES
     * shim (zero-offset only — ties + offset has no LIMIT spelling). */
   private def rewriteOffsetFetch(sql: String): String = {
-    val full = ("(?is)\\bOFFSET\\s+(\\d+)\\s+ROWS?\\s+FETCH\\s+" +
-      "(?:FIRST|NEXT)\\s+(\\d+)\\s+ROWS?\\s+(ONLY|WITH\\s+TIES)").r
-    val bare = ("(?is)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(\\d+)\\s+ROWS?\\s+" +
-      "(ONLY|WITH\\s+TIES)").r
-    var out = full.replaceAllIn(sql, m => {
-      val ties = m.group(3).toUpperCase(java.util.Locale.ROOT)
-        .startsWith("WITH")
-      if (ties && m.group(1).toInt != 0)
-        throw new ReadOnlyViolation(
-          "OFFSET ... FETCH ... WITH TIES with a non-zero offset is " +
-            "not supported — use LIMIT k WITH TIES over a pre-offset " +
-            "subquery")
-      if (ties) s"LIMIT ${m.group(2)} WITH TIES"
-      else s"LIMIT ${m.group(1)}, ${m.group(2)}"
-    })
-    out = bare.replaceAllIn(out, m =>
-      if (m.group(2).toUpperCase(java.util.Locale.ROOT).startsWith("WITH"))
-        s"LIMIT ${m.group(1)} WITH TIES"
-      else s"LIMIT ${m.group(1)}")
+    val offset = "(?is)OFFSET\\s+(\\d+)\\s+ROWS?\\s+".r
+    val fetch = ("(?is)FETCH\\s+(?:FIRST|NEXT)\\s+(\\d+)\\s+ROWS?\\s+" +
+      "(ONLY|WITH\\s+TIES)\\b").r
+    val ts = normalizeScan(sql)
+    var out = sql
+    ts.indices.reverse.filter(ts(_)._1.upper == "FETCH").foreach { i =>
+      val at = ts(i)._1.start
+      fetch.findPrefixMatchOf(out.substring(at)).foreach { m =>
+        // an `OFFSET n ROWS` directly before FETCH joins the rewrite
+        val offAt =
+          if (i >= 2 && ts(i - 2)._1.upper == "OFFSET") ts(i - 2)._1.start
+          else -1
+        val off = if (offAt < 0) None
+          else offset.findPrefixMatchOf(out.substring(offAt))
+            .filter(offAt + _.end == at).map(_.group(1))
+        val ties = m.group(2).toUpperCase(java.util.Locale.ROOT)
+          .startsWith("WITH")
+        if (ties && off.exists(_.toInt != 0))
+          throw new ReadOnlyViolation(
+            "OFFSET ... FETCH ... WITH TIES with a non-zero offset is " +
+              "not supported — use LIMIT k WITH TIES over a pre-offset " +
+              "subquery")
+        val limit =
+          if (ties) s"LIMIT ${m.group(1)} WITH TIES"
+          else off.fold(s"LIMIT ${m.group(1)}")(n => s"LIMIT $n, ${m.group(1)}")
+        out = out.substring(0, if (off.isDefined) offAt else at) + limit +
+          out.substring(at + m.end)
+      }
+    }
     out
   }
 
@@ -1954,9 +1923,6 @@ object QueryGuard {
     "grouparrayif", "groupuniqarrayif",
     "sumresample", "countresample", "avgresample", "minresample",
     "maxresample", "uniqresample", "uniqexactresample")
-  // (uniqCombined[64] formerly dropped its precision param; it now
-  // routes params-first so the builder converts K → relativeSD)
-  private val paramAggDrop = Set.empty[String]
   private val paramAggStop = Set("IN", "ON", "AND", "OR", "NOT", "WHERE",
     "FROM", "JOIN", "SELECT", "VALUES", "EXISTS", "USING", "AS", "BY",
     "OVER", "WHEN", "THEN", "ELSE", "CASE", "UNION", "ALL", "DISTINCT",
@@ -1992,32 +1958,30 @@ object QueryGuard {
                 val args = out.substring(o2 + 1, c2).trim
                 val name = out.substring(t.start, t.end)
                 val lower = name.toLowerCase
-                val call =
-                  if (paramAggDrop(lower)) s"$lower($args)"
-                  else paramAggArgsFirst.get(lower) match {
-                    case Some(n) =>
-                      if (params.isEmpty) s"$n($args)"
-                      else s"$n($args, $params)"
-                    case None =>
-                      if (params.isEmpty) s"$name($args)"
-                      else if (paramAggParamsFirst(lower))
-                        s"$name($params, $args)"
-                      else if (lower.endsWith("state") ||
-                        lower.endsWith("merge"))
-                        throw new IllegalArgumentException(
-                          s"$name($params)($args): the -State/-Merge " +
-                            "combinators carry AggregateFunction " +
-                            "intermediate states, which this engine does " +
-                            "not serve — compute the final form (drop the " +
-                            "suffix) instead")
-                      else throw new IllegalArgumentException(
-                        s"$name($params)($args): no parametric binding " +
-                          s"is registered for $name — the parameter " +
-                          "would otherwise be mis-bound as a value. If " +
-                          s"$name takes this as an ordinary argument, " +
-                          s"spell it $name($args, $params) or " +
-                          s"$name($params, $args)")
-                  }
+                val call = paramAggArgsFirst.get(lower) match {
+                  case Some(n) =>
+                    if (params.isEmpty) s"$n($args)"
+                    else s"$n($args, $params)"
+                  case None =>
+                    if (params.isEmpty) s"$name($args)"
+                    else if (paramAggParamsFirst(lower))
+                      s"$name($params, $args)"
+                    else if (lower.endsWith("state") ||
+                      lower.endsWith("merge"))
+                      throw new IllegalArgumentException(
+                        s"$name($params)($args): the -State/-Merge " +
+                          "combinators carry AggregateFunction " +
+                          "intermediate states, which this engine does " +
+                          "not serve — compute the final form (drop the " +
+                          "suffix) instead")
+                    else throw new IllegalArgumentException(
+                      s"$name($params)($args): no parametric binding " +
+                        s"is registered for $name — the parameter " +
+                        "would otherwise be mis-bound as a value. If " +
+                        s"$name takes this as an ordinary argument, " +
+                        s"spell it $name($args, $params) or " +
+                        s"$name($params, $args)")
+                }
                 out = out.substring(0, t.start) + call +
                   out.substring(c2 + 1)
                 changed = true
@@ -2072,33 +2036,6 @@ object QueryGuard {
     * fixpoint loop). A group with whitespace before it is NOT treated
     * as a call (`SELECT (a)[1]` targets `(a)`, not `SELECT (a)`). */
   private[sql] def rewriteSubscripts(sql: String): String = {
-    def matchFwd(s: String, open: Int): Int = {
-      val (o, c) = (s.charAt(open), if (s.charAt(open) == '[') ']' else ')')
-      var depth = 0
-      var i = open
-      while (i < s.length) {
-        val ch = s.charAt(i)
-        if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoted(s, i)
-        else {
-          if (ch == o) depth += 1
-          else if (ch == c) { depth -= 1; if (depth == 0) return i }
-          i += 1
-        }
-      }
-      -1
-    }
-    def matchBwd(s: String, close: Int): Int = {
-      val (c, o) = (s.charAt(close), if (s.charAt(close) == ']') '[' else '(')
-      var depth = 0
-      var i = close
-      while (i >= 0) {
-        val ch = s.charAt(i)
-        if (ch == o) { depth -= 1; if (depth == 0) return i }
-        else if (ch == c) depth += 1
-        i -= 1
-      }
-      -1
-    }
     def identChar(ch: Char) =
       Character.isLetterOrDigit(ch) || ch == '_'
     var out = sql
@@ -2107,44 +2044,55 @@ object QueryGuard {
     while (changed && guard < 500) {
       changed = false
       guard += 1
-      var i = 0
+      // one quote-aware pass pairs every paren, bracket and quoted run;
+      // the first '[' is the subscript this round rewrites
+      val openOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      val closeOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      var stack = List.empty[Int]
       var found = -1
-      while (i < out.length && found < 0) {
-        val ch = out.charAt(i)
-        if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoted(out, i)
-        else if (ch == '[') found = i
-        else i += 1
+      var i = 0
+      while (i < out.length) {
+        out.charAt(i) match {
+          case '\'' | '"' | '`' =>
+            val q = i
+            i = skipQuoted(out, i)
+            openOf(i - 1) = q
+          case c @ ('(' | '[') =>
+            if (c == '[' && found < 0) found = i
+            stack ::= i; i += 1
+          case ')' | ']' =>
+            stack match {
+              case o :: rest => openOf(i) = o; closeOf(o) = i; stack = rest
+              case Nil =>
+            }
+            i += 1
+          case _ => i += 1
+        }
       }
       if (found >= 0) {
-        val close = matchFwd(out, found)
+        val close = closeOf.getOrElse(found, -1)
         var p = found - 1
         while (p >= 0 && out.charAt(p).isWhitespace) p -= 1
         var done = false
         var ok = close > found && p >= 0
         while (ok && !done) {
           out.charAt(p) match {
-            case ')' | ']' =>
-              val open = matchBwd(out, p)
-              if (open < 0) { ok = false }
-              else {
-                p = open - 1
-                // only continue into a DIRECTLY adjacent call name
-                if (!(p >= 0 && identChar(out.charAt(p)))) done = true
+            case c @ (')' | ']' | '`') =>
+              openOf.get(p) match {
+                case None => ok = false
+                case Some(open) =>
+                  p = open - 1
+                  // a backticked name continues only through a dot; a
+                  // closed group only into a DIRECTLY adjacent call name
+                  if (c == '`' && p >= 0 && out.charAt(p) == '.') p -= 1
+                  else if (c == '`' || !(p >= 0 && identChar(out.charAt(p))))
+                    done = true
               }
             case ch if identChar(ch) =>
               while (p >= 0 && identChar(out.charAt(p))) p -= 1
               if (p >= 0 && out.charAt(p) == '.') p -= 1
               else done = true
             case '.' => p -= 1
-            case '`' =>
-              // backtick-quoted identifier: jump to its opener
-              var q = p - 1
-              while (q >= 0 && out.charAt(q) != '`') q -= 1
-              if (q < 0) ok = false
-              else {
-                p = q - 1
-                if (p >= 0 && out.charAt(p) == '.') p -= 1 else done = true
-              }
             case _ => done = true
           }
         }
@@ -2437,13 +2385,6 @@ object QueryGuard {
     * nearest depth-0 clause keyword before it is FROM or JOIN), so
     * columns merely named `final` or `sample` elsewhere survive. */
   private def rewriteFromModifiers(sql: String): String = {
-    val clauseKw = Set("SELECT", "FROM", "WHERE", "GROUP", "HAVING",
-      "ORDER", "LIMIT", "JOIN", "ON", "UNION", "INTERSECT", "EXCEPT",
-      "WINDOW", "QUALIFY", "BY")
-    def inFromPosition(ts: Vector[(NormTok, Int)], i: Int): Boolean =
-      (0 until i).reverse.find(j => ts(j)._2 == ts(i)._2 &&
-        clauseKw(ts(j)._1.upper))
-        .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))
     var out = sql
     var ts = normalizeScan(out)
     ts.reverseIterator.zipWithIndex.foreach { case ((t, _), ri) =>
@@ -2483,6 +2424,36 @@ object QueryGuard {
         out = out.substring(0, t.start) + clause +
           after.substring(mm.end)
       }
+    }
+    out
+  }
+
+  private val clauseKw = Set("SELECT", "FROM", "WHERE", "GROUP",
+    "HAVING", "ORDER", "LIMIT", "JOIN", "ON", "UNION", "INTERSECT",
+    "EXCEPT", "WINDOW", "QUALIFY", "BY")
+
+  /** Is token `i` in FROM/JOIN position — the nearest same-depth clause
+    * keyword before it FROM or JOIN? */
+  private def inFromPosition(ts: Vector[(NormTok, Int)], i: Int): Boolean =
+    (0 until i).reverse.find(j => ts(j)._2 == ts(i)._2 &&
+      clauseKw(ts(j)._1.upper))
+      .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))
+
+  /** Each FROM/JOIN-position call of the table function named `upper`
+    * becomes `f(arguments)`; None leaves the call alone. Right to
+    * left, so a rewrite never moves an earlier token. */
+  private def rewriteTableFn(sql: String, upper: String)(
+      f: Seq[String] => Option[String]): String = {
+    var out = sql
+    val ts = normalizeScan(out)
+    ts.indices.reverse.foreach { i =>
+      val t = ts(i)._1
+      val open = if (t.upper == upper) callOpen(out, t) else -1
+      val close = if (open >= 0) matchParenAt(out, open) else -1
+      if (close > open && inFromPosition(ts, i))
+        f(splitTopLevel(out.substring(open + 1, close))).foreach { repl =>
+          out = out.substring(0, t.start) + repl + out.substring(close + 1)
+        }
     }
     out
   }
@@ -2638,35 +2609,8 @@ object QueryGuard {
     * untouched. Reference: mcp_server.py:433-459 forwards arbitrary
     * SELECT text to ClickHouse, where values() is the documented
     * quick-test source. */
-  private[sql] def rewriteValuesTableFn(sql: String): String = {
-    val clauseKw = Set("SELECT", "FROM", "WHERE", "GROUP", "HAVING",
-      "ORDER", "LIMIT", "JOIN", "ON", "UNION", "INTERSECT", "EXCEPT",
-      "WINDOW", "QUALIFY", "BY")
-    var out = sql
-    val ts = normalizeScan(out)
-    // right to left: a rewrite only changes text AFTER earlier tokens,
-    // so their recorded offsets stay valid
-    ts.indices.reverse.foreach { i =>
-      val t = ts(i)._1
-      val d = ts(i)._2
-      if (t.upper == "VALUES" &&
-        out.substring(t.end).dropWhile(_.isWhitespace).headOption
-          .contains('(') &&
-        (0 until i).reverse
-          .find(j => ts(j)._2 == d && clauseKw(ts(j)._1.upper))
-          .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))) {
-        val open = out.indexOf('(', t.end)
-        val close = matchParenAt(out, open)
-        if (close > open) {
-          val items = splitTopLevel(out.substring(open + 1, close))
-          chValuesRewrite(items).foreach { repl =>
-            out = out.substring(0, t.start) + repl + out.substring(close + 1)
-          }
-        }
-      }
-    }
-    out
-  }
+  private def rewriteValuesTableFn(sql: String): String =
+    rewriteTableFn(sql, "VALUES")(chValuesRewrite)
 
   /** ClickHouse's `format(FormatName, 'data')` TABLE function: inline
     * data parsed into rows — the quick-test source (`SELECT * FROM
@@ -2678,43 +2622,16 @@ object QueryGuard {
     * quoting for CSV), Values. Only fires in FROM/JOIN position with
     * a parenthesized call, so the trailing output-format clause and
     * columns named `format` are untouched. */
-  private[sql] def rewriteFormatTvf(sql: String): String = {
-    val clauseKw = Set("SELECT", "FROM", "WHERE", "GROUP", "HAVING",
-      "ORDER", "LIMIT", "JOIN", "ON", "UNION", "INTERSECT", "EXCEPT",
-      "WINDOW", "QUALIFY", "BY")
-    var out = sql
-    val ts = normalizeScan(out)
-    ts.indices.reverse.foreach { i =>
-      val t = ts(i)._1
-      val d = ts(i)._2
-      if (t.upper == "FORMAT" &&
-        out.substring(t.end).dropWhile(_.isWhitespace).headOption
-          .contains('(') &&
-        (0 until i).reverse
-          .find(j => ts(j)._2 == d && clauseKw(ts(j)._1.upper))
-          .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))) {
-        val open = out.indexOf('(', t.end)
-        val close = matchParenAt(out, open)
-        if (close > open) {
-          val items = splitTopLevel(out.substring(open + 1, close))
-            .map(_.trim)
-          if (items.size == 2) {
-            val fmtName =
-              if (items.head.length >= 2 && items.head.head == '\'' &&
-                items.head.last == '\'')
-                items.head.substring(1, items.head.length - 1)
-              else items.head
-            quotedLiteral(items(1)).foreach { data =>
-              val repl = chFormatRewrite(fmtName, data)
-              out = out.substring(0, t.start) + repl +
-                out.substring(close + 1)
-            }
-          }
-        }
-      }
+  private def rewriteFormatTvf(sql: String): String =
+    rewriteTableFn(sql, "FORMAT") {
+      case Seq(fmt, data) =>
+        val fmtName =
+          if (fmt.length >= 2 && fmt.head == '\'' && fmt.last == '\'')
+            fmt.substring(1, fmt.length - 1)
+          else fmt
+        quotedLiteral(data).map(chFormatRewrite(fmtName, _))
+      case _ => None
     }
-    out
-  }
 
   /** ClickHouse string-literal escape semantics over Spark's parser.
     * Inside each single-quoted literal: escapes BOTH engines consume
@@ -3012,25 +2929,7 @@ object QueryGuard {
               val tokEnd = ((qi + 1) until ts.size).find(j =>
                 ts(j)._2 == qd && tailKw(ts(j)._1.upper))
                 .map(j => ts(j)._1.start).getOrElse(out.length)
-              var end = predStart
-              var depth = 0
-              var done = false
-              while (!done && end < tokEnd) {
-                out.charAt(end) match {
-                  case q @ ('\'' | '"' | '`') =>
-                    end += 1
-                    var in = true
-                    while (in && end < tokEnd) {
-                      if (out.charAt(end) == '\\' && q != '`') end += 2
-                      else if (out.charAt(end) == q) { in = false; end += 1 }
-                      else end += 1
-                    }
-                  case '(' => depth += 1; end += 1
-                  case ')' =>
-                    if (depth == 0) done = true else { depth -= 1; end += 1 }
-                  case _ => end += 1
-                }
-              }
+              val end = math.min(scopeEnd(out, predStart), tokEnd)
               val pred0 = out.substring(predStart, end).trim
               if (pred0.isEmpty) throw new ReadOnlyViolation(
                 "QUALIFY needs a predicate")
@@ -3169,24 +3068,7 @@ object QueryGuard {
           case -1 => out.length
           case j => ts(j)._1.start
         }
-        var end = start
-        var depth = 0
-        var done = false
-        while (!done && end < tokEnd) {
-          val c = out.charAt(end)
-          if (c == '\'' || c == '"' || c == '`') {
-            val q = c; end += 1
-            var in = true
-            while (in && end < tokEnd) {
-              if (out.charAt(end) == '\\' && q != '`') end += 2
-              else if (out.charAt(end) == q) { in = false; end += 1 }
-              else end += 1
-            }
-          } else if (c == '(') { depth += 1; end += 1 }
-          else if (c == ')') {
-            if (depth == 0) done = true else { depth -= 1; end += 1 }
-          } else end += 1
-        }
+        val end = math.min(scopeEnd(out, start), tokEnd)
         val region = out.substring(start, end)
         if (region.trim.nonEmpty) {
           val items = splitTopLevel(region)
@@ -3298,32 +3180,9 @@ object QueryGuard {
     * role). Schema goes through the same CH type shim as values().
     * Reference: mcp_server.py:433-459 (arbitrary pasted SELECT);
     * generateRandom is CH's documented synthetic-data source. */
-  private[sql] def rewriteGenerateRandom(sql: String): String = {
-    val clauseKw = Set("SELECT", "FROM", "WHERE", "GROUP", "HAVING",
-      "ORDER", "LIMIT", "JOIN", "ON", "UNION", "INTERSECT", "EXCEPT",
-      "WINDOW", "QUALIFY", "BY")
-    var out = sql
-    val ts = normalizeScan(out)
-    ts.indices.reverse.foreach { i =>
-      val t = ts(i)._1
-      val d = ts(i)._2
-      if (t.upper == "GENERATERANDOM" &&
-        out.substring(t.end).dropWhile(_.isWhitespace).headOption
-          .contains('(') &&
-        (0 until i).reverse
-          .find(j => ts(j)._2 == d && clauseKw(ts(j)._1.upper))
-          .exists(j => Set("FROM", "JOIN")(ts(j)._1.upper))) {
-        val open = out.indexOf('(', t.end)
-        val close = matchParenAt(out, open)
-        if (close > open) {
-          val items = splitTopLevel(out.substring(open + 1, close))
-          val repl = chGenerateRandomRewrite(items)
-          out = out.substring(0, t.start) + repl + out.substring(close + 1)
-        }
-      }
-    }
-    out
-  }
+  private def rewriteGenerateRandom(sql: String): String =
+    rewriteTableFn(sql, "GENERATERANDOM")(items =>
+      Some(chGenerateRandomRewrite(items)))
 
   private def chGenerateRandomRewrite(items: Seq[String]): String = {
     val sch = items.headOption.map(_.trim)
@@ -3593,8 +3452,9 @@ object QueryGuard {
     sb.toString
   }
 
-  /** Split on depth-0 commas, quote- and paren-aware (ARRAY JOIN item
-    * lists; function-call commas stay inside their parens). */
+  /** Split on depth-0 commas, quote-, paren- and bracket-aware
+    * (function-call and array-literal commas stay inside); items come
+    * back trimmed, empty ones dropped. */
   private[sql] def splitTopLevel(s: String): Seq[String] = {
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
     var depth = 0
@@ -3635,20 +3495,9 @@ object QueryGuard {
     def tryString(): Boolean = {
       skipWs()
       if (j < sql.length && sql.charAt(j) == '\'') {
-        // same escape rules as normalizeScan: backslash escapes the
-        // next char, '' is a doubled-quote escape — a path like
-        // 'a\'b.csv' or 'a''b.csv' must consume the WHOLE literal or
-        // the tail leaks back into the statement as a parse error
-        j += 1
-        var done = false
-        while (j < sql.length && !done) {
-          val ch = sql.charAt(j)
-          if (ch == '\\' && j + 1 < sql.length) j += 2
-          else if (ch == '\'' && j + 1 < sql.length &&
-            sql.charAt(j + 1) == '\'') j += 2
-          else if (ch == '\'') { done = true; j += 1 }
-          else j += 1
-        }
+        // the WHOLE literal ('a\'b.csv', 'a''b.csv'), or the tail leaks
+        // back into the statement as a parse error
+        j = skipQuoted(sql, j)
         true
       } else false
     }
@@ -3686,8 +3535,8 @@ object QueryGuard {
   private def stripInnerSettings(sql: String): String = {
     val headShape =
       "(?s)\\s*[A-Za-z_][A-Za-z0-9_]*\\s*=[^=].*".r
-    val assign =
-      "\\s*[A-Za-z_][A-Za-z0-9_]*\\s*=\\s*('([^']|'')*'|[A-Za-z0-9_.+\\-]+)".r
+    val key = "\\s*[A-Za-z_][A-Za-z0-9_]*\\s*=\\s*".r
+    val bare = "[A-Za-z0-9_.+\\-]+".r
     var out = sql
     // right to left: a strip only removes text AFTER earlier tokens,
     // so their recorded offsets stay valid across iterations
@@ -3700,14 +3549,22 @@ object QueryGuard {
         var n = 0
         var more = true
         while (more) {
-          assign.findPrefixMatchOf(out.substring(j)) match {
-            case Some(m) =>
-              n += 1
-              j += m.end
-              val k = out.indexWhere(!_.isWhitespace, j)
-              if (k >= 0 && out.charAt(k) == ',') j = k + 1
-              else more = false
-            case None => more = false
+          // `key = 'literal'` or `key = bare-value`; -1 = no assignment
+          val end = key.findPrefixMatchOf(out.substring(j)).fold(-1) { m =>
+            val v = j + m.end
+            val q = if (v < out.length && out.charAt(v) == '\'')
+              skipQuoted(out, v) else -1
+            if (q - v >= 2 && out.charAt(q - 1) == '\'') q
+            else if (q >= 0) -1 // unterminated literal
+            else bare.findPrefixMatchOf(out.substring(v)).fold(-1)(v + _.end)
+          }
+          if (end < 0) more = false
+          else {
+            n += 1
+            j = end
+            val k = out.indexWhere(!_.isWhitespace, j)
+            if (k >= 0 && out.charAt(k) == ',') j = k + 1
+            else more = false
           }
         }
         // all-or-nothing: a value outside the assign char class
@@ -3902,23 +3759,13 @@ object QueryGuard {
     // backtick-quoted identifier spans; ' and " literals skip whole
     var i = 0
     while (i < e.length) {
-      e.charAt(i) match {
-        case '`' =>
-          val close = e.indexOf('`', i + 1)
-          if (close < 0) i = e.length
-          else {
-            if (matches(e.substring(i + 1, close))) spans += ((i, close + 1))
-            i = close + 1
-          }
-        case q @ ('\'' | '"') =>
-          i += 1
-          while (i < e.length && e.charAt(i) != q) {
-            if (e.charAt(i) == '\\') i += 1
-            i += 1
-          }
-          i += 1
-        case _ => i += 1
-      }
+      val c = e.charAt(i)
+      if (c == '\'' || c == '"' || c == '`') {
+        val end = skipQuoted(e, i)
+        if (c == '`' && end - i >= 2 && e.charAt(end - 1) == '`' &&
+          matches(e.substring(i + 1, end - 1))) spans += ((i, end))
+        i = end
+      } else i += 1
     }
     var out = e
     spans.sortBy(-_._1).foreach { case (s, en) =>

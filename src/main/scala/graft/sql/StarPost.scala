@@ -280,18 +280,18 @@ object StarPost {
     // with guidance instead. Each BY-list runs to the next clause
     // keyword; items are split depth-0 so parenthesized expressions
     // containing digits don't false-positive.
-    val tailText = sql.substring(tailCut)
-    val hasOrdinal = {
-      val byRe = "(?is)\\b(?:GROUP|ORDER)\\s+BY\\b".r
-      val endRe = ("(?is)\\b(?:GROUP|ORDER|HAVING|LIMIT|WINDOW|QUALIFY" +
-        "|UNION|INTERSECT|EXCEPT|SETTINGS|FORMAT|WITH)\\b").r
-      byRe.findAllMatchIn(tailText).exists { mm =>
-        val rest = tailText.substring(mm.end)
-        val end = endRe.findFirstMatchIn(rest).map(_.start)
-          .getOrElse(rest.length)
-        QueryGuard.splitTopLevel(rest.substring(0, end)).exists(_.trim
-          .matches("(?is)\\d+(\\s+(ASC|DESC))?(\\s+NULLS\\s+(FIRST|LAST))?;?"))
-      }
+    val tail = ts.filter(_._1.start >= tailCut)
+    val byEnds = stops ++ Set("SETTINGS", "FORMAT", "WITH")
+    val hasOrdinal = tail.indices.exists { k =>
+      k + 1 < tail.size && Set("GROUP", "ORDER")(tail(k)._1.upper) &&
+        tail(k + 1)._1.upper == "BY" &&
+        sql.substring(tail(k)._1.end, tail(k + 1)._1.start).isBlank && {
+          val end = tail.drop(k + 2).find(t => byEnds(t._1.upper))
+            .map(_._1.start).getOrElse(sql.length)
+          QueryGuard.splitTopLevel(sql.substring(tail(k + 1)._1.end, end))
+            .exists(_.matches(
+              "(?is)\\d+(\\s+(ASC|DESC))?(\\s+NULLS\\s+(FIRST|LAST))?;?"))
+        }
     }
     val schema = probe(prefix + "SELECT * " +
       sql.substring(fromAt._1.start, tailCut).stripSuffix(";")).columns

@@ -112,7 +112,7 @@ object WithFill {
         // per sort item: strip its WITH FILL tail into a FillAxis
         val axes = scala.collection.mutable.ArrayBuffer.empty[FillAxis]
         val cleaned = scala.collection.mutable.ArrayBuffer.empty[String]
-        splitTopLevel(body).map(_.trim).filter(_.nonEmpty).foreach { item =>
+        QueryGuard.splitTopLevel(body).foreach { item =>
           val its = QueryGuard.normalizeScan(item)
           val w = its.indices.find(k =>
             k + 1 < its.size && its(k)._2 == 0 &&
@@ -168,15 +168,13 @@ object WithFill {
           ts(x)._1.upper == "INTERPOLATE")
         interpAt.foreach { x =>
           endOfFill = ts(x)._1.end
-          val afterTok = sql.substring(ts(x)._1.end)
-          val trimmed = afterTok.dropWhile(_.isWhitespace)
-          if (trimmed.headOption.contains('(')) {
-            val open = ts(x)._1.end + (afterTok.length - trimmed.length)
+          val open = QueryGuard.callOpen(sql, ts(x)._1)
+          if (open >= 0) {
             val close = QueryGuard.matchParenAt(sql, open)
             if (close < 0) throw new ReadOnlyViolation(
               "unbalanced INTERPOLATE parens")
-            val items = splitTopLevel(sql.substring(open + 1, close))
-              .map(_.trim).filter(_.nonEmpty)
+            val items =
+              QueryGuard.splitTopLevel(sql.substring(open + 1, close))
             // `col` carries forward; `col AS expr` cascades expr per
             // filler row (the first depth-0 AS splits the item)
             interpolate = Some(items.map { it =>
@@ -443,7 +441,7 @@ object WithFill {
     * fill axis sort by its helper column instead of re-evaluating. */
   private def sortItems(orderText: String,
       axisByText: Map[String, String] = Map.empty): Seq[Column] =
-    splitTopLevel(orderText).map { item0 =>
+    QueryGuard.splitTopLevel(orderText).map { item0 =>
       val (item, desc, nullsFirst) = stripSortSuffixes(item0)
       val base = axisByText.get(item.toLowerCase).map(col)
         .getOrElse(expr(item))
@@ -460,33 +458,6 @@ object WithFill {
   /** Bare column names of the ORDER BY items (direction and NULLS
     * ordering stripped), for the bare-INTERPOLATE exclusion set. */
   private def orderColNames(orderText: String): Seq[String] =
-    splitTopLevel(orderText).map(item0 =>
+    QueryGuard.splitTopLevel(orderText).map(item0 =>
       stripSortSuffixes(item0)._1.stripPrefix("`").stripSuffix("`"))
-
-  /** Comma split that respects parens and quotes. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < s.length && s.charAt(i) != q) {
-            if (s.charAt(i) == '\\' && q != '`') i += 1
-            i += 1
-          }
-        case ',' if depth == 0 =>
-          out += s.substring(start, i)
-          start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
 }

@@ -271,6 +271,41 @@ class HealthSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("keep-alive replies are not held back by Nagle's algorithm") {
+    val srv = HealthServer.start(spark, GraftConfig(Map.empty))
+    val sock = new java.net.Socket("localhost", srv.port)
+    try {
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      def line(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n' && c >= 0) { if (c != '\r') sb += c.toChar; c = in.read() }
+        sb.toString
+      }
+      // one request and its whole reply on the shared socket
+      def get(): Double = {
+        val t0 = System.nanoTime()
+        out.write("GET /prompt HTTP/1.1\r\nHost: localhost\r\n\r\n"
+          .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+        out.flush()
+        assert(line().startsWith("HTTP/1.1 200"))
+        var len = -1
+        var h = line()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:"))
+            len = h.substring(15).trim.toInt
+          h = line()
+        }
+        assert(len > 0 && in.readNBytes(len).length == len)
+        (System.nanoTime() - t0) / 1e6
+      }
+      get() // first reply pays the handler warm-up
+      val ms = Seq.fill(9)(get()).sorted
+      assert(ms(4) < 20.0, s"keep-alive /prompt times (ms): $ms")
+    } finally { sock.close(); srv.close() }
+  }
+
   test("MCP: initialize, tools/list, prompts round-trip JSON-RPC") {
     val srv = HealthServer.start(spark, GraftConfig(Map.empty))
     try {

@@ -757,4 +757,85 @@ class DialectFuzzSpec extends graft.SparkSpec {
     if (failures.nonEmpty)
       fail(s"${failures.size} failing case(s); first:\n${failures.head}")
   }
+
+  // one trigger phrase per normalize pass and per plan-time shim; the
+  // text shims must treat each as data inside a quoted span
+  private val literalTriggers = Seq(
+    "FROM remote('h', db, t)", "WHERE a = {p:UInt8}", "1_000", "1.5",
+    "CAST(x AS UInt8)", "x::UInt8", "FROM system.one",
+    "ORDER BY s COLLATE 'tr'", "OFFSET 1 ROWS FETCH NEXT 2 ROWS ONLY",
+    "fetch first 5 rows only", "PREWHERE a > 1 WHERE b < 2",
+    "ALL LEFT JOIN t USING k", "x GLOBAL IN (1, 2)",
+    "ASOF LEFT OUTER JOIN u ON a.k = u.k AND a.t >= u.t",
+    "ANY LEFT JOIN u ON a.k = u.k", "INTO OUTFILE 'out.csv'",
+    "SETTINGS max_threads = 2", "FORMAT JSONEachRow",
+    "GROUP BY a WITH TOTALS", "arrayJoin([1, 2])", "JOIN t USING a, b",
+    "LEFT ARRAY JOIN arr AS x", "SELECT DISTINCT ON (a) a, b",
+    "LIMIT 1 BY a", "WITH 2 AS k SELECT k", "LIMIT 3 WITH TIES",
+    "FROM t FINAL", "FROM t SAMPLE 0.5", "* EXCEPT a", "* REPLACE(1 AS a)",
+    "quantile(0.5)(x)", "[1, 2, 3]", "FROM values('a Int8', 1, 2)",
+    "FROM generateRandom('a Int8')", "FROM format(CSV, '1,2')",
+    "CAST(x, 'UInt8')", "dateAdd('day', 1, d)", "trunc(1.5)", "arr[1]",
+    "count()", "dateDiff('day', a, b)", "MD5(s)", "length(s)",
+    "LIMIT 5, 10", "SELECT TOP 5 a", "t.1", "(1, 2).2",
+    "QUALIFY x > 1", "ORDER BY x DESC", "ORDER BY a WITH FILL STEP 1",
+    "COLUMNS('^o_') APPLY(max)", "neighbor(x, 1)",
+    "EXPLAIN SYNTAX SELECT 1", "it's", "a '' b")
+
+  test("literal transparency: every trigger phrase inside a string " +
+    "literal or a quoted name comes back unchanged") {
+    assert(ready)
+    val orderRows = spark.table("orders").count()
+    val failures = literalTriggers.flatMap { p =>
+      val lit = "'" + p.replace("'", "''") + "'"
+      def run(sql: String)(ok: org.apache.spark.sql.DataFrame => Boolean) =
+        try {
+          val df = QueryGuard.plan(spark, sql)
+          if (ok(df)) None
+          else Some(s"WRONG ANSWER: $sql -> ${df.collect().mkString(" ")}")
+        } catch {
+          case e: Throwable => Some(s"DIED ${Option(e.getMessage)
+            .getOrElse("").linesIterator.take(1).mkString.take(100)}: $sql")
+        }
+      Seq(
+        run(s"SELECT $lit AS s") { df =>
+          df.collect().map(_.getString(0)).toSeq == Seq(p)
+        },
+        run(s"SELECT $lit AS s, count() AS n FROM orders GROUP BY s") { df =>
+          df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
+            Seq((p, orderRows))
+        },
+        run(s"SELECT 1 AS `$p`") { df =>
+          df.columns.toSeq == Seq(p) &&
+            df.collect().map(_.getInt(0)).toSeq == Seq(1)
+        }
+      ).flatten
+    }
+    if (failures.nonEmpty)
+      fail(s"${failures.size} failing case(s):\n${failures.mkString("\n")}")
+  }
+
+  test("quoted runs end by one rule: doubled quotes, backslash " +
+    "escapes and parens inside literals never cut a shim's scan") {
+    assert(ready)
+    def one(sql: String): Any = QueryGuard.plan(spark, sql).collect().head.get(0)
+    // a paren inside a literal no longer hides the call a subscript follows
+    assert(one("SELECT array(')', 'b')[1] AS x") == ")")
+    // a doubled backtick inside a quoted name: tuple access keeps the name
+    assert(one("SELECT `a``b`.2 AS x FROM (SELECT (1, 2) AS `a``b`) t") == 2)
+    // an escaped quote inside a per-subquery SETTINGS value strips whole
+    assert(one("SELECT count() AS n FROM (SELECT 1 AS a " +
+      "SETTINGS log_comment = 'a\\'b') t") == 1L)
+    // two unnests differing only inside a literal are two expressions
+    intercept[AnalysisException](QueryGuard.plan(spark,
+      "SELECT arrayJoin(['a  b']) AS x, arrayJoin(['a b']) AS y, " +
+        "count() AS n GROUP BY x, y").collect())
+    // a doubled quote in a LIKE pattern keeps CH's one-column shape
+    assert(QueryGuard.plan(spark, "SHOW TABLES LIKE 'it''s%'").columns
+      .toSeq == Seq("name"))
+    // a doubled quote in a COLLATE name is the scoped rejection
+    val e = intercept[ReadOnlyViolation](QueryGuard.plan(spark,
+      "SELECT o_comment FROM orders ORDER BY o_comment COLLATE 'it''s'"))
+    assert(e.getMessage.contains("unsupported collation"), e.getMessage)
+  }
 }
