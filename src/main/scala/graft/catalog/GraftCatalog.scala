@@ -3,7 +3,7 @@ package graft.catalog
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructField
 
@@ -62,10 +62,11 @@ final case class TablePage(
   * results.
   *
   * Scale departure from the reference: page tokens are STATELESS by
-  * default — the token encodes (database, filters, offset), so no
-  * server-side TTL cache and any driver/executor can resume a
-  * listing. Stats for a page are computed for that page's tables
-  * only; a 100k-table catalog never materializes more than `pageSize`
+  * default — the token encodes (database, filters, last listed name),
+  * so no server-side TTL cache and any driver/executor can resume a
+  * listing; churn before the name neither hides nor repeats a table.
+  * Stats for a page are computed for that page's tables only; a
+  * 100k-table catalog never materializes more than `pageSize`
   * TableInfos at once.
   *
   * Setting SPARK_GRAFT_TOKEN_TTL (seconds) opts into REFERENCE-PARITY
@@ -113,68 +114,43 @@ final class GraftCatalog(
     databases.toSeq.sortBy(_._1).toDF("name", "data_path")
   }
 
-  /** The ClickHouse `system.tables` surface as a DataFrame (registered
-    * by TableEnv as `system_tables` so the guarded SQL path can query
-    * the catalog the way CH clients query system tables). Footer-stat
-    * metadata only — building it never scans data pages. */
-  def systemTables: DataFrame = {
+  /** The ClickHouse `system.tables`, `system.columns` and
+    * `system.parts` surfaces (TableEnv registers them as `system_*`
+    * views for the guarded SQL path) from one pass: one describe per
+    * table, one footer read per data file, no data pages. A part is a
+    * parquet data FILE, always `active` (no pending merges). */
+  def systemViews: (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
+    val described = databases.keys.toSeq.sorted.flatMap { db =>
+      tableNames(db).sorted.map { t =>
+        val parts = dataFiles(location(db, t))
+        (tableInfo(db, t, parts, includeColumns = true), parts)
+      }
+    }
     // `name` is ClickHouse's own column for the table name (pasted
     // `SELECT name FROM system.tables` must resolve); `table_name`
     // stays alongside for the original surface
-    databases.keys.toSeq.sorted
-      .flatMap(db => listTables(db, pageSize = Int.MaxValue).tables)
+    val tables = described.map(_._1)
       .map(t => (t.database, t.name, t.name, t.engine, t.totalRows,
         t.totalBytes, t.totalBytesUncompressed, t.parts, t.totalMarks))
       .toDF("database", "name", "table_name", "engine", "total_rows",
         "total_bytes", "total_bytes_uncompressed", "parts", "marks")
-  }
-
-  /** The `system.parts` surface: one row per parquet data FILE (the
-    * "part" of this engine's storage model) with footer row counts,
-    * row-group "marks", FS compressed size, and footer uncompressed
-    * size — metadata only, no data pages touched. CH users monitor
-    * storage through system.parts; this is the same query surface
-    * over parquet. Every part is `active` (a parquet snapshot has no
-    * pending merges). */
-  def systemParts: DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rows = databases.toSeq.sortBy(_._1).flatMap { case (db, d) =>
-      tableNames(db).flatMap { t =>
-        val path = new Path(s"$d/$t.parquet")
-        val fs = path.getFileSystem(conf)
-        if (!fs.exists(path)) Nil
-        else {
-          val files =
-            if (fs.isFile(path)) Seq(fs.getFileStatus(path))
-            else fs.listStatus(path).toSeq.filter(_.isFile)
-              .filterNot(_.getPath.getName.startsWith("_"))
-          files.sortBy(_.getPath.getName).map { st =>
-            val (r, unc, gs) = parquetFooterStats(Seq(st), conf)
-            (db, t, st.getPath.getName, r, gs, st.getLen, unc, true)
-          }
-        }
-      }
-    }
-    rows.toDF("database", "table", "name", "rows", "marks",
-      "bytes_on_disk", "data_uncompressed_bytes", "active")
-  }
-
-  /** The `system.columns` surface: one row per column with its 1-based
-    * position, like CH's. */
-  def systemColumns: DataFrame = {
-    import spark.implicits._
     // `table` and `type` are ClickHouse's own column names; the
-    // original `table_name`/`col_type` stay alongside
-    databases.keys.toSeq.sorted
-      .flatMap(db => listTables(db, pageSize = Int.MaxValue).tables)
-      .flatMap(t => t.columns.zipWithIndex.map { case (c, i) =>
+    // original `table_name`/`col_type` stay alongside; `position` is
+    // 1-based, like CH's
+    val columns = described.flatMap(_._1.columns.zipWithIndex)
+      .map { case (c, i) =>
         (c.database, c.table, c.table, c.name, c.columnType, c.columnType,
           c.nullable, i + 1)
-      })
+      }
       .toDF("database", "table", "table_name", "name", "type", "col_type",
         "nullable", "position")
+    val parts = described.flatMap { case (t, ps) =>
+      ps.map(p => (t.database, t.name, p.file.getPath.getName, p.rows,
+        p.rowGroups, p.file.getLen, p.uncompressed, true))
+    }.toDF("database", "table", "name", "rows", "marks",
+      "bytes_on_disk", "data_uncompressed_bytes", "active")
+    (tables, columns, parts)
   }
 
   /** The `system.functions` surface: every name the SQL path can call —
@@ -214,21 +190,23 @@ final class GraftCatalog(
       pageSize: Int = 50,
       includeDetailedColumns: Boolean = true): TablePage = {
     requireDatabase(database)
+    // an empty page's token would resume where it stands, forever
+    if (pageSize < 1)
+      throw new IllegalArgumentException(s"page_size must be at least 1, got $pageSize")
     if (tokenTtlSec.isDefined)
       return cachedListTables(database, like, notLike, pageToken,
         pageSize, includeDetailedColumns)
     val all = tableNames(database).filter(matches(_, like, notLike)).sorted
     // a token for different filters is ignored, like the reference's
     // cache-state mismatch path (mcp_server.py:345-356)
-    val start = pageToken
+    val rest = pageToken
       .flatMap(decodeToken(_, database, like, notLike, includeDetailedColumns))
-      .getOrElse(0)
-    val page = all.slice(start, start + pageSize)
+      .fold(all)(last => all.dropWhile(_ <= last))
+    val page = rest.take(pageSize)
     val infos = page.map(describeTable(database, _, includeDetailedColumns))
     val next =
-      if (start + pageSize < all.size)
-        Some(encodeToken(database, like, notLike, includeDetailedColumns,
-          start + pageSize))
+      if (rest.size > pageSize)
+        Some(encodeToken(database, like, notLike, includeDetailedColumns, page.last))
       else None
     TablePage(infos, next, all.size)
   }
@@ -282,17 +260,21 @@ final class GraftCatalog(
       table: String,
       includeColumns: Boolean = true): TableInfo = {
     requireDatabase(database)
-    val path = new Path(s"${databases(database)}/$table.parquet")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = path.getFileSystem(conf)
-    val files =
-      if (fs.isFile(path)) Seq(fs.getFileStatus(path))
-      else fs.listStatus(path).toSeq.filter(_.isFile)
-        .filterNot(_.getPath.getName.startsWith("_"))
+    tableInfo(database, table, dataFiles(location(database, table)), includeColumns)
+  }
+
+  private def location(db: String, table: String) = new Path(s"${databases(db)}/$table.parquet")
+
+  /** [[describeTable]] over data files already listed and read. */
+  private def tableInfo(
+      database: String,
+      table: String,
+      files: Seq[Part],
+      includeColumns: Boolean): TableInfo = {
+    val path = location(database, table)
     val df =
       if (database == this.database) Tables(spark, dir, table)
       else spark.read.parquet(path.toString)
-    val (footerRows, uncompressed, rowGroups) = parquetFooterStats(files, conf)
     TableInfo(
       database = database,
       name = table,
@@ -302,12 +284,12 @@ final class GraftCatalog(
         s"CREATE TABLE $database.$table (${df.schema.toDDL}) USING parquet LOCATION '$path'",
       sortingKey = "", // parquet carries no sort/primary key metadata
       primaryKey = "",
-      totalRows = footerRows, // straight from footers — no Spark job
-      totalBytes = files.map(_.getLen).sum,
-      totalBytesUncompressed = uncompressed,
+      totalRows = files.map(_.rows).sum, // straight from footers — no Spark job
+      totalBytes = files.map(_.file.getLen).sum,
+      totalBytesUncompressed = files.map(_.uncompressed).sum,
       parts = files.size,
       activeParts = files.size, // no inactive (merging) parts on files
-      totalMarks = rowGroups,
+      totalMarks = files.map(_.rowGroups).sum,
       comment = tableComment(table),
       columns =
         if (includeColumns) df.schema.fields.toSeq.map(columnInfo(database, table, _))
@@ -328,15 +310,8 @@ final class GraftCatalog(
   def describeCatalogTable(table: String): TableInfo = {
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val conf = spark.sparkContext.hadoopConfiguration
     val location = new Path(meta.location)
-    val fs = location.getFileSystem(conf)
-    val files =
-      if (!fs.exists(location)) Nil
-      else if (fs.isFile(location)) Seq(fs.getFileStatus(location))
-      else fs.listStatus(location).toSeq.filter(_.isFile)
-        .filterNot(_.getPath.getName.startsWith("_"))
-    val (footerRows, uncompressed, rowGroups) = parquetFooterStats(files, conf)
+    val files = dataFiles(location)
     val bucket = meta.bucketSpec
     val provider = meta.provider.getOrElse("parquet")
     val clusterClause = bucket
@@ -356,14 +331,29 @@ final class GraftCatalog(
           clusterClause + s" LOCATION '$location'",
       sortingKey = bucket.map(_.sortColumnNames.mkString(", ")).getOrElse(""),
       primaryKey = bucket.map(_.bucketColumnNames.mkString(", ")).getOrElse(""),
-      totalRows = footerRows,
-      totalBytes = files.map(_.getLen).sum,
-      totalBytesUncompressed = uncompressed,
+      totalRows = files.map(_.rows).sum,
+      totalBytes = files.map(_.file.getLen).sum,
+      totalBytesUncompressed = files.map(_.uncompressed).sum,
       parts = files.size,
       activeParts = files.size,
-      totalMarks = rowGroups,
+      totalMarks = files.map(_.rowGroups).sum,
       comment = meta.comment,
       columns = meta.schema.fields.toSeq.map(columnInfo(database, table, _)))
+  }
+
+  /** A table location's data files with their footer stats: the file
+    * itself, or a directory's files by name minus `_`-prefixed markers;
+    * none when the location is missing. */
+  private def dataFiles(location: Path): Seq[Part] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = location.getFileSystem(conf)
+    val files =
+      if (!fs.exists(location)) Nil
+      else if (fs.isFile(location)) Seq(fs.getFileStatus(location))
+      else fs.listStatus(location).toSeq.filter(_.isFile)
+        .filterNot(_.getPath.getName.startsWith("_"))
+        .sortBy(_.getPath.getName)
+    files.map(part(_, conf))
   }
 
   private def requireDatabase(db: String): Unit =
@@ -416,24 +406,26 @@ object GraftCatalog {
           size() > tokenCacheMax
       })
 
-  /** (row count, uncompressed bytes, row-group count) summed over
-    * parquet footers — footer reads only, no data pages touched and no
-    * Spark jobs, so a catalog page over many tables costs one metadata
-    * read per file rather than one count job per table. */
-  private[catalog] def parquetFooterStats(
-      files: Seq[org.apache.hadoop.fs.FileStatus],
-      conf: org.apache.hadoop.conf.Configuration): (Long, Long, Long) = {
+  /** A parquet data file with its footer's row count, uncompressed
+    * bytes and row-group count. */
+  private[catalog] final case class Part(
+      file: FileStatus, rows: Long, uncompressed: Long, rowGroups: Long)
+
+  /** A footer read only — no data pages touched and no Spark job, so a
+    * catalog page over many tables costs one metadata read per file
+    * rather than one count job per table. */
+  private[catalog] def part(
+      st: FileStatus,
+      conf: org.apache.hadoop.conf.Configuration): Part = {
     import scala.jdk.CollectionConverters._
-    files.foldLeft((0L, 0L, 0L)) { case ((rows, bytes, groups), st) =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try {
-        val blocks = reader.getRowGroups.asScala
-        (rows + blocks.map(_.getRowCount).sum,
-          bytes + blocks.map(_.getColumns.asScala.map(_.getTotalUncompressedSize).sum).sum,
-          groups + blocks.size)
-      } finally reader.close()
-    }
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try {
+      val blocks = reader.getRowGroups.asScala
+      Part(st, blocks.map(_.getRowCount).sum,
+        blocks.map(_.getColumns.asScala.map(_.getTotalUncompressedSize).sum).sum,
+        blocks.size)
+    } finally reader.close()
   }
 
   /** SQL LIKE → anchored regex ('%' ≡ '.*', '_' ≡ '.'), case-sensitive
@@ -459,25 +451,26 @@ object GraftCatalog {
 
   private def encodeToken(
       db: String, like: Seq[String], notLike: Seq[String],
-      detailed: Boolean, offset: Int): String =
+      detailed: Boolean, lastName: String): String =
     Base64.getUrlEncoder.encodeToString(
-      s"$db\n${like.mkString("\u0001")}\n${notLike.mkString("\u0001")}\n$detailed\n$offset"
+      s"$db\n${like.mkString("\u0001")}\n${notLike.mkString("\u0001")}\n$detailed\n$lastName"
         .getBytes(UTF_8))
 
-  /** None when the token is invalid or was issued for different filters
-    * or a different metadata setting — mirrors the reference's
-    * cache-state mismatch reset (mcp_server.py:345-356). */
+  /** The last name the token's page listed; None when the token is
+    * invalid or was issued for different filters or a different
+    * metadata setting — mirrors the reference's cache-state mismatch
+    * reset (mcp_server.py:345-356). */
   private def decodeToken(
       token: String, db: String, like: Seq[String], notLike: Seq[String],
-      detailed: Boolean): Option[Int] =
+      detailed: Boolean): Option[String] =
     try {
       val parts = new String(Base64.getUrlDecoder.decode(token), UTF_8)
-        .split("\n", -1)
+        .split("\n", 5)
       val same = parts.length == 5 &&
         parts(0) == db &&
         parts(1) == like.mkString("\u0001") &&
         parts(2) == notLike.mkString("\u0001") &&
         parts(3) == detailed.toString
-      if (same) Some(parts(4).toInt) else None
+      if (same) Some(parts(4)) else None
     } catch { case _: Exception => None }
 }

@@ -6777,13 +6777,38 @@ object CHFunctions {
         rels, byName = true, allowMissingCol = false)
     }
 
+  /** `file(path[, format])`, `s3(path[, format])`, `hdfs(path[,
+    * format])`: chDB's in-place file queries over
+    * [[graft.sources.FileSource]], the same surface the native
+    * ``parquet.`path` `` form opens. `url()` stays unregistered: its
+    * HTTP download would run during planning, where no job tag can
+    * cancel it, so an http(s) path is refused here too. */
+  private def fileBuilder(name: String):
+      Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    es => {
+      def str(e: Expression): String =
+        (if (e.foldable) e.eval(null) else null) match {
+          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+          case _ => throw new IllegalArgumentException(
+            s"$name() requires constant string arguments, got ${e.sql}")
+        }
+      if (es.isEmpty || es.size > 2) throw new IllegalArgumentException(
+        s"$name() takes a path and an optional format, got ${es.size} argument(s)")
+      val path = str(es.head)
+      if (path.matches("(?i)^https?://.*")) throw new IllegalArgumentException(
+        s"$name() reads file-system paths; http(s) URLs are not served")
+      graft.sources.FileSource.route(SparkSession.active, path, es.lift(1).map(str))
+        .queryExecution.analyzed
+    }
+
   private def tableFns = Seq[(String,
       Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)](
     "generateSeries" -> generateSeriesBuilder,
     "generate_series" -> generateSeriesBuilder,
     "zeros" -> zerosBuilder,
     "zeros_mt" -> zerosBuilder,
-    "merge" -> mergeBuilder)
+    "merge" -> mergeBuilder) ++
+    Seq("file", "s3", "hdfs").map(n => n -> fileBuilder(n))
 
   /** A handful of dialect names intentionally shadow Spark built-ins
     * (`match`, `extractAll`, ...), which Spark's registry reports with

@@ -31,15 +31,15 @@ final case class GraftConfig(env: Map[String, String] = sys.env) {
 
   /** Register the in-place file-query tool `run_chdb_select_query`
     * (reference: CHDB_ENABLED, default false there too) — same guarded
-    * executor, aimed at `file()/url()/s3()` table-function queries. */
+    * executor, aimed at `file()/s3()/hdfs()` table-function queries. */
   def chdbEnabled: Boolean = bool("CHDB_ENABLED", dflt = false)
 
   /** Per-query timeout in seconds (reference: *_SEND_RECEIVE_TIMEOUT
     * semantics applied to query execution). */
   def queryTimeoutSec: Int = int("QUERY_TIMEOUT_SEC", 30)
 
-  /** Pool size (reference: max_workers=10): the served path's handler
-    * threads, and the executor's query pool it builds. */
+  /** Pool size (reference: max_workers=10): the HTTP handler threads,
+    * which bound how many served queries plan and execute at once. */
   def poolSize: Int = int("POOL_SIZE", 10)
 
   /** Result row cap for the SQL executor. */
@@ -112,7 +112,7 @@ final case class GraftConfig(env: Map[String, String] = sys.env) {
     r
   }
 
-  /** An executor honoring the configured timeout/pool/cap. */
+  /** An executor honoring the configured timeout and row cap. */
   def newExecutor(spark: org.apache.spark.sql.SparkSession): graft.sql.QueryExecutor =
-    new graft.sql.QueryExecutor(spark, queryTimeoutSec, poolSize, maxRows)
+    new graft.sql.QueryExecutor(spark, queryTimeoutSec, maxRows)
 }

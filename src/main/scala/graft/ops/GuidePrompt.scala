@@ -25,15 +25,16 @@ object GuidePrompt {
       |  by a plan-level guard; results are row-capped and time-boxed.
       |- **list_databases** / **list_tables**: catalog discovery with
       |  LIKE / NOT LIKE filters and page tokens. Page tokens are
-      |  STATELESS offsets by default (they encode database + filters
-      |  + position), so they never expire — unlike the reference's
-      |  server-side token cache with its 1-hour TTL. A token replayed
-      |  with DIFFERENT filters, or a corrupted token, restarts the
-      |  listing from the first page instead of erroring. Setting
-      |  SPARK_GRAFT_TOKEN_TTL (seconds) opts into reference-parity
-      |  cached tokens: a resumed listing pages over a snapshot (no
-      |  shift under concurrent table churn) and expired tokens reset
-      |  to the first page.
+      |  STATELESS cursors by default (they encode database + filters
+      |  + the last listed name), so they never expire — unlike the
+      |  reference's server-side token cache with its 1-hour TTL — and
+      |  tables added or dropped before the cursor neither hide nor
+      |  repeat a table. A token replayed with DIFFERENT filters, or a
+      |  corrupted token, restarts the listing from the first page
+      |  instead of erroring. Setting SPARK_GRAFT_TOKEN_TTL (seconds)
+      |  opts into reference-parity cached tokens: a resumed listing
+      |  pages over a snapshot and expired tokens reset to the first
+      |  page.
       |
       |## Principles
       |- Query data IN PLACE with table functions; never suggest
@@ -48,9 +49,9 @@ object GuidePrompt {
       |-- local files, format auto-detected from the extension
       |SELECT count(*) FROM file('/data/events.parquet')
       |SELECT * FROM file('/data/logs.csv', 'CSVWithNames') LIMIT 5
-      |-- remote / object storage
-      |SELECT * FROM url('https://host/data.csv', 'CSV')
+      |-- object storage and distributed file systems
       |SELECT * FROM s3('s3://bucket/part-*.parquet')
+      |SELECT * FROM hdfs('hdfs://namenode/data/events.parquet')
       |-- relational passthrough (partitioned reads, pushdown)
       |SELECT * FROM postgresql('host:5432', 'db', 'table', 'user', 'pw')
       |SELECT * FROM mysql('host:3306', 'db', 'table', 'user', 'pw')

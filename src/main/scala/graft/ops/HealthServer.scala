@@ -244,13 +244,14 @@ object HealthServer {
         new java.util.concurrent.ConcurrentHashMap[
           String, java.util.concurrent.LinkedBlockingQueue[String]]()
       // Streams are long-lived (one blocked writer per connected
-      // client), so they must never occupy the shared 8-thread request
-      // pool: 8 lingering sessions would starve /messages — including a
-      // session's OWN posts — plus /query and /health. Each stream gets
-      // a thread from this dedicated cached pool instead; the handler
-      // returns immediately and the request thread is freed. A session
-      // cap keeps the thread count bounded, shedding load with 503 the
-      // way the reference's HTTP layer sheds connection-pool exhaustion.
+      // client), so they must never occupy the shared request pool
+      // (`poolSize` threads): that many lingering sessions would starve
+      // /messages — including a session's OWN posts — plus /query and
+      // /health. Each stream gets a thread from this dedicated cached
+      // pool instead; the handler returns immediately and the request
+      // thread is freed. A session cap keeps the thread count bounded,
+      // shedding load with 503 the way the reference's HTTP layer sheds
+      // connection-pool exhaustion.
       val ssePool = java.util.concurrent.Executors.newCachedThreadPool(r => {
         val t = new Thread(r, "graft-sse")
         t.setDaemon(true)

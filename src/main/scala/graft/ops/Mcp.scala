@@ -113,7 +113,7 @@ object Mcp {
       t.put("name", "run_chdb_select_query")
       t.put("description",
         "Run a read-only SELECT that queries files in place via " +
-          "file()/url()/s3() table functions")
+          "file()/s3()/hdfs() table functions")
       val props = obj()
       props.set[ObjectNode]("query",
         obj().put("type", "string").put("description", "the SELECT statement"))

@@ -1,9 +1,10 @@
 package graft.sql
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicBoolean
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Result shape of the reference's `run_select_query`
   * (mcp_server.py:421-459): column names + row values. `truncated` is
@@ -260,33 +261,33 @@ object QueryResult {
 }
 
 /** Read-only SQL executor with the reference's operational semantics
-  * (mcp_server.py:66, 433-459): a bounded worker pool (10 threads) and a
-  * per-query timeout that cancels the underlying Spark jobs — not just
-  * the client wait — so a runaway query releases cluster resources.
-  */
+  * (mcp_server.py:66, 433-459): a per-query timeout that cancels the
+  * underlying Spark jobs — not just the client wait — so a runaway
+  * query releases cluster resources. A query runs on the caller's
+  * thread, whose pool bounds concurrency; this class owns one thread,
+  * the deadline scheduler. */
 final class QueryExecutor(
     spark: SparkSession,
     timeoutSec: Int = 30,
-    poolSize: Int = 10,
     maxRows: Int = QueryExecutor.DefaultMaxRows) extends AutoCloseable {
 
   require(maxRows > 0, "maxRows must be positive")
 
-  private val pool = Executors.newFixedThreadPool(poolSize)
+  private val deadlines = Executors.newSingleThreadScheduledExecutor(
+    r => { val t = new Thread(r, "graft-query-deadline"); t.setDaemon(true); t })
 
   /** Plan a guarded SELECT; lazy — no jobs run until an action.
     * ClickHouse-surface shims (PREWHERE, trailing SETTINGS/FORMAT,
     * LIMIT BY, WITH TOTALS, WITH FILL) normalize away first, so
-    * pasted CH queries run unchanged. */
+    * pasted CH queries run unchanged. No tag, no deadline. */
   def select(sql: String): DataFrame = QueryGuard.plan(spark, sql)
 
-  /** Formatted physical plan of a guarded SELECT — planning only, no
-    * jobs run. The "why is this slow" tool an operator (or LLM client)
-    * asks for before paying for a 100 TB scan: shows pushed filters,
-    * pruned schemas, join strategies and codegen spans. */
+  /** Formatted physical plan of a guarded SELECT — planning only; the
+    * "why is this slow" check before a 100 TB scan (pushed filters,
+    * pruned schemas, join strategies, codegen spans). [[run]] of CH's
+    * `EXPLAIN`, uncapped, so it shares the tag, deadline and query log. */
   def explain(sql: String): String =
-    select(sql).queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+    run(s"EXPLAIN $sql", capRows = Int.MaxValue - 1).rows.map(_.head).mkString("\n")
 
   /** [[explain]] with the reference's error shaping. */
   def explainSafe(sql: String): Either[String, String] =
@@ -310,6 +311,11 @@ final class QueryExecutor(
     }
 
   /** Run a guarded SELECT to completion with timeout + job cancellation.
+    * One job tag and one deadline cover guard, planning and execution, so
+    * planning-time jobs (schema inference) are cancellable and counted in
+    * `read_rows`. Past the deadline the tag's jobs are cancelled every
+    * 100 ms until the call returns; the caller (an HTTP handler) is never
+    * interrupted, and an expired query fails at the next phase boundary.
     * The result is capped at [[maxRows]] (overridable per call): the cap
     * is pushed into the plan as a `LIMIT maxRows+1`, so Spark stops
     * producing past it — an unbounded `SELECT *` never materializes on
@@ -317,51 +323,44 @@ final class QueryExecutor(
   def run(sql: String): QueryResult = run(sql, maxRows)
 
   def run(sql: String, capRows: Int): QueryResult = {
+    val sc = spark.sparkContext
     val jobTag = s"graft-query-${java.util.UUID.randomUUID()}"
-    // ops surface: the query registers as in-flight BEFORE planning,
-    // and planning refreshes the live system.processes/query_log/
-    // metrics tables when the statement reads them, so a pasted
-    // `SELECT * FROM system.processes` sees itself, as on ClickHouse
-    // (QueryLog scaladoc)
+    val expired = new AtomicBoolean(false)
+    def timedOut = new TimeoutException(s"Query timed out after $timeoutSec seconds")
+    val deadline = deadlines.scheduleWithFixedDelay(() => {
+      expired.set(true)
+      sc.cancelJobsWithTag(jobTag)
+    }, timeoutSec * 1000L, 100L, TimeUnit.MILLISECONDS)
+    // in flight before planning, so system.processes lists it (QueryLog)
     QueryLog.installListener(spark)
     QueryLog.begin(jobTag, sql)
+    sc.addJobTag(jobTag)
     var outcome = ""
-    var rows = -1L
+    var rows = 0L
     try {
       val df = select(sql)
-      val task = pool.submit { () =>
-        spark.sparkContext.addJobTag(jobTag)
-        try collect(df, capRows)
-        finally spark.sparkContext.removeJobTag(jobTag)
-      }
-      try {
-        val r = task.get(timeoutSec.toLong, TimeUnit.SECONDS)
-        rows = r.rows.size.toLong
-        r
-      } catch {
-        case _: TimeoutException =>
-          spark.sparkContext.cancelJobsWithTag(jobTag)
-          task.cancel(true)
-          throw new TimeoutException(s"Query timed out after $timeoutSec seconds")
-        case NonFatal(e) => throw e
-      }
+      if (expired.get) throw timedOut
+      val collected = df.limit(capRows + 1).collect()
+      rows = collected.length.min(capRows).toLong
+      QueryResult(
+        df.columns.toSeq,
+        collected.take(capRows).toSeq.map(_.toSeq),
+        truncated = collected.length > capRows)
     } catch {
       case e: Throwable =>
-        outcome = Option(e.getMessage).getOrElse(e.getClass.getName)
+        // a job the deadline cancelled fails with Spark's own error
+        val shaped = if (expired.get && NonFatal(e)) timedOut else e
+        outcome = Option(shaped.getMessage).getOrElse(shaped.getClass.getName)
           .linesIterator.take(1).mkString.take(500)
-        throw e
-    } finally QueryLog.finish(jobTag, rows.max(0L), outcome)
+        throw shaped
+    } finally {
+      deadline.cancel(false)
+      sc.removeJobTag(jobTag)
+      QueryLog.finish(jobTag, rows, outcome)
+    }
   }
 
-  private def collect(df: Dataset[org.apache.spark.sql.Row], capRows: Int): QueryResult = {
-    val collected = df.limit(capRows + 1).collect()
-    QueryResult(
-      df.columns.toSeq,
-      collected.take(capRows).toSeq.map(_.toSeq),
-      truncated = collected.length > capRows)
-  }
-
-  override def close(): Unit = pool.shutdown()
+  override def close(): Unit = deadlines.shutdown()
 }
 
 object QueryExecutor {

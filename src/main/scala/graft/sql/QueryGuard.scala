@@ -789,7 +789,7 @@ object QueryGuard {
         throw new ReadOnlyViolation(
           s"${distributedTvfs(t.upper)} addresses another server or " +
             "stream, which this engine cannot reach — mount the data " +
-            "as a table, or read it via file()/url()/s3()/jdbc table " +
+            "as a table, or read it via file()/s3()/hdfs()/jdbc table " +
             "functions")
     }
   }

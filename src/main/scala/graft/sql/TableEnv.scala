@@ -25,10 +25,11 @@ object TableEnv {
       // Footer-stat metadata only; built once per (session, dir).
       val cat = new graft.catalog.GraftCatalog(spark, dir)
       cat.systemDatabases.createOrReplaceTempView("system_databases")
-      cat.systemTables.createOrReplaceTempView("system_tables")
-      cat.systemColumns.createOrReplaceTempView("system_columns")
+      val (tables, columns, parts) = cat.systemViews
+      tables.createOrReplaceTempView("system_tables")
+      columns.createOrReplaceTempView("system_columns")
+      parts.createOrReplaceTempView("system_parts")
       cat.systemFunctions.createOrReplaceTempView("system_functions")
-      cat.systemParts.createOrReplaceTempView("system_parts")
       // the live ops slice (processes/query_log/metrics — registered
       // here so SHOW TABLES and system.tables list them, refreshed
       // again only by a statement that reads them, see QueryLog) and

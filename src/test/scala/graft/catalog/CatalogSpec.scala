@@ -23,14 +23,15 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("system.parts per-file stats agree with system.tables totals") {
-    val parts = cat.systemParts.collect()
+    val (tables, _, partsDf) = cat.systemViews
+    val parts = partsDf.collect()
     assert(parts.nonEmpty)
     assert(parts.forall(r => r.getAs[Long]("rows") >= 0 &&
       r.getAs[Long]("marks") > 0 && r.getAs[Long]("bytes_on_disk") > 0 &&
       r.getAs[Boolean]("active")))
     val partRows = parts.groupBy(_.getAs[String]("table"))
       .view.mapValues(_.map(_.getAs[Long]("rows")).sum).toMap
-    cat.systemTables.collect().foreach { t =>
+    tables.collect().foreach { t =>
       assert(partRows(t.getAs[String]("table_name")) ==
         t.getAs[Long]("total_rows"),
         s"parts row sum mismatch for ${t.getAs[String]("table_name")}")
@@ -130,10 +131,10 @@ class CatalogSpec extends SparkSpec {
   test("stateless tokens under concurrent table churn: shifted pages, " +
     "never a crash or replay error") {
     // the documented departure from the reference's TTL'd server-side
-    // token cache (mcp_server.py:266-297): a stateless offset token
-    // replayed across table add/drop lists a SHIFTED page — rows can
-    // move between pages, but the listing never crashes, never
-    // duplicates the already-seen prefix, and always terminates
+    // token cache (mcp_server.py:266-297): a stateless token resumes
+    // after the last name it listed, so churn after that cursor shows
+    // up in the next page; the listing never crashes and always
+    // terminates
     val tmp = java.nio.file.Files.createTempDirectory("graft_churn").toString
     def put(n: String): Unit = graft.Tables(spark, sf, "region")
       .write.mode("overwrite").parquet(s"$tmp/$n.parquet")
@@ -144,14 +145,14 @@ class CatalogSpec extends SparkSpec {
     val cat2 = new GraftCatalog(spark, sf, Map("churn" -> tmp))
     val p1 = cat2.listTables(database = "churn", pageSize = 2)
     assert(p1.tables.map(_.name) == Seq("a", "b"))
-    // DROP between pages: the offset now lands past where 'c' was —
-    // page 2 is the shifted (d, e), not an error and not (a, b) again
+    // DROP between pages: 'c' is gone, so page 2 is (d, e), not an
+    // error and not (a, b) again
     rm(new java.io.File(s"$tmp/c.parquet"))
     val p2 = cat2.listTables(database = "churn", pageSize = 2,
       pageToken = p1.nextPageToken)
     assert(p2.tables.map(_.name) == Seq("d", "e"))
-    // ADD between pages: the same old token now lists the new row —
-    // shifted content again, still no crash and no a/b replay
+    // ADD between pages: the same old token now lists the new row,
+    // which sorts after its cursor 'b' — still no a/b replay
     put("bb")
     val p3 = cat2.listTables(database = "churn", pageSize = 2,
       pageToken = p1.nextPageToken)
@@ -161,6 +162,33 @@ class CatalogSpec extends SparkSpec {
       pageToken = p3.nextPageToken)
     assert(p4.tables.map(_.name) == Seq("e", "f") && p4.nextPageToken.isEmpty)
     assert(cat2.describeTable("churn", "d").totalRows == 5)
+  }
+
+  test("stateless tokens: churn before the cursor neither hides nor repeats a table") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cursor").toString
+    def put(n: String): Unit = graft.Tables(spark, sf, "region")
+      .write.mode("overwrite").parquet(s"$tmp/$n.parquet")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+    }
+    Seq("a", "b", "c", "d", "e", "f").foreach(put)
+    val cat2 = new GraftCatalog(spark, sf, Map("cursor" -> tmp))
+    def page(token: Option[String]) =
+      cat2.listTables(database = "cursor", pageSize = 2, pageToken = token)
+    val p1 = page(None)
+    assert(p1.tables.map(_.name) == Seq("a", "b"))
+    // DROP before the cursor: an offset token would skip 'c'
+    rm(new java.io.File(s"$tmp/a.parquet"))
+    assert(page(p1.nextPageToken).tables.map(_.name) == Seq("c", "d"))
+    // ADD before the cursor: an offset token would list 'b' again
+    put("a")
+    put("aa")
+    val p2 = page(p1.nextPageToken)
+    assert(p2.tables.map(_.name) == Seq("c", "d"))
+    // the rest of the walk lists every remaining table exactly once
+    val p3 = page(p2.nextPageToken)
+    assert(p3.tables.map(_.name) == Seq("e", "f") && p3.nextPageToken.isEmpty)
+    rm(new java.io.File(tmp))
   }
 
   test("TTL token mode: snapshot pages under churn, expiry + mismatch reset") {

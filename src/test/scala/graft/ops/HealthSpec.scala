@@ -569,15 +569,35 @@ class HealthSpec extends SparkSpec {
       val (_, tools) = httpPost(base,
         """{"jsonrpc":"2.0","id":1,"method":"tools/list"}""")
       assert(tools.contains("run_chdb_select_query"))
-      // queries a parquet file IN PLACE through the guarded SQL path
-      val q = s"SELECT count(*) AS n FROM parquet.`$sf/nation.parquet`"
-      val (_, res) = httpPost(base,
-        s"""{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{
-           |"name":"run_chdb_select_query","arguments":{"query":${mcpStr(q)}}}}"""
-          .stripMargin)
-      assert(res.contains("\"isError\":false"), res.take(300))
-      assert(res.contains("25"), res.take(300)) // nation has 25 rows
+      // queries a parquet file IN PLACE through the guarded SQL path,
+      // natively and through the advertised file() table function
+      for (from <- Seq(s"parquet.`$sf/nation.parquet`", s"file('$sf/nation.parquet')")) {
+        val q = s"SELECT count(*) AS n FROM $from"
+        val (_, res) = httpPost(base,
+          s"""{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{
+             |"name":"run_chdb_select_query","arguments":{"query":${mcpStr(q)}}}}"""
+            .stripMargin)
+        assert(res.contains("\"isError\":false"), res.take(300))
+        assert(res.contains("[[25]]"), res.take(300)) // nation has 25 rows
+      }
     } finally { srv.close(); exec.close() }
+  }
+
+  test("list_tables rejects a page_size below 1 on /tables and /mcp") {
+    val cat = new graft.catalog.GraftCatalog(spark, sf)
+    val srv = HealthServer.start(spark, GraftConfig(Map.empty), None, Some(cat))
+    try {
+      for (n <- Seq(0, -1)) {
+        val (code, body) = httpGet(s"http://localhost:${srv.port}/tables?page_size=$n")
+        assert(code == 400, body)
+        assert(body.contains("page_size must be at least 1"), body)
+        val (_, res) = httpPost(s"http://localhost:${srv.port}/mcp",
+          s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{
+             |"name":"list_tables","arguments":{"page_size":$n}}}""".stripMargin)
+        assert(res.contains("\"isError\":true"), res)
+        assert(res.contains("page_size must be at least 1"), res)
+      }
+    } finally srv.close()
   }
 
   private def mcpStr(s: String): String =

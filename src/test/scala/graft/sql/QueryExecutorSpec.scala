@@ -1107,4 +1107,138 @@ class QueryExecutorSpec extends SparkSpec {
       assert(r.toCsv.linesIterator.toSeq(1) == "86400,24", r.toCsv)
     } finally ex.close()
   }
+
+  /** A JSON-lines file of `n` records in a fresh temp directory;
+    * gzipped, it cannot be split, so one task reads all of it. */
+  private def jsonLines(n: Int, gzip: Boolean = false): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_json").toFile
+    val f = new java.io.File(dir, if (gzip) "big.json.gz" else "big.json")
+    val os: java.io.OutputStream = new java.io.FileOutputStream(f)
+    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      if (gzip) new java.util.zip.GZIPOutputStream(os, 1 << 16) else os,
+      java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
+    try (0 until n).foreach { i =>
+      w.write(s"""{"id":$i,"s":"s$i","d":$i.5,"b":${i % 2 == 0},""" +
+        s""""a":[$i,${i + 1}],"o":{"k":"v${i % 97}","n":${i % 13}}}""")
+      w.newLine()
+    } finally w.close()
+    f
+  }
+
+  /** `body`'s outcome, and the tag set of every Spark job it started, in
+    * start order. A marker job run afterwards drains the listener bus:
+    * events arrive in order, so once its start is seen, every earlier
+    * job's start has been seen too. */
+  private def jobTags[A](body: => A): (Either[Throwable, A], Seq[Set[String]]) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(',').filter(_.nonEmpty).toSet))
+    }
+    sc.addSparkListener(listener)
+    val out = try Right(body) catch { case e: Throwable => Left(e) }
+    val marker = s"spec-marker-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
+    val until = System.currentTimeMillis + 30000
+    while (!seen.asScala.exists(_(marker)) && System.currentTimeMillis < until)
+      Thread.sleep(10)
+    sc.removeSparkListener(listener)
+    (out, seen.asScala.toSeq.takeWhile(!_(marker)))
+  }
+
+  test("every job a statement starts carries its tag, planning included") {
+    // json.`path` infers its schema with a Spark job while the
+    // statement is planned, before any result is collected
+    val f = jsonLines(2000)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      val sql = s"SELECT count(*) AS n FROM json.`${f.getPath}`"
+      for ((what, call) <- Seq[(String, () => Any)](
+          "run" -> (() => ex.run(sql)),
+          "explainSafe" -> (() => ex.explainSafe(sql)))) {
+        val (out, jobs) = jobTags(call())
+        out match {
+          case Right(r: QueryResult) => assert(r.rows == Seq(Seq(2000L)))
+          case Right(e: Either[_, _]) => assert(e.isRight, e)
+          case other => fail(s"$what: $other")
+        }
+        assert(jobs.nonEmpty, what)
+        val tags = jobs.map(_.filter(_.startsWith("graft-query-")))
+        assert(tags.forall(_.size == 1), s"$what: untagged job in $jobs")
+        assert(tags.distinct.size == 1, s"$what: more than one tag in $jobs")
+      }
+    } finally { ex.close(); f.delete(); f.getParentFile.delete() }
+  }
+
+  test("the deadline covers planning: inference past it times out and leaves nothing running") {
+    // 800k gzipped JSON lines (73 MB unpacked, 13 MB on disk): one task
+    // infers their schema, which alone took 2.3 s on a 4-core x86 VM,
+    // past the 1 s deadline, so the statement fails while being planned
+    val f = jsonLines(800000, gzip = true)
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 1)
+    val probe = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      val sql = s"SELECT count(*) AS n FROM json.`${f.getPath}`"
+      var ms = 0L
+      val (out, jobs) = jobTags {
+        val t0 = System.nanoTime
+        try ex.run(sql) finally ms = (System.nanoTime - t0) / 1000000
+      }
+      assert(out.left.toOption.exists(_.isInstanceOf[TimeoutException]),
+        s"answered after $ms ms: $out")
+      assert(out.left.toOption.get.getMessage == "Query timed out after 1 seconds")
+      assert(ms < 2000, s"timed out after $ms ms")
+      // one job, the inference: execution never started
+      val tagged = jobs.filter(_.exists(_.startsWith("graft-query-")))
+      assert(tagged.size == 1, s"tagged jobs: $tagged")
+      val tag = tagged.head.find(_.startsWith("graft-query-"))
+      // the tag's jobs stop (the status store follows the listener bus)
+      val st = spark.sparkContext.statusTracker
+      def active = st.getJobIdsForTag(tag.get).toSeq.flatMap(st.getJobInfo)
+        .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+      val until = System.currentTimeMillis + 10000
+      while (active.nonEmpty && System.currentTimeMillis < until) Thread.sleep(50)
+      assert(active.isEmpty)
+      val procs = probe.run("SELECT query FROM system.processes")
+      assert(!procs.rows.exists(_.head.toString.contains(f.getPath)), procs.rows)
+    } finally {
+      ex.close(); probe.close(); f.delete(); f.getParentFile.delete()
+    }
+  }
+
+  test("file(), s3() and hdfs() read files in place on the guarded path") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val dir = java.nio.file.Files.createTempDirectory("graft_tvf")
+    val csv = dir.resolve("n.csv")
+    java.nio.file.Files.writeString(csv, "a,b\n1,x\n2,y\n")
+    try {
+      assert(ex.run(s"SELECT count(*) AS n FROM file('$sf/nation.parquet')")
+        .rows == Seq(Seq(25L)))
+      assert(ex.run(s"SELECT * FROM file('$sf/nation.parquet')").rows.size == 25)
+      assert(ex.run(s"SELECT sum(a) AS s, max(b) AS m FROM file('$csv', 'CSVWithNames')")
+        .rows == Seq(Seq(3L, "y")))
+      assert(ex.run(s"SELECT count(*) AS n FROM hdfs('file://$sf/region.parquet')")
+        .rows == Seq(Seq(5L)))
+      assert(ex.run(s"SELECT count(*) AS n FROM s3('$sf/region.parquet', 'Parquet')")
+        .rows == Seq(Seq(5L)))
+      // a non-constant argument and an http(s) URL are refused with the
+      // function's own message; url() itself is not registered
+      val nonConst = ex.runSafe("SELECT * FROM file(uuid())")
+      assert(nonConst.left.exists(_.contains("file() requires constant string arguments")),
+        nonConst)
+      val http = ex.runSafe("SELECT * FROM s3('http://localhost:1/n.csv')")
+      assert(http.left.exists(_.contains("http(s) URLs are not served")), http)
+      assert(ex.runSafe("SELECT * FROM url('http://localhost:1/n.csv')").isLeft)
+    } finally {
+      ex.close(); java.nio.file.Files.delete(csv); java.nio.file.Files.delete(dir)
+    }
+  }
 }
