@@ -35,6 +35,10 @@ object Serve {
       // a pasted `SELECT "col" FROM t` would silently select a constant
       .config("spark.sql.ansi.doubleQuotedIdentifiers", "true")
       .config("spark.ui.enabled", "false")
+      // a served statement generates ~3.3 classes; Spark's default 100
+      // entries hold ~30 statements, so a cycling working set compiles
+      // its classes again on every repeat. 1000 entries hold ~300.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     TableEnv.register(spark, dir)

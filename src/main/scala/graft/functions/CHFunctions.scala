@@ -1465,8 +1465,9 @@ object CHFunctions {
     "anyLastOrNull" -> (es => fn("last", es.head, Literal(true))),
     "countOrNull" -> (es => fn("nullif", fn("count",
       (if (es.isEmpty) Seq(Literal(1)) else es): _*), Literal(0L))),
-    "uniqOrNull" -> (es =>
-      fn("nullif", HyperLogLogPlusPlus(uniqInput(es)), Literal(0L))),
+    "uniqOrNull" -> (es => fn("nullif",
+      HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)
+        .toAggregateExpression(), Literal(0L))),
     "uniqExactOrNull" -> (es => fn("nullif",
       Count(es).toAggregateExpression(isDistinct = true), Literal(0L))),
     "sumOrDefault" -> (es =>
@@ -1481,7 +1482,8 @@ object CHFunctions {
       Coalesce(Seq(fn("first", es.head, Literal(true)), Literal(0)))),
     "countOrDefault" -> (es => fn("count",
       (if (es.isEmpty) Seq(Literal(1)) else es): _*)),
-    "uniqOrDefault" -> (es => HyperLogLogPlusPlus(uniqInput(es))),
+    "uniqOrDefault" -> (es =>
+      HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)),
     "argMaxOrNull" -> (es => fn("max_by", es.head, es(1))),
     "argMinOrNull" -> (es => fn("min_by", es.head, es(1))),
     // parametric quantile × -OrNull/-OrDefault (args-first routed:

@@ -341,6 +341,9 @@ final class QueryExecutor(
       val df = select(sql)
       if (expired.get) throw timedOut
       val collected = df.limit(capRows + 1).collect()
+      // a FROM-less statement is evaluated on the driver, with no job
+      // the deadline could cancel
+      if (expired.get) throw timedOut
       rows = collected.length.min(capRows).toLong
       QueryResult(
         df.columns.toSeq,

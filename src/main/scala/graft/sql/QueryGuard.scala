@@ -1,7 +1,9 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement,
+  LocalRelation, LogicalPlan, OneRowRelation}
 
 /** Read-only enforcement for the SQL surface.
   *
@@ -142,7 +144,11 @@ object QueryGuard {
     * and the dialect query pack: text shims ([[normalizeDialect]]) →
     * read-only guard → plan, then the post-plan shims that need the
     * result schema ([[WithFill]]'s dense-axis rewrite). Each call is
-    * one statement with its own [[Binding]]. */
+    * one statement with its own [[Binding]]. The returned plan is the
+    * analyzed plan after graft's rules (the end of [[planNormalized]]):
+    * CH's wrapping integer arithmetic, the split DISTINCT aggregates,
+    * and FROM-less SELECTs over a one-row local relation, which Spark
+    * answers on the driver without a job. */
   def plan(spark: SparkSession, sql: String)
       : org.apache.spark.sql.DataFrame = planIn(new Binding(spark), sql)
 
@@ -394,10 +400,19 @@ object QueryGuard {
     // SplitDistinctAggregate runs on the same analyzed plan: it
     // separates DISTINCT aggregates from heavy-buffered regular
     // aggregates so the expanded distinct phase stays a codegen'd
-    // hash aggregate instead of sort-falling-back (see the rule)
+    // hash aggregate instead of sort-falling-back (see the rule).
+    // Last, every OneRowRelation leaf of the main tree (a FROM-less
+    // SELECT) becomes a one-row local relation: Spark's own
+    // ConvertToLocalRelation then folds the Project/Filter/Limit above
+    // it on the driver, so the statement collects from a
+    // LocalTableScan with no job and no whole-stage class. Subquery
+    // expressions keep theirs, so OptimizeOneRowRelationSubquery
+    // still inlines scalar subqueries.
     graft.plans.Bridge.ofRows(b.spark,
       graft.functions.WrapArith(graft.plans.SplitDistinctAggregate(
-        planned.queryExecution.analyzed)))
+        planned.queryExecution.analyzed)).transform {
+        case _: OneRowRelation => LocalRelation(Nil, Seq(InternalRow.empty))
+      })
   }
 
   /** Is there a top-level plain JOIN — keyword or comma-list — between

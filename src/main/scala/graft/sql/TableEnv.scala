@@ -38,13 +38,13 @@ object TableEnv {
       QueryLog.registerStatic(spark, dir)
       // CH's constant/generator system tables, for pasted dotted
       // references (QueryGuard rewrites `system.one` → `system_one`):
-      // system.one is the 1-row dummy source; system.numbers is the
+      // system.one is the 1-row dummy source, a local relation the
+      // driver answers without a job; system.numbers is the
       // unbounded counter — a Range LEAF, so a LIMIT takes only the
       // rows it needs and a full scan is the same user error (bounded
       // here by the executor timeout) it is on ClickHouse
-      import org.apache.spark.sql.functions.lit
-      spark.range(1).select(lit(0).cast("tinyint").as("dummy"))
-        .createOrReplaceTempView("system_one")
+      import spark.implicits._
+      Seq(0.toByte).toDF("dummy").createOrReplaceTempView("system_one")
       val numbers = spark.range(0, Long.MaxValue).toDF("number")
       numbers.createOrReplaceTempView("system_numbers")
       // CH's multithreaded variant — same rows, and the Range leaf
@@ -54,7 +54,6 @@ object TableEnv {
       // debugging (SELECT * FROM system.settings WHERE changed) —
       // CH's (name, value, changed, description) shape over the live
       // session confs plus the serving limits
-      import spark.implicits._
       val defaults = Map(
         "spark.sql.shuffle.partitions" -> "200",
         "spark.sql.session.timeZone" -> "",

@@ -1241,4 +1241,113 @@ class QueryExecutorSpec extends SparkSpec {
       ex.close(); java.nio.file.Files.delete(csv); java.nio.file.Files.delete(dir)
     }
   }
+
+  test("FROM-less SELECTs and system.one run on the driver: no job, no compile") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    // counts every class compiled; a codegen cache hit compiles nothing
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    try {
+      // each pair has one output shape: the first text may compile that
+      // shape's row projections, the second has a literal of its own,
+      // which an executed plan would compile into a new whole-stage class
+      for ((warm, sql, want) <- Seq(
+          ("SELECT 40 + 2 AS x, concat('a', 'b') AS s",
+            "SELECT 6007 * 7 AS x, concat('gr', 'aft') AS s",
+            Seq(Seq(42049, "graft"))),
+          ("SELECT dummy + 1 AS d FROM system.one",
+            "SELECT dummy + 9173 AS d FROM system.one", Seq(Seq(9173))))) {
+        ex.run(warm)
+        val (out, jobs) = jobTags {
+          val before = compiles.getCount
+          (ex.run(sql), compiles.getCount - before)
+        }
+        val (r, compiled) = out.toTry.get
+        assert(r.rows == want, sql)
+        assert(jobs.isEmpty, s"$sql started jobs $jobs")
+        assert(compiled == 0, s"$sql compiled $compiled classes")
+      }
+    } finally ex.close()
+  }
+
+  test("FROM-less corpus statements answer as their executed plans do") {
+    // perfbench's corpus pins every statement's outcome on the served
+    // path; its FROM-less `exact` ones are compared here with the same
+    // text planned without ConvertToLocalRelation, which runs the
+    // projection in a Spark task as an executed plan would
+    import scala.jdk.CollectionConverters._
+    TableEnv.register(spark, sf)
+    val corpus = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("perfbench/corpus.json"))
+      .get("statements").elements.asScala.toSeq
+    val fromless = corpus.filter(s =>
+      s.get("expect").asText == "rows" && s.get("check").asText == "exact" &&
+        "(?i)\\bFROM\\b".r.findFirstIn(s.get("sql").asText).isEmpty)
+      .map(s => s.get("label").asText -> s.get("sql").asText)
+    assert(fromless.size == 254)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sc = spark.sparkContext
+    def answers = fromless.map { case (label, sql) =>
+      sc.addJobTag(s"corpus-$label")
+      try ex.runSafe(sql).map(_.toJson) finally sc.removeJobTag(s"corpus-$label")
+    }
+    val rule = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(rule)
+    try {
+      val (local, jobs) = jobTags(answers)
+      spark.conf.set(rule,
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      val executed = answers
+      val differ = fromless.map(_._1).zip(local.toTry.get.zip(executed))
+        .filter { case (_, (a, b)) => a != b }
+      assert(differ.isEmpty, differ.mkString("\n"))
+      assert(local.toTry.get.forall(_.isRight), local)
+      // only arrayJoin's generator runs as a job
+      val withJobs = jobs.flatten.filter(_.startsWith("corpus-")).distinct
+      assert(withJobs.sorted == Seq(
+        "corpus-w19_scalar_range", "corpus-w50_fromless_generators"), withJobs)
+    } finally {
+      prev.fold(spark.conf.unset(rule))(spark.conf.set(rule, _))
+      ex.close()
+    }
+  }
+
+  test("driver-evaluated FROM-less SELECTs keep CH's semantics, subqueries and EXPLAIN") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      // literal integral overflow wraps (WrapArith runs before the
+      // driver folds the projection)
+      assert(ex.run("SELECT 9223372036854775807 + 1 AS x").rows ==
+        Seq(Seq(Long.MinValue)))
+      // a scalar subquery over a table, and a correlated one over a
+      // FROM-less select, which Spark inlines
+      val n = ex.run("SELECT count(*) AS n FROM orders").rows.head.head
+      assert(ex.run("SELECT (SELECT count(*) FROM orders) AS n, 1 + 1 AS two")
+        .rows == Seq(Seq(n, 2)))
+      assert(ex.run(
+        """SELECT o_orderkey + 1 = (SELECT o_orderkey + 1) AS same
+          |FROM orders LIMIT 3""".stripMargin).rows == Seq.fill(3)(Seq(true)))
+      val plan = ex.explain("SELECT 1 + 2 AS x")
+      assert(plan.contains("LocalTableScan") && !plan.contains("OneRowRelation"), plan)
+    } finally ex.close()
+  }
+
+  test("the deadline still fails a slow driver-evaluated FROM-less SELECT") {
+    val ex = new QueryExecutor(spark, timeoutSec = 1)
+    try {
+      // 64M interpreted lambda calls (36M took 2 s on a 4-core x86 VM)
+      // and no table: evaluated on the driver while the plan is
+      // optimized, where no job can be cancelled
+      val t0 = System.nanoTime
+      val (out, jobs) = jobTags(ex.run(
+        """SELECT aggregate(sequence(1, 8000), 0L,
+          |  (a, x) -> a + aggregate(sequence(1, 8000), 0L, (b, y) -> b + y)) AS s
+          |""".stripMargin))
+      val ms = (System.nanoTime - t0) / 1000000
+      assert(out.left.toOption.exists(_.isInstanceOf[TimeoutException]), s"$ms ms: $out")
+      assert(out.left.toOption.get.getMessage == "Query timed out after 1 seconds")
+      assert(jobs.isEmpty, jobs)
+    } finally ex.close()
+  }
 }
