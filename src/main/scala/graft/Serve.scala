@@ -43,6 +43,12 @@ object Serve {
     spark.sparkContext.setLogLevel("WARN")
     TableEnv.register(spark, dir)
     val executor = Some(config.newExecutor(spark))
+    // the first statement of a fresh JVM spends seconds loading and
+    // compiling the planner, where no deadline can cancel it: pay that
+    // here, before /health turns 200. It reads a table function, so it
+    // runs a Spark job as a served aggregate does.
+    executor.foreach(_.runSafe("SELECT sum(number) FROM numbers(10)").left
+      .foreach(e => System.err.println(s"[graft] warm-up failed: $e")))
     val catalog = Some(new graft.catalog.GraftCatalog(spark, dir,
       defaultDatabase = config.database))
     config.role.foreach(r => System.err.println(s"[graft] serving as role '$r'"))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedExtractValue, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, HyperLogLogPlusPlus}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType, TimestampType}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** ClickHouse-dialect functions registered into Spark SQL (SURVEY §2
@@ -1119,52 +1119,56 @@ object CHFunctions {
     fn("struct", fn("array_min", hs), fn("array_max", hs))
   }
 
-  /** CH's multi-argument uniq family counts distinct *tuples*
-    * (`uniq(a, b)` = cardinality of (a, b) pairs), so for N > 1
-    * arguments the sketch input is the struct of all of them — the
-    * same grouping `uniqExact` (COUNT DISTINCT a, b) already models.
-    * Single argument passes through untouched (no struct overhead in
-    * the common case). */
-  private def uniqInput(es: Seq[Expression]): Expression =
-    if (es.lengthCompare(1) == 0) es.head else CreateStruct(es)
+  /** The key every `uniq*` sketches (`hll_sketch_agg`): one INT, BIGINT,
+    * STRING or BINARY argument as is; any other type, and every tuple
+    * (CH counts distinct tuples), as `xxhash64(args…)`, the hash
+    * `approx_count_distinct` applies. NULL if any argument is NULL, so
+    * the row is skipped, as in `uniqExact(a, b)`. */
+  private def uniqKey(es: Seq[Expression]): Expression = es.map(_.dataType) match {
+    case Seq(IntegerType | LongType | _: StringType | BinaryType) => es.head
+    case _ => If(es.map(IsNull).reduce[Expression](Or), Literal(null, LongType), new XxHash64(es))
+  }
 
-  /** uniqCombined[64]: bare form at rsd 1%; a leading *constant
-    * integer* (precision-first, from the param-agg shim) converts
-    * CH's HLL register-count exponent K to the equivalent relative
-    * error. A non-foldable or non-numeric first argument is a value
-    * column, so `uniqCombined(a, b)` is a tuple-distinct — not a
-    * precision parse (the round-14 INTERNAL_ERROR). */
+  /** 2^14 registers, RSE ≈ 0.8%: the smallest lgK inside CH's ~1%. */
+  private val UniqLgK = 14
+
+  private def uniqEstimate(key: Expression, lgK: Int = UniqLgK): Expression =
+    mergedEstimate(fn("hll_sketch_agg", key, Literal(lgK)))
+
+  /** A sketch's estimate, read off its union with itself: DataSketches
+    * keeps a HIP estimator on sketches built by in-order updates, so a
+    * bare estimate depends on partitioning and state grouping; after the
+    * union, `uniq` and `uniqMerge` read one estimator of the same
+    * registers. The planner computes the two identical aggregates once. */
+  private def mergedEstimate(sketch: Expression): Expression =
+    fn("hll_sketch_estimate", fn("hll_union", sketch, sketch))
+
+  /** uniqCombined[64]: a leading *constant number* (params-first, from
+    * the param-agg shim) is CH's precision K, used as the lgK. Any
+    * other first argument is a value, so `uniqCombined(a, b)` counts
+    * tuples (the round-14 INTERNAL_ERROR was a precision parse). */
   private def uniqCombinedExpr(es: Seq[Expression]): Expression = es match {
-    case Seq(x) => HyperLogLogPlusPlus(x, relativeSD = 0.01)
-    case Seq(k, x) if k.foldable &&
-        (k.eval() match { case _: Number => true; case _ => false }) =>
+    case k +: xs if xs.nonEmpty && k.foldable && k.eval().isInstanceOf[Number] =>
       val prec = k.eval().asInstanceOf[Number].intValue()
-      require(prec >= 4 && prec <= 20,
-        s"uniqCombined precision must be in [4, 20], got $prec")
-      HyperLogLogPlusPlus(x, relativeSD = 1.04 / math.sqrt(math.pow(2.0, prec)))
-    case many if many.lengthCompare(2) >= 0 =>
-      HyperLogLogPlusPlus(uniqInput(many), relativeSD = 0.01)
+      require(prec >= 4 && prec <= 20, s"uniqCombined precision must be in [4, 20], got $prec")
+      uniqEstimate(uniqKey(xs), prec)
+    case many if many.nonEmpty => uniqEstimate(uniqKey(many))
     case other => throw new IllegalArgumentException(
       s"uniqCombined expects (x), (a, b, ...) or (precision)(x), got ${other.size} arguments")
   }
 
   private val baseBuilders: Seq[(String, Builder)] = Seq(
-    // approximate + exact distinct
-    // CH's uniq/uniqHLL12 land ~0.5-2% practical error; Spark's
-    // default rsd=5% is visibly coarser (1400 vs 1500 exact in the
-    // round-13 verdict) — pin rsd=1% (≈10k HLL registers per group,
-    // still a bounded mergeable sketch at 100 TB)
-    "uniq" -> (es => HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)),
+    // approximate + exact distinct: every uniq* is one HLL sketch
+    // (uniqKey), a bounded mergeable binary buffer per group
+    "uniq" -> (es => uniqEstimate(uniqKey(es))),
     "uniqExact" -> (es => Count(es).toAggregateExpression(isDistinct = true)),
-    // the uniq sketch aliases share one HLL implementation (CH's three
-    // differ in their internal sketches; all are approximate
-    // cardinalities with similar error). uniqCombined(K)(x) carries
-    // its HLL precision: 2^K registers → rsd ≈ 1.04/√(2^K) (CH
-    // default K=17); the param-agg shim passes K params-first.
+    // the uniq sketch aliases share the one sketch (CH's three differ
+    // in their internal sketches; all are approximate cardinalities
+    // with similar error)
     "uniqCombined" -> (es => uniqCombinedExpr(es)),
     "uniqCombined64" -> (es => uniqCombinedExpr(es)),
-    "uniqHLL12" -> (es => HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)),
-    "uniqTheta" -> (es => HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)),
+    "uniqHLL12" -> (es => uniqEstimate(uniqKey(es))),
+    "uniqTheta" -> (es => uniqEstimate(uniqKey(es))),
     // groupBitmap = exact distinct cardinality of an integer column
     "groupBitmap" -> (es => Count(es).toAggregateExpression(isDistinct = true)),
     // the -State family over the engine's array-modeled bitmaps
@@ -1321,9 +1325,6 @@ object CHFunctions {
       Cast(flag, IntegerType)
     })),
 
-    // sketch state + merge (ClickHouse uniqState / uniqMerge): binary
-    // HLL sketches that pre-aggregate once and re-aggregate at any
-    // rollup level without rescanning — the 100 TB distinct-count path
     // the -State/-Merge combinator pairs for the plain aggregates
     // (AggregatingMergeTree's stored-partial pattern): for sum/min/max
     // the state IS the running value, count's state merges by sum, and
@@ -1375,8 +1376,11 @@ object CHFunctions {
     "quantileState" -> (es => QuantileStateAgg(es.head)),
     "quantileMerge" -> (es =>
       QuantileMergeAgg(es.head, QuantileSketch.literalDouble(es(1)))),
-    "uniqState" -> (es => fn("hll_sketch_agg", es: _*)),
-    "uniqMerge" -> (es => fn("hll_sketch_estimate", fn("hll_union_agg", es.head))),
+    // uniqState is uniq's sketch, reaggregable at any rollup level
+    // without rescanning. Merging allows different lgKs: states written
+    // at the old default lgK 12 (raw INT/BIGINT/STRING/BINARY) still merge
+    "uniqState" -> (es => fn("hll_sketch_agg", uniqKey(es), Literal(UniqLgK))),
+    "uniqMerge" -> (es => mergedEstimate(fn("hll_union_agg", es.head, Literal(true)))),
 
     // conditional aggregates
     "countIf" -> (es => fn("count_if", Truthy(es.head))),
@@ -1389,10 +1393,9 @@ object CHFunctions {
     // CASE-WHEN-null shape (aggregates skip nulls)
     // the condition is always the LAST argument; any leading args are
     // value columns (tuple-distinct for N > 1, like the bare family)
-    "uniqIf" -> (es =>
-      HyperLogLogPlusPlus(whenThen(es.last, uniqInput(es.init)), relativeSD = 0.01)),
-    "uniqExactIf" -> (es =>
-      Count(Seq(whenThen(es.last, uniqInput(es.init)))).toAggregateExpression(isDistinct = true)),
+    "uniqIf" -> (es => uniqEstimate(whenThen(es.last, uniqKey(es.init)))),
+    "uniqExactIf" -> (es => Count(es.init.map(whenThen(es.last, _)))
+      .toAggregateExpression(isDistinct = true)),
     "anyIf" -> (es => fn("first", whenThen(es(1), es.head), Literal(true))),
     "anyLastIf" -> (es => fn("last", whenThen(es(1), es.head), Literal(true))),
     "argMaxIf" -> (es =>
@@ -1465,9 +1468,7 @@ object CHFunctions {
     "anyLastOrNull" -> (es => fn("last", es.head, Literal(true))),
     "countOrNull" -> (es => fn("nullif", fn("count",
       (if (es.isEmpty) Seq(Literal(1)) else es): _*), Literal(0L))),
-    "uniqOrNull" -> (es => fn("nullif",
-      HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)
-        .toAggregateExpression(), Literal(0L))),
+    "uniqOrNull" -> (es => fn("nullif", uniqEstimate(uniqKey(es)), Literal(0L))),
     "uniqExactOrNull" -> (es => fn("nullif",
       Count(es).toAggregateExpression(isDistinct = true), Literal(0L))),
     "sumOrDefault" -> (es =>
@@ -1482,8 +1483,7 @@ object CHFunctions {
       Coalesce(Seq(fn("first", es.head, Literal(true)), Literal(0)))),
     "countOrDefault" -> (es => fn("count",
       (if (es.isEmpty) Seq(Literal(1)) else es): _*)),
-    "uniqOrDefault" -> (es =>
-      HyperLogLogPlusPlus(uniqInput(es), relativeSD = 0.01)),
+    "uniqOrDefault" -> (es => uniqEstimate(uniqKey(es))),
     "argMaxOrNull" -> (es => fn("max_by", es.head, es(1))),
     "argMinOrNull" -> (es => fn("min_by", es.head, es(1))),
     // parametric quantile × -OrNull/-OrDefault (args-first routed:
@@ -2529,8 +2529,7 @@ object CHFunctions {
     "avgResample" -> resampleBuilder("avgResample", e => fn("avg", e)),
     "minResample" -> resampleBuilder("minResample", e => fn("min", e)),
     "maxResample" -> resampleBuilder("maxResample", e => fn("max", e)),
-    "uniqResample" -> resampleBuilder("uniqResample",
-      e => HyperLogLogPlusPlus(e, relativeSD = 0.01).toAggregateExpression()),
+    "uniqResample" -> resampleBuilder("uniqResample", e => uniqEstimate(uniqKey(Seq(e)))),
     "uniqExactResample" -> resampleBuilder("uniqExactResample",
       e => Count(Seq(e)).toAggregateExpression(isDistinct = true)),
     // uniqArray: distinct elements across all arrays — exact (a

@@ -58,7 +58,10 @@ object GuidePrompt {
       |```
       |
       |## Dialect highlights (ClickHouse-compatible names)
-      |- Aggregates: `uniq` (+`uniqCombined`/`uniqHLL12` aliases),
+      |- Aggregates: `uniq` (one HLL sketch, ~0.8% error, independent
+      |  of partitioning; `uniqCombined(K)(x)` sets its precision; the
+      |  `uniqHLL12`/`uniqTheta` aliases and `uniqState`/`uniqMerge`
+      |  states share it, so `uniqMerge(uniqState(x))` = `uniq(x)`),
       |  `uniqExact`, `uniqUpTo`, `quantile(le)(0.9)(x)` shapes as
       |  `quantile(x, 0.9)`, `median`, `topK(x, 10)`, `argMax(a, b)`,
       |  `countIf`, `sumIf`, `anyHeavy`, `groupArray`,

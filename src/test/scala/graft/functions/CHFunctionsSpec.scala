@@ -11,8 +11,9 @@ class CHFunctionsSpec extends SparkSpec {
 
   test("uniq is within CH-parity HLL error of uniqExact") {
     graft.sql.TableEnv.register(spark, sf)
-    // rsd pinned at 1% (CH's uniq/uniqHLL12 land ~0.5-2% practical
-    // error; Spark's 5% default showed 1400 vs 1500 in round 13)
+    // one HLL sketch at lgK 14, RSE ≈ 0.8% (CH's uniq/uniqHLL12 land
+    // ~0.5-2% practical error; Spark's 5% default showed 1400 vs 1500
+    // in round 13)
     val r = one(
       """SELECT uniq(o_custkey), uniqExact(o_custkey),
         |  uniqCombined(17, o_custkey), uniqHLL12(o_custkey)
@@ -25,8 +26,9 @@ class CHFunctionsSpec extends SparkSpec {
   }
 
   test("uniqOrNull and uniqOrDefault estimate exactly as uniq does") {
-    // all three are HLL++ at rsd 0.01; Spark's default 0.05 read a
-    // different count for the same 1000-distinct column
+    // all three read the one uniq sketch; Spark's approx_count_distinct
+    // at its default rsd 0.05 read a different count for the same
+    // 1000-distinct column
     CHFunctions.register(spark)
     def guarded(sql: String) =
       graft.sql.QueryGuard.plan(spark, sql).collect().head
@@ -168,6 +170,28 @@ class CHFunctionsSpec extends SparkSpec {
     val (merged, exact) = (r.getLong(0).toDouble, r.getLong(1).toDouble)
     assert(math.abs(merged - exact) / exact < 0.05,
       s"merged=$merged exact=$exact")
+  }
+
+  test("uniqState keys any type and counts tuples, as uniq does") {
+    // a DOUBLE is no hll_sketch_agg input, and a second argument is a
+    // tuple member, not the sketch's lgK
+    val r = one(
+      """SELECT uniqMerge(sd), uniqMerge(st) FROM (
+        |  SELECT a, uniqState(x) AS sd, uniqState(a, b) AS st FROM VALUES
+        |    (1.5D, 1, 5), (2.5D, 1, 6), (2.5D, 2, 5), (NULL, 2, 5) t(x, a, b)
+        |  GROUP BY a)""".stripMargin)
+    assert(r.getLong(0) == 2L && r.getLong(1) == 3L, r)
+  }
+
+  test("a state written at the old default lgK merges with uniqState") {
+    // hll_sketch_agg(x) is lgK 12, the state uniqState used to write;
+    // BIGINT keys are raw in both, so the 500 shared values count once
+    // (the union runs at lgK 12: 3 RSE = 3 * 1.04 / 64)
+    val r = one(
+      """SELECT uniqMerge(s) FROM (
+        |  SELECT hll_sketch_agg(id) AS s FROM range(0, 1000)
+        |  UNION ALL SELECT uniqState(id) AS s FROM range(500, 1500))""".stripMargin)
+    assert(math.abs(r.getLong(0) - 1500L) <= 3 * 1.04 / 64 * 1500, r)
   }
 
   test("quantileState sketches merge across groups like quantileMerge") {

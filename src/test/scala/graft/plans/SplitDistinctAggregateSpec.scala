@@ -32,6 +32,19 @@ class SplitDistinctAggregateSpec extends SparkSpec {
     assert(rows(q) == unsplit(q))
   }
 
+  test("grouped distinct + uniq sketches: split matches unsplit") {
+    // the uniq sketch is a TypedImperativeAggregate, so it splits off
+    // count(DISTINCT); its estimate must not depend on the plan shape
+    val q = """SELECT o_orderpriority, count(DISTINCT o_custkey) AS nc,
+              |  uniq(o_orderstatus) AS us, uniq(o_custkey, o_orderstatus) AS ut,
+              |  uniq(o_totalprice) AS up
+              |FROM orders GROUP BY o_orderpriority
+              |ORDER BY o_orderpriority""".stripMargin
+    val plan = QueryGuard.plan(spark, q).queryExecution.executedPlan.toString()
+    assert(plan.contains("Join"), plan.take(800))
+    assert(rows(q) == unsplit(q))
+  }
+
   test("global aggregate: cross join of the two one-row sides") {
     val q = """SELECT count(DISTINCT o_custkey) AS nc,
               |  min(o_orderstatus) AS mn, sum(o_orderkey) AS s

@@ -119,6 +119,12 @@ class ChronoArithSpec extends SparkSpec {
       assert(math.abs(r.getLong(i) - exact) / exact < 0.015,
         s"col $i: ${r.getLong(i)} vs exact $exact")
     }
+    // a tuple with a NULL member is skipped, as COUNT(DISTINCT a, b) does
+    val n = one(
+      """SELECT uniq(a, b) AS u, uniqExact(a, b) AS ue, uniqIf(a, b, a = 1) AS ui,
+        |  uniqExactIf(a, b, a = 1) AS uei
+        |FROM VALUES (NULL, 1), (NULL, 2), (1, 1), (1, NULL) t(a, b)""".stripMargin)
+    assert((0 to 3).forall(n.getLong(_) == 1L), n)
   }
 
   test("uniqCombined keeps the (precision)(x) parametric form") {
