@@ -46,8 +46,10 @@ object Serve {
     // the first statement of a fresh JVM spends seconds loading and
     // compiling the planner, where no deadline can cancel it: pay that
     // here, before /health turns 200. It reads a table function, so it
-    // runs a Spark job as a served aggregate does.
-    executor.foreach(_.runSafe("SELECT sum(number) FROM numbers(10)").left
+    // runs a Spark job as a served aggregate does. It takes the served
+    // path, so it is the first row of system.query_log; the comment
+    // names it there.
+    executor.foreach(_.runSafe("/* graft warm-up */ SELECT sum(number) FROM numbers(10)").left
       .foreach(e => System.err.println(s"[graft] warm-up failed: $e")))
     val catalog = Some(new graft.catalog.GraftCatalog(spark, dir,
       defaultDatabase = config.database))

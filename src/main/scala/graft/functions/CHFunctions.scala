@@ -1119,13 +1119,15 @@ object CHFunctions {
     fn("struct", fn("array_min", hs), fn("array_max", hs))
   }
 
-  /** The key every `uniq*` sketches (`hll_sketch_agg`): one INT, BIGINT,
-    * STRING or BINARY argument as is; any other type, and every tuple
-    * (CH counts distinct tuples), as `xxhash64(args…)`, the hash
-    * `approx_count_distinct` applies. NULL if any argument is NULL, so
-    * the row is skipped, as in `uniqExact(a, b)`. */
+  /** The key every `uniq*` sketches (`hll_sketch_agg`): one INT or
+    * BIGINT argument as is; any other type, and every tuple (CH counts
+    * distinct tuples), as `xxhash64(args…)`, the hash
+    * `approx_count_distinct` applies. Strings and binaries are hashed
+    * too: the sketch ignores an empty one, where CH counts ''. NULL if
+    * any argument is NULL, so the row is skipped, as in
+    * `uniqExact(a, b)`. */
   private def uniqKey(es: Seq[Expression]): Expression = es.map(_.dataType) match {
-    case Seq(IntegerType | LongType | _: StringType | BinaryType) => es.head
+    case Seq(IntegerType | LongType) => es.head
     case _ => If(es.map(IsNull).reduce[Expression](Or), Literal(null, LongType), new XxHash64(es))
   }
 
@@ -1378,7 +1380,7 @@ object CHFunctions {
       QuantileMergeAgg(es.head, QuantileSketch.literalDouble(es(1)))),
     // uniqState is uniq's sketch, reaggregable at any rollup level
     // without rescanning. Merging allows different lgKs: states written
-    // at the old default lgK 12 (raw INT/BIGINT/STRING/BINARY) still merge
+    // at the old default lgK 12 over raw INT/BIGINT keys still merge
     "uniqState" -> (es => fn("hll_sketch_agg", uniqKey(es), Literal(UniqLgK))),
     "uniqMerge" -> (es => mergedEstimate(fn("hll_union_agg", es.head, Literal(true)))),
 

@@ -21,7 +21,8 @@ class UniqSketchSpec extends SparkSpec {
 
   /** name → (column expressions over a BIGINT `v`, distinct values
     * the type can hold). SMALLINT holds 65,536 values, so its largest
-    * cardinality is the whole domain. */
+    * cardinality is the whole domain. STRING and BINARY map v = 0 to
+    * the empty value, which CH counts as one. */
   private val types: Seq[(String, Seq[String], Long)] = Seq(
     ("INT", Seq("CAST(v AS INT)"), Long.MaxValue),
     ("BIGINT", Seq("v * 1000003"), Long.MaxValue),
@@ -29,7 +30,8 @@ class UniqSketchSpec extends SparkSpec {
     ("DOUBLE", Seq("v * 0.5D + 0.25D"), Long.MaxValue),
     ("DECIMAL", Seq("CAST(v AS DECIMAL(18, 2)) / 100"), Long.MaxValue),
     ("DATE", Seq("date_add(DATE'1970-01-01', CAST(v AS INT))"), Long.MaxValue),
-    ("STRING", Seq("concat('k', v)"), Long.MaxValue),
+    ("STRING", Seq("IF(v = 0, '', concat('k', v))"), Long.MaxValue),
+    ("BINARY", Seq("CAST(IF(v = 0, '', concat('b', v)) AS BINARY)"), Long.MaxValue),
     ("TUPLE", Seq("CAST(v % 1000 AS INT)", "concat('s', v DIV 1000)"), Long.MaxValue))
 
   private val cardinalities = Seq(0L, 1L, 100L, 3000L, 300000L)
@@ -39,15 +41,20 @@ class UniqSketchSpec extends SparkSpec {
     for ((name, cols, domain) <- types; card0 <- cardinalities) {
       val card = math.min(card0, domain)
       val args = cols.indices.map(i => s"x$i").mkString(", ")
-      // every value twice, in `parts` input partitions; g groups the
-      // rows 7 ways for the state/merge round trip
+      // every value twice, in `parts` input partitions, plus one row
+      // whose first column is NULL: skipped, as by uniqExact, also as
+      // a tuple member; g groups the rows 7 ways for the state/merge
+      // round trip
       def view(parts: Int): String = {
         val v = s"t_uniq_$parts"
+        val xs = cols.zipWithIndex.map {
+          case (c, 0) => s"IF(id = ${2 * card}, NULL, $c) AS x0"
+          case (c, i) => s"$c AS x$i"
+        }
         spark.sql(
-          s"""SELECT ${cols.zipWithIndex.map { case (c, i) => s"$c AS x$i" }.mkString(", ")},
-             |  id % 7 AS g
+          s"""SELECT ${xs.mkString(", ")}, id % 7 AS g
              |FROM (SELECT id, id % ${math.max(card, 1L)} AS v
-             |      FROM range(0, ${2 * card}, 1, $parts))""".stripMargin)
+             |      FROM range(0, ${2 * card + 1}, 1, $parts))""".stripMargin)
           .createOrReplaceTempView(v)
         v
       }
