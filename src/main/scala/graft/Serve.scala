@@ -46,11 +46,17 @@ object Serve {
     // the first statement of a fresh JVM spends seconds loading and
     // compiling the planner, where no deadline can cancel it: pay that
     // here, before /health turns 200. It reads a table function, so it
-    // runs a Spark job as a served aggregate does. It takes the served
-    // path, so it is the first row of system.query_log; the comment
-    // names it there.
-    executor.foreach(_.runSafe("/* graft warm-up */ SELECT sum(number) FROM numbers(10)").left
-      .foreach(e => System.err.println(s"[graft] warm-up failed: $e")))
+    // runs a Spark job as a served aggregate does. A grouped aggregate
+    // over the smallest registered table then pays the first parquet
+    // scan and aggregate codegen, which a client's first table query
+    // would otherwise pay. Both take the served path, so they are the
+    // first rows of system.query_log; the comment names them there.
+    val warmUps = "SELECT sum(number) FROM numbers(10)" +: smallestTable(spark, dir).toSeq.map {
+      case (table, column) => s"SELECT `$column`, count() FROM `$table` GROUP BY 1"
+    }
+    for (exec <- executor; sql <- warmUps)
+      exec.runSafe(s"/* graft warm-up */ $sql").left
+        .foreach(e => System.err.println(s"[graft] warm-up failed: $e"))
     val catalog = Some(new graft.catalog.GraftCatalog(spark, dir,
       defaultDatabase = config.database))
     config.role.foreach(r => System.err.println(s"[graft] serving as role '$r'"))
@@ -66,6 +72,19 @@ object Serve {
       println("graft serving /health /query /explain /databases /tables " +
         s"/mcp /prompt$sse on ${config.bindHost}:${server.port}")
       Thread.currentThread.join() // serve until killed
+    }
+  }
+
+  /** The registered table with the fewest bytes under `dir`, with its
+    * first column; none when the directory holds no table. */
+  private def smallestTable(spark: SparkSession, dir: String): Option[(String, String)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    graft.Tables.all.flatMap { name =>
+      val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+      val fs = path.getFileSystem(conf)
+      if (fs.exists(path)) Some(name -> fs.getContentSummary(path).getLength) else None
+    }.minByOption(_._2).map { case (name, _) =>
+      name -> spark.table(name).schema.fieldNames.head
     }
   }
 }

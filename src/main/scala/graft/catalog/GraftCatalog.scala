@@ -418,14 +418,12 @@ object GraftCatalog {
       st: FileStatus,
       conf: org.apache.hadoop.conf.Configuration): Part = {
     import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-    try {
+    graft.sources.Sink.withFooter(st, conf) { reader =>
       val blocks = reader.getRowGroups.asScala
       Part(st, blocks.map(_.getRowCount).sum,
         blocks.map(_.getColumns.asScala.map(_.getTotalUncompressedSize).sum).sum,
         blocks.size)
-    } finally reader.close()
+    }
   }
 
   /** SQL LIKE → anchored regex ('%' ≡ '.*', '_' ≡ '.'), case-sensitive

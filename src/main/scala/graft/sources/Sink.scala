@@ -95,16 +95,14 @@ object Sink {
     fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map { st =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
-        try {
+        withFooter(st, hconf) { reader =>
           val stats = reader.getRowGroups.asScala.flatMap(
             _.getColumns.asScala
               .filter(_.getPath.toDotString == column).map(_.getStatistics))
           val mins = stats.map(_.genericGetMin.asInstanceOf[Number].longValue)
           val maxs = stats.map(_.genericGetMax.asInstanceOf[Number].longValue)
           (st.getPath.getName, mins.min, maxs.max)
-        } finally reader.close()
+        }
       }
   }
 
@@ -119,13 +117,23 @@ object Sink {
     fs.listStatus(p)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .exists { st =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
-        try reader.getRowGroups.asScala.exists(
+        withFooter(st, hconf)(_.getRowGroups.asScala.exists(
           _.getColumns.asScala.exists(c =>
-            c.getPath.toDotString == column && c.getBloomFilterOffset >= 0))
-        finally reader.close()
+            c.getPath.toDotString == column && c.getBloomFilterOffset >= 0)))
       }
+  }
+
+  /** Reads one parquet file's footer with the given Hadoop conf.
+    * `ParquetFileReader.open(InputFile)` alone builds default read
+    * options over a fresh `Configuration`, which re-parses Hadoop's
+    * XML defaults from the classpath on every file. */
+  def withFooter[T](st: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    try read(reader) finally reader.close()
   }
 
   /** Compact a parquet directory to ~`targetFileBytes` output files —

@@ -340,14 +340,14 @@ final class QueryExecutor(
     try {
       val df = select(sql)
       if (expired.get) throw timedOut
-      val collected = df.limit(capRows + 1).collect()
+      val collected = graft.plans.Bridge.collectValues(df.limit(capRows + 1))
       // a FROM-less statement is evaluated on the driver, with no job
       // the deadline could cancel
       if (expired.get) throw timedOut
       rows = collected.length.min(capRows).toLong
       QueryResult(
         df.columns.toSeq,
-        collected.take(capRows).toSeq.map(_.toSeq),
+        collected.take(capRows).toSeq,
         truncated = collected.length > capRows)
     } catch {
       case e: Throwable =>

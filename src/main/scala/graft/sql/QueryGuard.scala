@@ -3,7 +3,10 @@ package graft.sql
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement,
-  LocalRelation, LogicalPlan, OneRowRelation}
+  LocalRelation, LogicalPlan, OneRowRelation, Repartition}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Read-only enforcement for the SQL surface.
   *
@@ -401,19 +404,48 @@ object QueryGuard {
     // separates DISTINCT aggregates from heavy-buffered regular
     // aggregates so the expanded distinct phase stays a codegen'd
     // hash aggregate instead of sort-falling-back (see the rule).
-    // Last, every OneRowRelation leaf of the main tree (a FROM-less
-    // SELECT) becomes a one-row local relation: Spark's own
-    // ConvertToLocalRelation then folds the Project/Filter/Limit above
-    // it on the driver, so the statement collects from a
-    // LocalTableScan with no job and no whole-stage class. Subquery
-    // expressions keep theirs, so OptimizeOneRowRelationSubquery
-    // still inlines scalar subqueries.
+    // Last, two leaf rewrites of the main tree; subquery expressions
+    // keep their leaves, so OptimizeOneRowRelationSubquery still
+    // inlines scalar subqueries. Bottom-up, so a leaf wrapped in a
+    // new node is not visited again.
+    // - every OneRowRelation (a FROM-less SELECT) becomes a one-row
+    //   local relation: Spark's own ConvertToLocalRelation then folds
+    //   the Project/Filter/Limit above it on the driver, so the
+    //   statement collects from a LocalTableScan with no job and no
+    //   whole-stage class.
+    // - a file relation small enough that an exchange above it could
+    //   buy no parallelism gets a shuffle-free Repartition(1) above
+    //   it: its Coalesce(1) reports a single partition, so the
+    //   aggregate, window or sort above plans no exchange and runs as
+    //   one job of one task, with no AQE map stage.
+    val conf = b.spark.sessionState.conf
+    val oneTaskBytes = math.min(conf.filesOpenCostInBytes,
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     graft.plans.Bridge.ofRows(b.spark,
       graft.functions.WrapArith(graft.plans.SplitDistinctAggregate(
-        planned.queryExecution.analyzed)).transform {
+        planned.queryExecution.analyzed)).transformUp {
         case _: OneRowRelation => LocalRelation(Nil, Seq(InternalRow.empty))
+        case l: LogicalRelation if !l.isStreaming && oneTask(l, oneTaskBytes) =>
+          Repartition(1, shuffle = false, l)
       })
   }
+
+  /** Is this file relation one file of at most `maxBytes`? At most
+    * `spark.sql.files.openCostInBytes`, the floor of Spark's split
+    * size, Spark reads it as one split; at most
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`, AQE
+    * would coalesce a shuffle of it into one partition too, so the
+    * work above the scan loses no parallelism by staying in its task.
+    * (Above that, on 4 cores, a 2.7 MB one-file table ran distinct
+    * aggregates up to 1.6x slower in one task than over AQE's
+    * partitions.) */
+  private def oneTask(l: LogicalRelation, maxBytes: Long): Boolean =
+    l.relation match {
+      case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        val files = index.allFiles()
+        files.size == 1 && files.head.getLen <= maxBytes
+      case _ => false
+    }
 
   /** Is there a top-level plain JOIN — keyword or comma-list — between
     * the nearest preceding FROM and the ASOF/ANY token at `hit`?
