@@ -191,8 +191,7 @@ final class GraftCatalog(
       includeDetailedColumns: Boolean = true): TablePage = {
     requireDatabase(database)
     // an empty page's token would resume where it stands, forever
-    if (pageSize < 1)
-      throw new IllegalArgumentException(s"page_size must be at least 1, got $pageSize")
+    if (pageSize < 1) throw GraftCatalog.badPageSize(pageSize.toString)
     if (tokenTtlSec.isDefined)
       return cachedListTables(database, like, notLike, pageToken,
         pageSize, includeDetailedColumns)
@@ -381,6 +380,16 @@ final class GraftCatalog(
 }
 
 object GraftCatalog {
+
+  /** A `page_size` as a client sent it (query string or JSON): a whole
+    * number, which [[GraftCatalog.listTables]] then requires to be at
+    * least 1. Anything else (`abc`, `2.7`) is refused, never rounded
+    * or defaulted. */
+  def pageSize(raw: String): Int =
+    raw.trim.toIntOption.getOrElse(throw badPageSize(raw))
+
+  private def badPageSize(raw: String) =
+    new IllegalArgumentException(s"page_size must be at least 1, got $raw")
 
   /** One TTL-mode token: the snapshot list it pages over, the offset
     * it resumes at, and the (db, filters, detail) state a replay must

@@ -4822,13 +4822,14 @@ object CHFunctions {
     // r18 ADVICE asked for: a foldable-leaf draw could be DUPLICATED
     // by optimizer rules that run before ConstantFolding
     // (PushDownPredicates inlining an alias into a filter), and each
-    // copy then folded to a different value within one query. A
-    // re-planned statement redraws (CH redraws per query); a cached
-    // DataFrame re-executed replays its literal — documented.
+    // copy then folded to a different value within one query. So each
+    // planning redraws (CH redraws per query), and the literal carries
+    // [[perPlanningTag]]: QueryExecutor never reuses a plan holding
+    // one, where a re-execution would replay the draw.
     "randConstant" -> (_ => {
-      val e: Expression = Literal(
+      val e: Expression = perPlanning(Literal(
         java.util.concurrent.ThreadLocalRandom.current().nextLong()
-          & 0xFFFFFFFFL, LongType)
+          & 0xFFFFFFFFL, LongType))
       e.setTagValue(chDeclaredTypeTag, "UInt32")
       e
     }),
@@ -5555,17 +5556,19 @@ object CHFunctions {
 
     // ---- round-13 wave 4 (probe-driven) ----
     // environment/diagnostic names a CH user pastes for sanity checks
-    "uptime" -> (_ => Literal(
+    // (uptime, queryID and initialQueryID are read when the call site
+    // is analyzed, so they carry [[perPlanningTag]])
+    "uptime" -> (_ => perPlanning(Literal(
       (System.currentTimeMillis -
         java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getStartTime) / 1000)),
+          .getStartTime) / 1000))),
     "currentUser" -> (_ => fn("current_user")),
     // per-plan query id (CH returns the server-assigned id; one fresh
     // UUID per PLANNING matches its constant-within-query contract)
     "queryID" -> (_ =>
-      Literal(java.util.UUID.randomUUID().toString)),
+      perPlanning(Literal(java.util.UUID.randomUUID().toString))),
     "initialQueryID" -> (_ =>
-      Literal(java.util.UUID.randomUUID().toString)),
+      perPlanning(Literal(java.util.UUID.randomUUID().toString))),
     // block-position introspection: partition-packed global row ids /
     // the partition id — the Spark reading of CH's block coordinates
     "rowNumberInAllBlocks" -> (_ => MonotonicallyIncreasingID()),
@@ -6234,6 +6237,20 @@ object CHFunctions {
   private[graft] val chDeclaredTypeTag =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[String](
       "graft.chDeclaredType")
+
+  /** Marks a literal whose value a builder drew from a random source
+    * or the clock when its call site was analyzed (`randConstant`,
+    * `uptime`, `queryID`, `initialQueryID`): the value is right for
+    * one planning only, so a plan holding one is never re-executed
+    * for a later statement (QueryExecutor's plan reuse reads it as a
+    * clock read). */
+  private[graft] val perPlanningTag =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.perPlanning")
+
+  private def perPlanning(e: Expression): Expression = {
+    e.setTagValue(perPlanningTag, ())
+    e
+  }
 
   private[graft] val declaredConversionTypes: Map[String, String] = {
     val bases = Seq("Int8", "Int16", "Int32", "Int64", "Int128", "Int256",

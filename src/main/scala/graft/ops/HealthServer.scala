@@ -205,7 +205,7 @@ object HealthServer {
             like = patterns(p, "like"),
             notLike = patterns(p, "not_like"),
             pageToken = p.get("page_token"),
-            pageSize = p.get("page_size").map(_.toInt).getOrElse(50),
+            pageSize = p.get("page_size").map(GraftCatalog.pageSize).getOrElse(50),
             includeDetailedColumns =
               p.get("include_detailed_columns").forall(_ == "true"))
           respond(exchange, 200, Json.tablesPage(page), json = true)

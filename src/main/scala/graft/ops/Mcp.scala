@@ -330,7 +330,8 @@ object Mcp {
                 notLike = patterns(args, "not_like"),
                 pageToken = Option(args.get("page_token")).filter(!_.isNull)
                   .map(_.asText()),
-                pageSize = Option(args.get("page_size")).map(_.asInt(50))
+                pageSize = Option(args.get("page_size")).filter(!_.isNull)
+                  .map(n => GraftCatalog.pageSize(if (n.isTextual) n.asText else n.toString))
                   .getOrElse(50),
                 includeDetailedColumns =
                   Option(args.get("include_detailed_columns"))

@@ -80,7 +80,7 @@ private[sql] final class Binding private (val spark: SparkSession,
 private[sql] object Binding {
 
   /** The ops tables [[QueryLog.refresh]] rebuilds from live state. */
-  private val Live = Set("system_processes", "system_query_log",
+  private[sql] val Live = Set("system_processes", "system_query_log",
     "system_metrics")
 
   private val counter = new AtomicLong()

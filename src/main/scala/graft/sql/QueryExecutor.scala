@@ -265,7 +265,8 @@ object QueryResult {
   * underlying Spark jobs — not just the client wait — so a runaway
   * query releases cluster resources. A query runs on the caller's
   * thread, whose pool bounds concurrency; this class owns one thread,
-  * the deadline scheduler. */
+  * the deadline scheduler, and the plans of the statements it may
+  * answer again without planning them ([[PlanCache]]). */
 final class QueryExecutor(
     spark: SparkSession,
     timeoutSec: Int = 30,
@@ -275,6 +276,11 @@ final class QueryExecutor(
 
   private val deadlines = Executors.newSingleThreadScheduledExecutor(
     r => { val t = new Thread(r, "graft-query-deadline"); t.setDaemon(true); t })
+
+  private val plans = new PlanCache
+
+  /** The statement texts whose plans [[run]] would reuse now. */
+  private[sql] def reusable: Seq[String] = plans.texts
 
   /** Plan a guarded SELECT; lazy — no jobs run until an action.
     * ClickHouse-surface shims (PREWHERE, trailing SETTINGS/FORMAT,
@@ -312,14 +318,18 @@ final class QueryExecutor(
 
   /** Run a guarded SELECT to completion with timeout + job cancellation.
     * One job tag and one deadline cover guard, planning and execution, so
-    * planning-time jobs (schema inference) are cancellable and counted in
-    * `read_rows`. Past the deadline the tag's jobs are cancelled every
-    * 100 ms until the call returns; the caller (an HTTP handler) is never
-    * interrupted, and an expired query fails at the next phase boundary.
+    * planning-time jobs (schema inference) are cancellable. Past the
+    * deadline the tag's jobs are cancelled every 100 ms until the call
+    * returns; the caller (an HTTP handler) is never interrupted, and an
+    * expired query fails at the next phase boundary.
     * The result is capped at [[maxRows]] (overridable per call): the cap
     * is pushed into the plan as a `LIMIT maxRows+1`, so Spark stops
     * producing past it — an unbounded `SELECT *` never materializes on
-    * the driver — and the one extra row only signals truncation. */
+    * the driver — and the one extra row only signals truncation.
+    * A statement this executor answered before, with the same cap and
+    * session confs, re-collects that run's executed plan under the new
+    * tag and deadline when [[PlanCache]] admitted it; its `read_rows`
+    * is the first run's. */
   def run(sql: String): QueryResult = run(sql, maxRows)
 
   def run(sql: String, capRows: Int): QueryResult = {
@@ -332,21 +342,29 @@ final class QueryExecutor(
       sc.cancelJobsWithTag(jobTag)
     }, timeoutSec * 1000L, 100L, TimeUnit.MILLISECONDS)
     // in flight before planning, so system.processes lists it (QueryLog)
-    QueryLog.installListener(spark)
     QueryLog.begin(jobTag, sql)
     sc.addJobTag(jobTag)
     var outcome = ""
     var rows = 0L
+    var read = 0L
     try {
-      val df = select(sql)
-      if (expired.get) throw timedOut
-      val collected = graft.plans.Bridge.collectValues(df.limit(capRows + 1))
+      val key = PlanCache.Key(sql, capRows, spark.sessionState.conf.getAllConfs)
+      val hit = plans.checkOut(key, spark.sessionState.catalog)
+      val entry = hit.getOrElse {
+        val df = select(sql)
+        if (expired.get) throw timedOut
+        PlanCache.Entry(df.limit(capRows + 1), df.columns.toSeq,
+          PlanCache.admit(spark, df), readRows = 0L)
+      }
+      val collected = graft.plans.Bridge.collectValues(entry.limited)
       // a FROM-less statement is evaluated on the driver, with no job
       // the deadline could cancel
       if (expired.get) throw timedOut
+      read = hit.fold(graft.plans.Bridge.scannedRows(entry.limited))(_.readRows)
+      if (entry.views.isDefined) plans.checkIn(key, entry.copy(readRows = read))
       rows = collected.length.min(capRows).toLong
       QueryResult(
-        df.columns.toSeq,
+        entry.columns,
         collected.take(capRows).toSeq,
         truncated = collected.length > capRows)
     } catch {
@@ -359,7 +377,7 @@ final class QueryExecutor(
     } finally {
       deadline.cancel(false)
       sc.removeJobTag(jobTag)
-      QueryLog.finish(jobTag, rows, outcome)
+      QueryLog.finish(jobTag, rows, read, outcome)
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement,
   LocalRelation, LogicalPlan, OneRowRelation, Repartition}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.internal.SQLConf
@@ -158,17 +159,18 @@ object QueryGuard {
   /** [[plan]] within statement `b`: hoisted fragments plan through
     * here too, sharing the statement's [[Binding]]. */
   private def planIn(b: Binding, sql: String)
-      : org.apache.spark.sql.DataFrame = {
-    tryExplain(b.spark, sql) match {
-      case Some(df) => return df
-      case None =>
+      : org.apache.spark.sql.DataFrame =
+    tryExplain(b.spark, sql).orElse(tryMetaStatement(b.spark, sql)) match {
+      case Some(df) =>
+        df.queryExecution.analyzed.setTagValue(Eager, ())
+        df
+      case None => restoreRenamedNames(planned(b, sql))
     }
-    tryMetaStatement(b.spark, sql) match {
-      case Some(df) => return df
-      case None =>
-    }
-    restoreRenamedNames(planned(b, sql))
-  }
+
+  /** Set on the analyzed root of an EXPLAIN, SHOW or EXISTS statement,
+    * whose answer was computed while it was planned: re-executing its
+    * plan would replay that answer. */
+  private[sql] val Eager = TreeNodeTag[Unit]("graft.eager")
 
   /** CH meta statements Spark cannot serve over temp-view mounts:
     * `SHOW CREATE TABLE t` (Spark refuses temp views; CH answers the

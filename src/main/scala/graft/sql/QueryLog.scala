@@ -41,53 +41,18 @@ object QueryLog {
   private val log = new java.util.ArrayDeque[Finished]()
   private val seq = new AtomicLong(0L)
 
-  // read_rows accounting: a SparkListener maps each job's stages back
-  // to the query tag QueryExecutor sets, then sums the stages'
-  // input-records metric — CH's query_log.read_rows over Spark's
-  // own bookkeeping. Driver-side maps, bounded by active stages.
-  private val stageTag = new ConcurrentHashMap[Int, String]()
-  private val readRows = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private val listenerInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  private final class ReadRowsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val tags = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.tags")))
-        .getOrElse("")
-      tags.split(",").find(_.startsWith("graft-query-")).foreach { tag =>
-        j.stageIds.foreach(sid => stageTag.put(sid, tag))
-      }
-    }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val tag = stageTag.remove(sc.stageInfo.stageId)
-      if (tag != null) {
-        val n = sc.stageInfo.taskMetrics.inputMetrics.recordsRead
-        if (n > 0) readRows
-          .computeIfAbsent(tag, _ => new java.util.concurrent.atomic.AtomicLong())
-          .addAndGet(n)
-      }
-    }
-  }
-
-  /** Idempotent per session; QueryExecutor installs on first use. */
-  def installListener(spark: SparkSession): Unit =
-    if (listenerInstalled.add(spark))
-      spark.sparkContext.addSparkListener(new ReadRowsListener)
-
   def begin(queryId: String, sql: String): Unit =
     running.put(queryId, (sql, System.currentTimeMillis()))
 
-  def finish(queryId: String, resultRows: Long, exception: String = ""): Unit = {
+  /** `readRows`: what the statement's scans read
+    * ([[graft.plans.Bridge.scannedRows]]). */
+  def finish(queryId: String, resultRows: Long, readRows: Long,
+      exception: String): Unit = {
     val started = Option(running.remove(queryId))
     val now = System.currentTimeMillis()
-    val read = Option(readRows.remove(queryId)).map(_.get()).getOrElse(0L)
     val entry = Finished(now, queryId,
       started.map(_._1).getOrElse(""), now - started.map(_._2).getOrElse(now),
-      resultRows, read, exception)
+      resultRows, readRows, exception)
     log.synchronized {
       log.addLast(entry)
       while (log.size > MaxLog) log.removeFirst()

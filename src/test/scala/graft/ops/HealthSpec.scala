@@ -587,15 +587,18 @@ class HealthSpec extends SparkSpec {
     val cat = new graft.catalog.GraftCatalog(spark, sf)
     val srv = HealthServer.start(spark, GraftConfig(Map.empty), None, Some(cat))
     try {
-      for (n <- Seq(0, -1)) {
+      // one rule on both: a whole number of at least 1; a non-integer
+      // is refused, never rounded down or defaulted to 50
+      for ((n, json) <- Seq("0" -> "0", "-1" -> "-1", "abc" -> "\"abc\"",
+          "2.7" -> "2.7")) {
         val (code, body) = httpGet(s"http://localhost:${srv.port}/tables?page_size=$n")
         assert(code == 400, body)
-        assert(body.contains("page_size must be at least 1"), body)
+        assert(body.contains(s"page_size must be at least 1, got $n"), body)
         val (_, res) = httpPost(s"http://localhost:${srv.port}/mcp",
           s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{
-             |"name":"list_tables","arguments":{"page_size":$n}}}""".stripMargin)
+             |"name":"list_tables","arguments":{"page_size":$json}}}""".stripMargin)
         assert(res.contains("\"isError\":true"), res)
-        assert(res.contains("page_size must be at least 1"), res)
+        assert(res.contains(s"page_size must be at least 1, got $n"), res)
       }
     } finally srv.close()
   }

@@ -1423,13 +1423,17 @@ class QueryExecutorSpec extends SparkSpec {
   }
 
   test("every row-returning corpus statement answers alike served, collected and unrewritten") {
-    // each answer three ways: QueryExecutor.run; Dataset.collect of the
-    // same frame; and the same analyzed plan without the one-split
-    // Repartition(1) nodes, which plans its exchanges as Spark would.
-    // Row order is compared where a single plan produced both answers.
+    // each answer four ways: QueryExecutor.run; the same text run again
+    // through the same executor, which reuses the first run's plan when
+    // PlanCache admitted it; Dataset.collect of a fresh frame; and the
+    // same analyzed plan without the one-split Repartition(1) nodes,
+    // which plans its exchanges as Spark would. Row order is compared
+    // where one plan shape produced both answers.
     // One statement's ORDER BY ... LIMIT cuts through a tie at this
     // scale (two groups of 111 orders compete for the third row), so
     // either plan's row is right; only its shape is compared.
+    // No statement pinned to its shape only (random, clock, EXPLAIN or
+    // live ops table) is ever admitted.
     val tieCut = Set("w30_group_by_all")
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.catalyst.plans.logical.Repartition
@@ -1449,17 +1453,22 @@ class QueryExecutorSpec extends SparkSpec {
     def unordered(r: QueryResult): (Seq[String], Seq[String]) =
       (r.columns, r.rows.map(row => QueryResult(r.columns, Seq(row)).toJson).sorted)
     var rewritten = 0
+    var reused = 0
     try {
       val differ = corpus.flatMap { st =>
         val (label, sql) = (st.get("label").asText, st.get("sql").asText)
         val exact = st.get("check").asText == "exact"
+        val served = ex.run(sql)
+        val admitted = ex.reusable.contains(sql)
+        if (admitted) reused += 1
+        val again = ex.run(sql)
         val df = ex.select(sql)
         val stripped = df.queryExecution.analyzed.transformUp {
           case Repartition(1, false, l: LogicalRelation) => l
         }
         if (stripped != df.queryExecution.analyzed) rewritten += 1
-        val answers = Seq(ex.run(sql), collect(df),
-          collect(graft.plans.Bridge.ofRows(spark, stripped)))
+        val answers = Seq(served, collect(df),
+          collect(graft.plans.Bridge.ofRows(spark, stripped)), again)
         def same(a: QueryResult, b: QueryResult, ordered: Boolean) =
           if (!exact || (!ordered && tieCut(label)))
             a.columns == b.columns && a.rows.size == b.rows.size
@@ -1467,11 +1476,14 @@ class QueryExecutorSpec extends SparkSpec {
           else unordered(a) == unordered(b)
         Seq(
           s"$label: run vs collect" -> same(answers(0), answers(1), ordered = true),
-          s"$label: run vs unrewritten plan" -> same(answers(0), answers(2), ordered = false))
+          s"$label: run vs unrewritten plan" -> same(answers(0), answers(2), ordered = false),
+          s"$label: second run vs collect" -> same(answers(3), answers(1), ordered = true),
+          s"$label: admitted, though pinned to its shape" -> (exact || !admitted))
           .collect { case (what, false) => what }
       }
       assert(differ.isEmpty, differ.mkString("\n"))
       assert(rewritten > 100, s"$rewritten statements read a one-split table")
+      assert(reused > 300, s"$reused statements reuse their plan")
     } finally ex.close()
   }
 
@@ -1513,4 +1525,118 @@ class QueryExecutorSpec extends SparkSpec {
       assert(jobs.isEmpty, jobs)
     } finally ex.close()
   }
+
+  test("per-planning literals redraw on every run, and no command, EXPLAIN, SHOW or EXISTS is reused") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      for (sql <- Seq("SELECT randConstant() AS r", "SELECT queryID() AS q",
+          "SELECT initialQueryID() AS q", "SELECT uptime() AS u")) {
+        val first = ex.run(sql)
+        if (sql.contains("uptime")) Thread.sleep(1100)
+        assert(ex.run(sql).rows != first.rows, sql)
+        assert(!ex.reusable.contains(sql), sql)
+      }
+      // statements answered while they are planned are not reused either
+      for (sql <- Seq("EXPLAIN SELECT count() FROM orders", "SHOW TABLES",
+          "SHOW CREATE TABLE orders", "DESCRIBE orders", "EXISTS orders")) {
+        ex.run(sql)
+        assert(!ex.reusable.contains(sql), sql)
+      }
+      assert(ex.reusable.isEmpty)
+    } finally ex.close()
+  }
+
+  test("a reused plan sees a re-registered view and a changed setting on the next call") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sql = "SELECT count() AS n, sum(o_totalprice) AS s FROM orders"
+    val bound = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(bound)
+    def tagged(body: => QueryResult): (QueryResult, Int) = {
+      val (out, jobs) = jobTags(body)
+      (out.toTry.get, jobs.count(_.exists(_.startsWith("graft-query-"))))
+    }
+    try {
+      val first = ex.run(sql)
+      assert(ex.reusable == Seq(sql))
+      assert(ex.run(sql) == first)
+      spark.range(0, 7).selectExpr("id AS o_orderkey", "CAST(id AS DOUBLE) AS o_totalprice")
+        .createOrReplaceTempView("orders")
+      assert(ex.run(sql).rows == Seq(Seq(7L, 21.0)))
+      graft.Tables(spark, sf, "orders").createOrReplaceTempView("orders")
+      assert(ex.run(sql) == first)
+      // orders is one small file: one job, and a hit reruns that job
+      assert(tagged(ex.run(sql)) == (first, 1))
+      // above the one-split bound the next call plans an exchange: an
+      // adaptive map stage and a result stage
+      spark.conf.set(bound, "1")
+      assert(tagged(ex.run(sql)) == (first, 2))
+      assert(ex.reusable.count(_ == sql) == 2)
+    } finally {
+      prev.fold(spark.conf.unset(bound))(spark.conf.set(bound, _))
+      graft.Tables(spark, sf, "orders").createOrReplaceTempView("orders")
+      ex.close()
+    }
+  }
+
+  test("four threads sending one text get the right rows") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val sql = "SELECT o_orderstatus, count() AS n, sum(o_totalprice) AS s " +
+      "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    try {
+      val want = ex.select(sql).collect().map(_.toSeq).toSeq
+      val runs = (1 to 40).map(_ => pool.submit(() => ex.run(sql)))
+      assert(runs.forall(_.get.rows == want))
+      assert(ex.reusable == Seq(sql))
+    } finally { pool.shutdown(); ex.close() }
+  }
+
+  test("a reused plan runs under its own job tag and still times out") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 2)
+    val sc = spark.sparkContext
+    val sql = "SELECT o_orderstatus, count() AS n FROM orders GROUP BY o_orderstatus"
+    val warm = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      // planned and compiled once, so the first run is well inside 2 s
+      warm.run(sql)
+      val first = ex.run(sql)
+      assert(ex.reusable == Seq(sql))
+      val (hit, jobs) = jobTags(ex.run(sql))
+      assert(hit.toTry.get == first)
+      val tags = jobs.map(_.filter(_.startsWith("graft-query-")))
+      assert(tags.size == 1 && tags.head.size == 1, jobs)
+      // a job of three 2 s waves over the 4 cores, started first: under
+      // FIFO scheduling its pending tasks take every freed core for 4 s,
+      // so the hit's job waits past its deadline
+      QueryExecutorSpec.blocked.set(0)
+      val blocker = new Thread(() => sc.parallelize(1 to 12, 12).foreach { _ =>
+        QueryExecutorSpec.blocked.incrementAndGet()
+        Thread.sleep(2000)
+      })
+      blocker.start()
+      val until = System.currentTimeMillis + 10000
+      while (QueryExecutorSpec.blocked.get == 0 && System.currentTimeMillis < until)
+        Thread.sleep(20)
+      assert(QueryExecutorSpec.blocked.get > 0)
+      val t0 = System.nanoTime
+      val (out, late) = jobTags(ex.run(sql))
+      val ms = (System.nanoTime - t0) / 1000000
+      assert(out.left.toOption.exists(_.isInstanceOf[TimeoutException]), s"$ms ms: $out")
+      assert(out.left.toOption.get.getMessage == "Query timed out after 2 seconds")
+      assert(late.count(_.exists(_.startsWith("graft-query-"))) == 1, late)
+      // a failed hit is dropped, not put back
+      assert(ex.reusable.isEmpty)
+      blocker.join()
+      assert(ex.run(sql) == first)
+    } finally { ex.close(); warm.close() }
+  }
+}
+
+object QueryExecutorSpec {
+  /** Tasks of the spec's core-occupying job that have started. */
+  val blocked = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -64,6 +64,29 @@ class QueryLogSpec extends SparkSpec {
     assert(n >= direct, s"read_rows $n < table rows $direct")
   }
 
+  test("read_rows is the table's row count on every run, a reused plan's too") {
+    TableEnv.register(spark, sf)
+    val table = spark.table("orders").count()
+    val sql = "SELECT sum(o_totalprice) AS read_rows_probe FROM orders"
+    // 100 fresh plans, each from its own executor; then one executor
+    // twice, whose second run reuses the first run's plan
+    (1 to 100).foreach { _ =>
+      val e = new QueryExecutor(spark, timeoutSec = 60)
+      try e.run(sql) finally e.close()
+    }
+    val e = ex
+    e.run(sql)
+    e.run(sql)
+    assert(e.reusable == Seq(sql))
+    val read = e.run(
+      s"""SELECT read_rows, exception FROM system.query_log
+         |WHERE query = '$sql'""".stripMargin).rows
+    assert(read.size == 102)
+    assert(read.forall(_ == Seq(table, "")), read.distinct)
+    val procs = e.run("SELECT query FROM system.processes")
+    assert(!procs.rows.exists(_.head == sql), procs.rows)
+  }
+
   test("TotalQueries grows monotonically across served statements") {
     val e = ex
     def total(): Long = e.run(
