@@ -420,18 +420,36 @@ object GraftCatalog {
   private[catalog] final case class Part(
       file: FileStatus, rows: Long, uncompressed: Long, rowGroups: Long)
 
+  /** The most footers [[part]] keeps: a [[Part]] and its key take a
+    * few hundred bytes, so 4096 files hold about 1 MB; a catalog of more
+    * files re-reads its least recently listed footers. */
+  private val FooterCapacity = 4096
+
+  private val footers = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[FileKey, Part](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[FileKey, Part]): Boolean =
+        size() > FooterCapacity
+    })
+
   /** A footer read only — no data pages touched and no Spark job, so a
     * catalog page over many tables costs one metadata read per file
-    * rather than one count job per table. */
+    * rather than one count job per table; and that read happens once
+    * per file fingerprint ([[FileKey]]), so a rewritten file is read
+    * again on the next listing. */
   private[catalog] def part(
       st: FileStatus,
       conf: org.apache.hadoop.conf.Configuration): Part = {
     import scala.jdk.CollectionConverters._
-    graft.sources.Sink.withFooter(st, conf) { reader =>
-      val blocks = reader.getRowGroups.asScala
-      Part(st, blocks.map(_.getRowCount).sum,
-        blocks.map(_.getColumns.asScala.map(_.getTotalUncompressedSize).sum).sum,
-        blocks.size)
+    val key = FileKey(st)
+    Option(footers.get(key)).getOrElse {
+      val read = graft.sources.Sink.withFooter(st, conf) { reader =>
+        val blocks = reader.getRowGroups.asScala
+        Part(st, blocks.map(_.getRowCount).sum,
+          blocks.map(_.getColumns.asScala.map(_.getTotalUncompressedSize).sum).sum,
+          blocks.size)
+      }
+      footers.put(key, read)
+      read
     }
   }
 

@@ -265,8 +265,8 @@ object QueryResult {
   * underlying Spark jobs — not just the client wait — so a runaway
   * query releases cluster resources. A query runs on the caller's
   * thread, whose pool bounds concurrency; this class owns one thread,
-  * the deadline scheduler, and the plans of the statements it may
-  * answer again without planning them ([[PlanCache]]). */
+  * the deadline scheduler, and the plans and results of the statements
+  * it may answer again without planning them ([[PlanCache]]). */
 final class QueryExecutor(
     spark: SparkSession,
     timeoutSec: Int = 30,
@@ -281,6 +281,9 @@ final class QueryExecutor(
 
   /** The statement texts whose plans [[run]] would reuse now. */
   private[sql] def reusable: Seq[String] = plans.texts
+
+  /** The statement texts [[run]] holds a stored result for now. */
+  private[sql] def answered: Seq[String] = plans.answered
 
   /** Plan a guarded SELECT; lazy — no jobs run until an action.
     * ClickHouse-surface shims (PREWHERE, trailing SETTINGS/FORMAT,
@@ -327,9 +330,10 @@ final class QueryExecutor(
     * producing past it — an unbounded `SELECT *` never materializes on
     * the driver — and the one extra row only signals truncation.
     * A statement this executor answered before, with the same cap and
-    * session confs, re-collects that run's executed plan under the new
-    * tag and deadline when [[PlanCache]] admitted it; its `read_rows`
-    * is the first run's. */
+    * session confs, is answered from that run's stored result while the
+    * files it read are unchanged, or else re-collects that run's
+    * executed plan, when [[PlanCache]] admitted it; either way under the
+    * new tag and deadline, and its `read_rows` is the first run's. */
   def run(sql: String): QueryResult = run(sql, maxRows)
 
   def run(sql: String, capRows: Int): QueryResult = {
@@ -349,24 +353,38 @@ final class QueryExecutor(
     var read = 0L
     try {
       val key = PlanCache.Key(sql, capRows, spark.sessionState.conf.getAllConfs)
-      val hit = plans.checkOut(key, spark.sessionState.catalog)
+      val conf = sc.hadoopConfiguration
+      val hit = plans.checkOut(key, spark.sessionState.catalog, conf)
       val entry = hit.getOrElse {
         val df = select(sql)
         if (expired.get) throw timedOut
-        PlanCache.Entry(df.limit(capRows + 1), df.columns.toSeq,
-          PlanCache.admit(spark, df), readRows = 0L)
+        val reuse = PlanCache.admit(spark, df)
+        // fingerprinted before the run: a file rewritten while it runs
+        // no longer matches on the next call
+        PlanCache.Entry(df.limit(capRows + 1), df.columns.toSeq, reuse.map(_.views),
+          readRows = 0L, reuse.flatMap(_.paths).flatMap(PlanCache.fingerprint(_, conf)),
+          stored = None)
       }
-      val collected = graft.plans.Bridge.collectValues(entry.limited)
-      // a FROM-less statement is evaluated on the driver, with no job
-      // the deadline could cancel
-      if (expired.get) throw timedOut
-      read = hit.fold(graft.plans.Bridge.scannedRows(entry.limited))(_.readRows)
-      if (entry.views.isDefined) plans.checkIn(key, entry.copy(readRows = read))
-      rows = collected.length.min(capRows).toLong
-      QueryResult(
-        entry.columns,
-        collected.take(capRows).toSeq,
-        truncated = collected.length > capRows)
+      val result = entry.stored match {
+        case Some(s) =>
+          read = entry.readRows
+          s.result
+        case None =>
+          val collected = graft.plans.Bridge.collectValues(entry.limited)
+          // a FROM-less statement is evaluated on the driver, with no job
+          // the deadline could cancel
+          if (expired.get) throw timedOut
+          read = hit.fold(graft.plans.Bridge.scannedRows(entry.limited))(_.readRows)
+          val r = QueryResult(
+            entry.columns,
+            collected.take(capRows).toSeq,
+            truncated = collected.length > capRows)
+          if (entry.views.isDefined) plans.checkIn(key, entry.copy(readRows = read,
+            stored = if (entry.files.isDefined) PlanCache.store(r) else None))
+          r
+      }
+      rows = result.rows.length.toLong
+      result
     } catch {
       case e: Throwable =>
         // a job the deadline cancelled fails with Spark's own error

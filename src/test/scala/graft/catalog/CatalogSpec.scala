@@ -84,6 +84,31 @@ class CatalogSpec extends SparkSpec {
     assert(multi.listTables().totalTables == graft.Tables.all.size)
   }
 
+  test("a footer is read once per file fingerprint: a rewritten file lists its new count") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_db").toFile
+    val f = new java.io.File(tmp, "t.parquet")
+    def write(n: Int): Unit = {
+      val out = new java.io.File(tmp, "out")
+      spark.range(0, n).toDF("id").coalesce(1).write.mode("overwrite").parquet(out.getPath)
+      val part = out.listFiles.find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, f.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      org.apache.commons.io.FileUtils.deleteDirectory(out)
+    }
+    try {
+      write(5)
+      val mounted = new GraftCatalog(spark, sf, Map("fresh" -> tmp.getPath))
+      def rows = mounted.listTables(database = "fresh").tables.map(t => (t.name, t.totalRows))
+      assert(rows == Seq("t" -> 5L))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val st = new org.apache.hadoop.fs.Path(f.getPath)
+        .getFileSystem(conf).getFileStatus(new org.apache.hadoop.fs.Path(f.getPath))
+      assert(GraftCatalog.part(st, conf) eq GraftCatalog.part(st, conf))
+      write(5000)
+      assert(rows == Seq("t" -> 5000L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
   test("column comments and defaults surface through describe") {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

@@ -1423,12 +1423,13 @@ class QueryExecutorSpec extends SparkSpec {
   }
 
   test("every row-returning corpus statement answers alike served, collected and unrewritten") {
-    // each answer four ways: QueryExecutor.run; the same text run again
-    // through the same executor, which reuses the first run's plan when
-    // PlanCache admitted it; Dataset.collect of a fresh frame; and the
-    // same analyzed plan without the one-split Repartition(1) nodes,
-    // which plans its exchanges as Spark would. Row order is compared
-    // where one plan shape produced both answers.
+    // each answer five ways: QueryExecutor.run; the same text run twice
+    // more through the same executor, which answers from the first
+    // run's stored result, or reuses its plan, when PlanCache admitted
+    // it; Dataset.collect of a fresh frame; and the same analyzed plan
+    // without the one-split Repartition(1) nodes, which plans its
+    // exchanges as Spark would. Row order is compared where one plan
+    // shape produced both answers.
     // One statement's ORDER BY ... LIMIT cuts through a tie at this
     // scale (two groups of 111 orders compete for the third row), so
     // either plan's row is right; only its shape is compared.
@@ -1454,6 +1455,7 @@ class QueryExecutorSpec extends SparkSpec {
       (r.columns, r.rows.map(row => QueryResult(r.columns, Seq(row)).toJson).sorted)
     var rewritten = 0
     var reused = 0
+    var answered = 0
     try {
       val differ = corpus.flatMap { st =>
         val (label, sql) = (st.get("label").asText, st.get("sql").asText)
@@ -1462,13 +1464,15 @@ class QueryExecutorSpec extends SparkSpec {
         val admitted = ex.reusable.contains(sql)
         if (admitted) reused += 1
         val again = ex.run(sql)
+        if (ex.answered.contains(sql)) answered += 1
+        val third = ex.run(sql)
         val df = ex.select(sql)
         val stripped = df.queryExecution.analyzed.transformUp {
           case Repartition(1, false, l: LogicalRelation) => l
         }
         if (stripped != df.queryExecution.analyzed) rewritten += 1
         val answers = Seq(served, collect(df),
-          collect(graft.plans.Bridge.ofRows(spark, stripped)), again)
+          collect(graft.plans.Bridge.ofRows(spark, stripped)), again, third)
         def same(a: QueryResult, b: QueryResult, ordered: Boolean) =
           if (!exact || (!ordered && tieCut(label)))
             a.columns == b.columns && a.rows.size == b.rows.size
@@ -1478,12 +1482,14 @@ class QueryExecutorSpec extends SparkSpec {
           s"$label: run vs collect" -> same(answers(0), answers(1), ordered = true),
           s"$label: run vs unrewritten plan" -> same(answers(0), answers(2), ordered = false),
           s"$label: second run vs collect" -> same(answers(3), answers(1), ordered = true),
+          s"$label: third run vs collect" -> same(answers(4), answers(1), ordered = true),
           s"$label: admitted, though pinned to its shape" -> (exact || !admitted))
           .collect { case (what, false) => what }
       }
       assert(differ.isEmpty, differ.mkString("\n"))
       assert(rewritten > 100, s"$rewritten statements read a one-split table")
       assert(reused > 300, s"$reused statements reuse their plan")
+      assert(answered > 300, s"$answered statements answer from a stored result")
     } finally ex.close()
   }
 
@@ -1566,8 +1572,8 @@ class QueryExecutorSpec extends SparkSpec {
       assert(ex.run(sql).rows == Seq(Seq(7L, 21.0)))
       graft.Tables(spark, sf, "orders").createOrReplaceTempView("orders")
       assert(ex.run(sql) == first)
-      // orders is one small file: one job, and a hit reruns that job
-      assert(tagged(ex.run(sql)) == (first, 1))
+      // a hit answers from the stored result: no job
+      assert(tagged(ex.run(sql)) == (first, 0))
       // above the one-split bound the next call plans an exchange: an
       // adaptive map stage and a result stage
       spark.conf.set(bound, "1")
@@ -1598,7 +1604,11 @@ class QueryExecutorSpec extends SparkSpec {
     TableEnv.register(spark, sf)
     val ex = new QueryExecutor(spark, timeoutSec = 2)
     val sc = spark.sparkContext
-    val sql = "SELECT o_orderstatus, count() AS n FROM orders GROUP BY o_orderstatus"
+    // a view over an RDD: no fingerprint sees its input, so no result
+    // is stored and a hit re-runs the plan
+    val orders = spark.table("orders")
+    spark.createDataFrame(orders.rdd, orders.schema).createOrReplaceTempView("orders_rdd")
+    val sql = "SELECT o_orderstatus, count() AS n FROM orders_rdd GROUP BY o_orderstatus"
     val warm = new QueryExecutor(spark, timeoutSec = 60)
     try {
       // planned and compiled once, so the first run is well inside 2 s
@@ -1632,7 +1642,125 @@ class QueryExecutorSpec extends SparkSpec {
       assert(ex.reusable.isEmpty)
       blocker.join()
       assert(ex.run(sql) == first)
-    } finally { ex.close(); warm.close() }
+      assert(ex.answered.isEmpty)
+    } finally { ex.close(); warm.close(); spark.catalog.dropTempView("orders_rdd") }
+  }
+
+  /** Write `df` as the one parquet file `f`, replacing it. */
+  private def writeFile(df: org.apache.spark.sql.DataFrame, f: java.io.File): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("graft_write").toFile
+    df.coalesce(1).write.mode("overwrite").parquet(s"$out/o")
+    val part = new java.io.File(out, "o").listFiles.find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, f.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    org.apache.commons.io.FileUtils.deleteDirectory(out)
+  }
+
+  /** Rows 0 until `n` of (k = id % 3, v = id). */
+  private def rows(n: Int) = spark.range(0, n).selectExpr("id % 3 AS k", "id AS v")
+
+  test("a stored result answers with no job and no compile until a file it read changes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stored").toFile
+    val (a, b) = (new java.io.File(dir, "a.parquet"), new java.io.File(dir, "b.parquet"))
+    writeFile(rows(5), a)
+    writeFile(rows(4), b)
+    // two files: the aggregate keeps its exchange, so a re-run plan
+    // would read its map stage's output from the first run
+    spark.read.parquet(dir.getPath).createOrReplaceTempView("stored_t")
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sql = "SELECT k, count() AS n, sum(v) AS s FROM stored_t GROUP BY k ORDER BY k"
+    def fresh = ex.select(sql).collect().map(_.toSeq).toSeq
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    try {
+      assert(exchanges(ex.select(sql)).nonEmpty)
+      val first = ex.run(sql)
+      assert(first.rows == fresh)
+      assert(ex.answered == Seq(sql))
+      val (out, jobs) = jobTags {
+        val before = compiles.getCount
+        (ex.run(sql), compiles.getCount - before)
+      }
+      assert(out.toTry.get == (first, 0))
+      assert(!jobs.exists(_.exists(_.startsWith("graft-query-"))), jobs)
+      writeFile(rows(7), a)
+      val rewritten = ex.run(sql)
+      assert(rewritten.rows == fresh)
+      assert(rewritten.rows == Seq(Seq(0L, 5L, 12L), Seq(1L, 3L, 6L), Seq(2L, 3L, 9L)))
+      assert(ex.answered == Seq(sql))
+      assert(a.delete())
+      val want = intercept[Exception](fresh).getMessage
+      assert(want.contains("FILE_NOT_EXIST"), want)
+      assert(intercept[Exception](ex.run(sql)).getMessage == want)
+      assert(ex.reusable.isEmpty)
+    } finally {
+      ex.close(); spark.catalog.dropTempView("stored_t")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
+  test("a file read only through a subquery is fingerprinted") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stored").toFile
+    val f = new java.io.File(dir, "t.parquet")
+    writeFile(rows(5), f)
+    spark.read.parquet(f.getPath).createOrReplaceTempView("stored_sub")
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sql = "SELECT (SELECT sum(v) FROM stored_sub) AS s, 1 AS one"
+    try {
+      // Dataset.inputFiles does not look inside subquery expressions
+      assert(ex.select(sql).inputFiles.isEmpty)
+      assert(ex.run(sql).rows == Seq(Seq(10L, 1)))
+      assert(ex.answered == Seq(sql))
+      writeFile(rows(7), f)
+      assert(ex.run(sql).rows == Seq(Seq(21L, 1)))
+    } finally {
+      ex.close(); spark.catalog.dropTempView("stored_sub")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
+  test("after one warm send, four threads sending one text start no job") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val sql = "SELECT o_orderpriority, count() AS n, max(o_totalprice) AS m " +
+      "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"
+    try {
+      val want = ex.run(sql)
+      val (out, jobs) = jobTags(
+        (1 to 4 * 40).map(_ => pool.submit(() => ex.run(sql))).map(_.get))
+      assert(out.toTry.get.forall(_ == want))
+      assert(!jobs.exists(_.exists(_.startsWith("graft-query-"))), jobs)
+      assert(ex.answered == Seq(sql))
+    } finally { pool.shutdown(); ex.close() }
+  }
+
+  test("a result above the entry bound is not stored: its repeat runs a job") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sql = "SELECT * FROM lineitem"
+    try {
+      val first = ex.run(sql)
+      assert(org.apache.spark.util.SizeEstimator.estimate(first) > PlanCache.MaxEntryBytes)
+      assert(ex.reusable == Seq(sql) && ex.answered.isEmpty)
+      val (out, jobs) = jobTags(ex.run(sql))
+      assert(out.toTry.get == first)
+      assert(jobs.count(_.exists(_.startsWith("graft-query-"))) == 1, jobs)
+    } finally ex.close()
+  }
+
+  test("live ops tables, random and clock reads are never answered from a stored result") {
+    TableEnv.register(spark, sf)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      for (sql <- Seq("SELECT count() AS n FROM system.processes",
+          "SELECT rand() AS r FROM orders LIMIT 3", "SELECT now() AS t")) {
+        val first = ex.run(sql)
+        if (sql.contains("now")) Thread.sleep(5)
+        val again = ex.run(sql)
+        if (!sql.contains("processes")) assert(again.rows != first.rows, sql)
+        assert(!ex.reusable.contains(sql) && !ex.answered.contains(sql), sql)
+      }
+    } finally ex.close()
   }
 }
 
