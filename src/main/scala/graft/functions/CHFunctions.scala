@@ -5992,7 +5992,7 @@ object CHFunctions {
     }),
 
     // ---- probe-driven round-11 additions (each of these is a form a
-    // CH user pastes verbatim; found by tools/Probe.scala) ----
+    // CH user pastes verbatim; pinned in perfbench/corpus.json) ----
 
     // bare argMax/argMin (the *CH aliases predate the discovery that
     // Spark 4 has no builtin under either name)

@@ -265,8 +265,8 @@ object QueryResult {
   * underlying Spark jobs — not just the client wait — so a runaway
   * query releases cluster resources. A query runs on the caller's
   * thread, whose pool bounds concurrency; this class owns one thread,
-  * the deadline scheduler, and the plans and results of the statements
-  * it may answer again without planning them ([[PlanCache]]). */
+  * the deadline scheduler, and the results of the statements it may
+  * answer again without planning them ([[ResultCache]]). */
 final class QueryExecutor(
     spark: SparkSession,
     timeoutSec: Int = 30,
@@ -277,13 +277,10 @@ final class QueryExecutor(
   private val deadlines = Executors.newSingleThreadScheduledExecutor(
     r => { val t = new Thread(r, "graft-query-deadline"); t.setDaemon(true); t })
 
-  private val plans = new PlanCache
-
-  /** The statement texts whose plans [[run]] would reuse now. */
-  private[sql] def reusable: Seq[String] = plans.texts
+  private val results = new ResultCache
 
   /** The statement texts [[run]] holds a stored result for now. */
-  private[sql] def answered: Seq[String] = plans.answered
+  private[sql] def answered: Seq[String] = results.answered
 
   /** Plan a guarded SELECT; lazy — no jobs run until an action.
     * ClickHouse-surface shims (PREWHERE, trailing SETTINGS/FORMAT,
@@ -331,9 +328,11 @@ final class QueryExecutor(
     * the driver — and the one extra row only signals truncation.
     * A statement this executor answered before, with the same cap and
     * session confs, is answered from that run's stored result while the
-    * files it read are unchanged, or else re-collects that run's
-    * executed plan, when [[PlanCache]] admitted it; either way under the
-    * new tag and deadline, and its `read_rows` is the first run's. */
+    * temp views and files it read are unchanged, when [[ResultCache]]
+    * admitted it, under the new tag and with that run's `read_rows`;
+    * any other is planned afresh. A fresh plan over a file index that
+    * lists a file since rewritten in place refreshes the index and is
+    * planned once more, so it reads the file's new length. */
   def run(sql: String): QueryResult = run(sql, maxRows)
 
   def run(sql: String, capRows: Int): QueryResult = {
@@ -352,35 +351,32 @@ final class QueryExecutor(
     var rows = 0L
     var read = 0L
     try {
-      val key = PlanCache.Key(sql, capRows, spark.sessionState.conf.getAllConfs)
+      val key = ResultCache.Key(sql, capRows, spark.sessionState.conf.getAllConfs)
       val conf = sc.hadoopConfiguration
-      val hit = plans.checkOut(key, spark.sessionState.catalog, conf)
-      val entry = hit.getOrElse {
-        val df = select(sql)
-        if (expired.get) throw timedOut
-        val reuse = PlanCache.admit(spark, df)
-        // fingerprinted before the run: a file rewritten while it runs
-        // no longer matches on the next call
-        PlanCache.Entry(df.limit(capRows + 1), df.columns.toSeq, reuse.map(_.views),
-          readRows = 0L, reuse.flatMap(_.paths).flatMap(PlanCache.fingerprint(_, conf)),
-          stored = None)
-      }
-      val result = entry.stored match {
-        case Some(s) =>
-          read = entry.readRows
-          s.result
+      val result = results.get(key, spark.sessionState.catalog, conf) match {
+        case Some(hit) =>
+          read = hit.readRows
+          hit.result
         case None =>
-          val collected = graft.plans.Bridge.collectValues(entry.limited)
+          val planned = select(sql)
+          val stale = ResultCache.stale(planned, conf)
+          stale.foreach(_.refresh())
+          val df = if (stale.isEmpty) planned else select(sql)
+          if (expired.get) throw timedOut
+          // fingerprinted before the run: a file rewritten while it runs
+          // no longer matches on the next call
+          val reuse = ResultCache.admit(spark, df, conf)
+          val limited = df.limit(capRows + 1)
+          val collected = graft.plans.Bridge.collectValues(limited)
           // a FROM-less statement is evaluated on the driver, with no job
           // the deadline could cancel
           if (expired.get) throw timedOut
-          read = hit.fold(graft.plans.Bridge.scannedRows(entry.limited))(_.readRows)
+          read = graft.plans.Bridge.scannedRows(limited)
           val r = QueryResult(
-            entry.columns,
+            df.columns.toSeq,
             collected.take(capRows).toSeq,
             truncated = collected.length > capRows)
-          if (entry.views.isDefined) plans.checkIn(key, entry.copy(readRows = read,
-            stored = if (entry.files.isDefined) PlanCache.store(r) else None))
+          reuse.flatMap(ResultCache.entry(r, read, _)).foreach(results.put(key, _))
           r
       }
       rows = result.rows.length.toLong

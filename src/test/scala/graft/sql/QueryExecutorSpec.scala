@@ -1425,8 +1425,8 @@ class QueryExecutorSpec extends SparkSpec {
   test("every row-returning corpus statement answers alike served, collected and unrewritten") {
     // each answer five ways: QueryExecutor.run; the same text run twice
     // more through the same executor, which answers from the first
-    // run's stored result, or reuses its plan, when PlanCache admitted
-    // it; Dataset.collect of a fresh frame; and the same analyzed plan
+    // run's stored result when ResultCache admitted it, or plans it
+    // afresh; Dataset.collect of a fresh frame; and the same analyzed plan
     // without the one-split Repartition(1) nodes, which plans its
     // exchanges as Spark would. Row order is compared where one plan
     // shape produced both answers.
@@ -1434,7 +1434,7 @@ class QueryExecutorSpec extends SparkSpec {
     // scale (two groups of 111 orders compete for the third row), so
     // either plan's row is right; only its shape is compared.
     // No statement pinned to its shape only (random, clock, EXPLAIN or
-    // live ops table) is ever admitted.
+    // live ops table) is ever answered from a stored result.
     val tieCut = Set("w30_group_by_all")
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.catalyst.plans.logical.Repartition
@@ -1454,17 +1454,15 @@ class QueryExecutorSpec extends SparkSpec {
     def unordered(r: QueryResult): (Seq[String], Seq[String]) =
       (r.columns, r.rows.map(row => QueryResult(r.columns, Seq(row)).toJson).sorted)
     var rewritten = 0
-    var reused = 0
     var answered = 0
     try {
       val differ = corpus.flatMap { st =>
         val (label, sql) = (st.get("label").asText, st.get("sql").asText)
         val exact = st.get("check").asText == "exact"
         val served = ex.run(sql)
-        val admitted = ex.reusable.contains(sql)
-        if (admitted) reused += 1
+        val stored = ex.answered.contains(sql)
+        if (stored) answered += 1
         val again = ex.run(sql)
-        if (ex.answered.contains(sql)) answered += 1
         val third = ex.run(sql)
         val df = ex.select(sql)
         val stripped = df.queryExecution.analyzed.transformUp {
@@ -1483,13 +1481,39 @@ class QueryExecutorSpec extends SparkSpec {
           s"$label: run vs unrewritten plan" -> same(answers(0), answers(2), ordered = false),
           s"$label: second run vs collect" -> same(answers(3), answers(1), ordered = true),
           s"$label: third run vs collect" -> same(answers(4), answers(1), ordered = true),
-          s"$label: admitted, though pinned to its shape" -> (exact || !admitted))
+          s"$label: stored, though pinned to its shape" -> (exact || !stored))
           .collect { case (what, false) => what }
       }
       assert(differ.isEmpty, differ.mkString("\n"))
       assert(rewritten > 100, s"$rewritten statements read a one-split table")
-      assert(reused > 300, s"$reused statements reuse their plan")
       assert(answered > 300, s"$answered statements answer from a stored result")
+    } finally ex.close()
+  }
+
+  test("every refused or guided-error corpus statement fails with its pinned message") {
+    import scala.jdk.CollectionConverters._
+    TableEnv.register(spark, sf)
+    val corpus = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("perfbench/corpus.json"))
+      .get("statements").elements.asScala.toSeq
+      .filter(_.get("expect").asText != "rows")
+    assert(corpus.count(_.get("expect").asText == "refused") == 18)
+    assert(corpus.count(_.get("expect").asText == "error") == 2)
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    try {
+      val differ = corpus.flatMap { st =>
+        val (label, sql) = (st.get("label").asText, st.get("sql").asText)
+        val message = st.get("message").asText
+        // a refusal names the statement's kind after the pinned words
+        def pinned(m: String) =
+          if (st.get("expect").asText == "refused") m.startsWith(message)
+          else m.contains(message)
+        // sent twice: a failure is never stored
+        Seq(ex.runSafe(sql), ex.runSafe(sql))
+          .collect { case out if !out.left.exists(pinned) => s"$label: $out" }
+      }
+      assert(differ.isEmpty, differ.mkString("\n"))
+      assert(ex.answered.isEmpty)
     } finally ex.close()
   }
 
@@ -1541,15 +1565,15 @@ class QueryExecutorSpec extends SparkSpec {
         val first = ex.run(sql)
         if (sql.contains("uptime")) Thread.sleep(1100)
         assert(ex.run(sql).rows != first.rows, sql)
-        assert(!ex.reusable.contains(sql), sql)
+        assert(!ex.answered.contains(sql), sql)
       }
       // statements answered while they are planned are not reused either
       for (sql <- Seq("EXPLAIN SELECT count() FROM orders", "SHOW TABLES",
           "SHOW CREATE TABLE orders", "DESCRIBE orders", "EXISTS orders")) {
         ex.run(sql)
-        assert(!ex.reusable.contains(sql), sql)
+        assert(!ex.answered.contains(sql), sql)
       }
-      assert(ex.reusable.isEmpty)
+      assert(ex.answered.isEmpty)
     } finally ex.close()
   }
 
@@ -1565,7 +1589,7 @@ class QueryExecutorSpec extends SparkSpec {
     }
     try {
       val first = ex.run(sql)
-      assert(ex.reusable == Seq(sql))
+      assert(ex.answered == Seq(sql))
       assert(ex.run(sql) == first)
       spark.range(0, 7).selectExpr("id AS o_orderkey", "CAST(id AS DOUBLE) AS o_totalprice")
         .createOrReplaceTempView("orders")
@@ -1578,7 +1602,7 @@ class QueryExecutorSpec extends SparkSpec {
       // adaptive map stage and a result stage
       spark.conf.set(bound, "1")
       assert(tagged(ex.run(sql)) == (first, 2))
-      assert(ex.reusable.count(_ == sql) == 2)
+      assert(ex.answered.count(_ == sql) == 2)
     } finally {
       prev.fold(spark.conf.unset(bound))(spark.conf.set(bound, _))
       graft.Tables(spark, sf, "orders").createOrReplaceTempView("orders")
@@ -1596,54 +1620,31 @@ class QueryExecutorSpec extends SparkSpec {
       val want = ex.select(sql).collect().map(_.toSeq).toSeq
       val runs = (1 to 40).map(_ => pool.submit(() => ex.run(sql)))
       assert(runs.forall(_.get.rows == want))
-      assert(ex.reusable == Seq(sql))
+      assert(ex.answered == Seq(sql))
     } finally { pool.shutdown(); ex.close() }
   }
 
-  test("a reused plan runs under its own job tag and still times out") {
+  test("a view over an RDD is planned and tagged afresh on every call") {
     TableEnv.register(spark, sf)
-    val ex = new QueryExecutor(spark, timeoutSec = 2)
-    val sc = spark.sparkContext
-    // a view over an RDD: no fingerprint sees its input, so no result
-    // is stored and a hit re-runs the plan
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    // no fingerprint sees an RDD's input, so no result is stored
     val orders = spark.table("orders")
     spark.createDataFrame(orders.rdd, orders.schema).createOrReplaceTempView("orders_rdd")
-    val sql = "SELECT o_orderstatus, count() AS n FROM orders_rdd GROUP BY o_orderstatus"
-    val warm = new QueryExecutor(spark, timeoutSec = 60)
+    val sql = "SELECT o_orderstatus, count() AS n FROM orders_rdd " +
+      "GROUP BY o_orderstatus ORDER BY o_orderstatus"
     try {
-      // planned and compiled once, so the first run is well inside 2 s
-      warm.run(sql)
-      val first = ex.run(sql)
-      assert(ex.reusable == Seq(sql))
-      val (hit, jobs) = jobTags(ex.run(sql))
-      assert(hit.toTry.get == first)
-      val tags = jobs.map(_.filter(_.startsWith("graft-query-")))
-      assert(tags.size == 1 && tags.head.size == 1, jobs)
-      // a job of three 2 s waves over the 4 cores, started first: under
-      // FIFO scheduling its pending tasks take every freed core for 4 s,
-      // so the hit's job waits past its deadline
-      QueryExecutorSpec.blocked.set(0)
-      val blocker = new Thread(() => sc.parallelize(1 to 12, 12).foreach { _ =>
-        QueryExecutorSpec.blocked.incrementAndGet()
-        Thread.sleep(2000)
-      })
-      blocker.start()
-      val until = System.currentTimeMillis + 10000
-      while (QueryExecutorSpec.blocked.get == 0 && System.currentTimeMillis < until)
-        Thread.sleep(20)
-      assert(QueryExecutorSpec.blocked.get > 0)
-      val t0 = System.nanoTime
-      val (out, late) = jobTags(ex.run(sql))
-      val ms = (System.nanoTime - t0) / 1000000
-      assert(out.left.toOption.exists(_.isInstanceOf[TimeoutException]), s"$ms ms: $out")
-      assert(out.left.toOption.get.getMessage == "Query timed out after 2 seconds")
-      assert(late.count(_.exists(_.startsWith("graft-query-"))) == 1, late)
-      // a failed hit is dropped, not put back
-      assert(ex.reusable.isEmpty)
-      blocker.join()
-      assert(ex.run(sql) == first)
+      val want = ex.select(sql).collect().map(_.toSeq).toSeq
+      val calls = (1 to 3).map { _ =>
+        val (out, jobs) = jobTags(ex.run(sql))
+        assert(out.toTry.get.rows == want)
+        jobs.flatMap(_.filter(_.startsWith("graft-query-")))
+      }
+      // each call runs the whole plan, its exchange's map stage
+      // included, under one tag of its own
+      assert(calls.forall(tags => tags.size == calls.head.size && tags.distinct.size == 1), calls)
+      assert(calls.head.size >= 2 && calls.map(_.head).distinct.size == 3, calls)
       assert(ex.answered.isEmpty)
-    } finally { ex.close(); warm.close(); spark.catalog.dropTempView("orders_rdd") }
+    } finally { ex.close(); spark.catalog.dropTempView("orders_rdd") }
   }
 
   /** Write `df` as the one parquet file `f`, replacing it. */
@@ -1691,7 +1692,7 @@ class QueryExecutorSpec extends SparkSpec {
       val want = intercept[Exception](fresh).getMessage
       assert(want.contains("FILE_NOT_EXIST"), want)
       assert(intercept[Exception](ex.run(sql)).getMessage == want)
-      assert(ex.reusable.isEmpty)
+      assert(ex.answered.isEmpty)
     } finally {
       ex.close(); spark.catalog.dropTempView("stored_t")
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
@@ -1718,6 +1719,56 @@ class QueryExecutorSpec extends SparkSpec {
     }
   }
 
+  test("a view over a file rewritten in place with more rows reads all of them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stored").toFile
+    val f = new java.io.File(dir, "t.parquet")
+    writeFile(rows(5), f)
+    spark.read.parquet(f.getPath).createOrReplaceTempView("stored_grown")
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sql = "SELECT count() AS n, sum(v) AS s FROM stored_grown"
+    try {
+      assert(ex.run(sql).rows == Seq(Seq(5L, 10L)))
+      // the view's listing still holds the 5-row length: read with it,
+      // the one row group's midpoint lies past the end and no row is read
+      writeFile(rows(50000), f)
+      for (call <- 1 to 3)
+        assert(ex.run(sql).rows == Seq(Seq(50000L, 49999L * 50000 / 2)), s"call $call")
+      assert(ex.answered == Seq(sql))
+    } finally {
+      ex.close(); spark.catalog.dropTempView("stored_grown")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
+  test("a view over a JDBC table answers a row inserted since the last call") {
+    val url = "jdbc:derby:memory:graftjdbcview;create=true"
+    def update(sql: String): Unit = {
+      val conn = java.sql.DriverManager.getConnection(url)
+      try { val st = conn.createStatement(); st.execute(sql); st.close() }
+      finally conn.close()
+    }
+    update("CREATE TABLE view_t (g INT, v INT)")
+    update("INSERT INTO view_t VALUES " + (0 until 10).map(i => s"(${i % 3}, $i)").mkString(", "))
+    graft.sources.Jdbc.read(spark, url, "view_t").createOrReplaceTempView("jdbc_v")
+    val ex = new QueryExecutor(spark, timeoutSec = 60)
+    val sqls = Seq("SELECT g, count(*) AS n, sum(v) AS s FROM jdbc_v GROUP BY g ORDER BY g",
+      "SELECT count(*) AS n FROM jdbc_v")
+    def fresh(sql: String) = ex.select(sql).collect().map(_.toSeq).toSeq
+    try {
+      val before = sqls.map(ex.run(_).rows)
+      assert(before == sqls.map(fresh))
+      assert(before(1) == Seq(Seq(10L)))
+      update("INSERT INTO view_t VALUES (3, 10)")
+      val after = sqls.map(ex.run(_).rows)
+      assert(after == sqls.map(fresh))
+      assert(after(1) == Seq(Seq(11L)) && after(0).size == 4, after)
+      assert(ex.answered.isEmpty)
+    } finally {
+      ex.close(); spark.catalog.dropTempView("jdbc_v")
+      update("DROP TABLE view_t")
+    }
+  }
+
   test("after one warm send, four threads sending one text start no job") {
     TableEnv.register(spark, sf)
     val ex = new QueryExecutor(spark, timeoutSec = 60)
@@ -1740,8 +1791,8 @@ class QueryExecutorSpec extends SparkSpec {
     val sql = "SELECT * FROM lineitem"
     try {
       val first = ex.run(sql)
-      assert(org.apache.spark.util.SizeEstimator.estimate(first) > PlanCache.MaxEntryBytes)
-      assert(ex.reusable == Seq(sql) && ex.answered.isEmpty)
+      assert(org.apache.spark.util.SizeEstimator.estimate(first) > ResultCache.MaxEntryBytes)
+      assert(ex.answered.isEmpty)
       val (out, jobs) = jobTags(ex.run(sql))
       assert(out.toTry.get == first)
       assert(jobs.count(_.exists(_.startsWith("graft-query-"))) == 1, jobs)
@@ -1758,13 +1809,8 @@ class QueryExecutorSpec extends SparkSpec {
         if (sql.contains("now")) Thread.sleep(5)
         val again = ex.run(sql)
         if (!sql.contains("processes")) assert(again.rows != first.rows, sql)
-        assert(!ex.reusable.contains(sql) && !ex.answered.contains(sql), sql)
+        assert(!ex.answered.contains(sql), sql)
       }
     } finally ex.close()
   }
-}
-
-object QueryExecutorSpec {
-  /** Tasks of the spec's core-occupying job that have started. */
-  val blocked = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -69,7 +69,7 @@ class QueryLogSpec extends SparkSpec {
     val table = spark.table("orders").count()
     val sql = "SELECT sum(o_totalprice) AS read_rows_probe FROM orders"
     // 100 fresh plans, each from its own executor; then one executor
-    // twice, whose second run reuses the first run's plan
+    // twice, whose second run answers from the first run's stored result
     (1 to 100).foreach { _ =>
       val e = new QueryExecutor(spark, timeoutSec = 60)
       try e.run(sql) finally e.close()
@@ -77,7 +77,7 @@ class QueryLogSpec extends SparkSpec {
     val e = ex
     e.run(sql)
     e.run(sql)
-    assert(e.reusable == Seq(sql))
+    assert(e.answered == Seq(sql))
     val read = e.run(
       s"""SELECT read_rows, exception FROM system.query_log
          |WHERE query = '$sql'""".stripMargin).rows

@@ -18,7 +18,12 @@ median and quartiles, how many pairs the change won (ties count for
 neither side), the base's interquartile range, and whether the medians
 differ by more than that range: a gain holds when the change wins at
 least nine tenths of the pairs and the medians differ by more than the
-base's IQR. It also prints both sides' medians of perfbench's numeric
+base's IQR. Under each metric it prints the no-regression verdict against
+the metric's `bound` in BENCHMARK.json: `worse` when the change's median
+is worse than the base's by more than the bound (a fraction of the base's
+median), `within` when it is not, and `unresolved` when the base's IQR
+exceeds the bound of its median, unless every change run beats every base
+run. It also prints both sides' medians of perfbench's numeric
 notes (such as serve's `warmup_lap_s`), each side's failed-operation
 count and any failed correctness check. perfbench itself is run as it
 is.
@@ -74,7 +79,22 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def summary(workload, pairs, better):
+def verdict(base, change, direction, bound):
+    """worse, within or unresolved (see the module doc), with the change's
+    relative loss of median and the base's relative IQR."""
+    sign = 1 if direction == "higher" else -1
+    bq, cq = quartiles(base), quartiles(change)
+    scale = abs(bq[1]) or 1.0
+    loss = sign * (bq[1] - cq[1]) / scale
+    spread = (bq[2] - bq[0]) / scale
+    if spread > bound and not all(sign * (c - b) > 0 for c in change for b in base):
+        word = "unresolved"
+    else:
+        word = "worse" if loss > bound else "within"
+    return word, loss, spread
+
+
+def summary(workload, pairs, better, bounds):
     print(f"\n== {workload}: {len(pairs)} pairs; median (q1-q3)")
     for name, direction in better.items():
         if not all(name in p[s]["metrics"] for p in pairs for s in ("base", "change")):
@@ -90,6 +110,9 @@ def summary(workload, pairs, better):
               f"change {cq[1]:.2f} ({cq[0]:.2f}-{cq[2]:.2f}), "
               f"change wins {wins}/{len(pairs)}, median gap {gap:.2f} "
               f"{'>' if gap > iqr else '<='} base IQR {iqr:.2f}")
+        word, loss, spread = verdict(base, change, direction, bounds[name])
+        print(f"  {word}: change median {100 * abs(loss):.1f}% {'worse' if loss > 0 else 'better'}, "
+              f"bound {100 * bounds[name]:.0f}%, base IQR {100 * spread:.1f}% of its median")
     shared = set.intersection(*(set(p[s]["notes"]) for p in pairs for s in ("base", "change")))
     for name in sorted(shared):
         bq, cq = (quartiles([p[s]["notes"][name] for p in pairs]) for s in ("base", "change"))
@@ -120,7 +143,9 @@ def main():
         export(args.base, sides["base"])
         export(args.change, sides["change"])
         with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
-            better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+            end_to_end = json.load(f)["end_to_end"]
+        better = {m["name"]: m["better"] for m in end_to_end}
+        bounds = {m["name"]: m["bound"] for m in end_to_end}
         runs = {w: [] for w in workloads}
         for w in workloads:
             for i in range(args.pairs):
@@ -135,7 +160,7 @@ def main():
                     f"{pair['change']['metrics'].get(k, 0):.2f}" for k in better)
                 print(f"{w} seed {seed} ({order[0]} first): {shown}", flush=True)
         for w in workloads:
-            summary(w, runs[w], better)
+            summary(w, runs[w], better, bounds)
         if args.out:
             with open(args.out, "w") as f:
                 json.dump({"base": args.base, "change": args.change,
